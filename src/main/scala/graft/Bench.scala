@@ -1,27 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // r6 lesson: the host intermittently grants a fraction of the
     // advertised CPUs, inflating an unlucky single pass ~2× uniformly.
     // Per-query BEST-OF-N with the repeats interleaved (full pass 1, then
     // full pass 2) measures the engine, not the host: a contention spike
     // must cover BOTH widely-separated runs of a query to survive the min.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ~70 queries accumulate broadcast/shuffle state; default periodic
-      // GC (30 min) lets it pile into one multi-second stall that lands on
-      // an arbitrary query — clean incrementally instead
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -70,52 +58,39 @@ object Bench {
       tiny.select(exists(sequence(lit(1), lit(8)), i => i > 3)).collect()
     }
     try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // javax.imageio's first use scans the plugin registry (a multi-second
     // one-time cost) — warm it here so it doesn't land on whichever
     // mm_* query touches the real codec path first (local mode = one JVM,
     // so a driver-side round-trip warms the executor threads too)
     try graft.mm.Multimodal.decodeImage(
       graft.mm.Multimodal.encodeGrayPng(Array.tabulate(16)(identity), 4, 4))
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // deterministic name order: timings comparable across rounds, and a
     // slow query can't masquerade under whatever HashMap order puts after it
     val names = SparkEntry.queries.keys.toSeq.sorted
-    def runOnce(name: String): Double = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      // noop sink materializes every column (count() would let Catalyst
-      // prune the projections and under-report)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // per-query isolation: localCheckpoint frames persist MEMORY_AND_DISK
-      // blocks that outlive the query (nothing unpersists them), so a
-      // 200-query sweep accumulates gigabytes of dead blocks — eviction +
-      // GC pressure then lands on whichever query runs next (r4's 1.52×
-      // common-subset slowdown vs r3). Drop every persisted RDD and cached
-      // plan BETWEEN queries, outside the timed window, so each query is
-      // measured against a clean block manager like a fresh session.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      dt
-    }
-    val all = scala.collection.mutable.Map.empty[String, List[Double]]
+    // Runner.run isolates each query (r4's 1.52× common-subset slowdown
+    // vs r3 came from inherited dead checkpoint blocks), so each is
+    // measured against a clean block manager like a fresh session
+    val all = scala.collection.mutable.Map.empty[String, List[Either[String, Double]]]
     (1 to passes).foreach { _ =>
       names.foreach { n =>
-        all(n) = runOnce(n) :: all.getOrElse(n, Nil)
+        all(n) = Runner.run(spark, n, sfDir)(Runner.noop) :: all.getOrElse(n, Nil)
       }
     }
     val loadEnd = loadAvg()
-    val results = names.map(n => n -> all(n).min)
+    // a query that threw in any pass is not a fast query: it is listed
+    // with its error class and left out of the total, spreads and map
+    val failed = names.flatMap(n => all(n).collectFirst { case Left(e) => n -> e })
+    val times = names.filterNot(failed.toMap.contains)
+      .map(n => n -> all(n).collect { case Right(t) => t })
+    val results = times.map { case (n, ts) => n -> ts.min }
     // measured noise band (r12 judge process note: two gate-true runs
     // differed 15% with no code diff, and cross-round comparison had to
     // discount that by archaeology). Per-query spread across the
     // interleaved passes — median and p90 of max/min - 1 — ships in the
     // artifact so within-band deltas are mechanically discountable.
-    val spreads = names.map { n =>
-      val ts = all(n)
+    val spreads = times.map { case (_, ts) =>
       if (ts.min <= 0) 0.0 else ts.max / ts.min - 1.0
     }.sorted
     def pct(p: Double): Double =
@@ -136,18 +111,19 @@ object Bench {
     // stdout, which a 200-entry JSON line overflows (BENCH_r01/r02 both came
     // back parsed:null). Persist the complete map to a repo artifact and
     // prefix the stdout copy so it can't be mistaken for the metric line.
-    val spreadJson = names.map { n =>
-      val ts = all(n)
+    val spreadJson = times.map { case (n, ts) =>
       s"\"" + n + "\":[" + fmt(ts.min) + "," + fmt(ts.max) + "]"
     }.mkString("{", ",", "}")
+    val failedJson = failed.map { case (n, e) => s"\"$n\":\"$e\"" }
+      .mkString("{", ",", "}")
     val detail = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{\"metric\":\"total\",\"value\":" + fmt(total) +
         ",\"unit\":\"sec\"," + loadNote + ",\"queries\":{", ",",
-        s"""},"spread":$spreadJson,"sf":"$sfDir"}""")
+        s"""},"failed":$failedJson,"spread":$spreadJson,"sf":"$sfDir"}""")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       detail.getBytes("UTF-8"))
-    catch { case _: Throwable => }
+    catch { case NonFatal(e) => System.err.println(s"[bench] BENCH_DETAIL.json not written: $e") }
     println(s"BENCH_DETAIL $detail")
     // Final metric line: ONE bare-JSON line, sized to survive the 2000-char
     // tail window (sbt appends ~80 chars of "[success]" after us). Slowest
@@ -155,11 +131,12 @@ object Bench {
     // LIMIT (r13 PERF "phantom drops"): with 280 queries the full map
     // cannot fit one retained line — queries that get FAST fall off the
     // slowest-first list and read as "dropped". The COMPLETE map is always
-    // in BENCH_DETAIL.json (the "detail" pointer); r14 raises the budget
-    // to the measured retention window (1840 + sbt tail < 2000).
+    // in BENCH_DETAIL.json (the "detail" pointer). `budget` bounds the
+    // WHOLE line: 1750 + sbt's ~80-char tail stays inside the 2000-char
+    // retention window.
     val slowest = results.sortBy(-_._2)
     val budget = 1750
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadNote,"detail":"BENCH_DETAIL.json","queries":{"""
+    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},$loadNote,"detail":"BENCH_DETAIL.json","queries":{"""
     val tailStr = s"""},"sf":"$sfDir"}"""
     val sb = new StringBuilder(head)
     var first = true
@@ -172,5 +149,7 @@ object Bench {
     sb.append(tailStr)
     println(sb.toString)
     spark.stop()
+    // artifacts are written; a failed query still fails the run
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** Core count for graft's mains: `SPARK_GRAFT_CPUS`, default every
+    * processor the JVM sees.
+    */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

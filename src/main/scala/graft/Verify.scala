@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long (Tables.events
-      // converts back to a µs timestamp losslessly).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // incremental cleanup of broadcast/shuffle state across the 280-query
-      // sweep (same setting as Bench — default 30 min lets it pile up)
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     new java.io.File(outDir).mkdirs()
     // oracle_sql.json FIRST (r14): it is static data; writing it after the
     // sweep meant a mid-sweep death zeroed the whole round (r13).
@@ -43,24 +28,18 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // r14 gate fix (VERDICT r13 item 1): Bench clears persisted state
-      // between queries (Bench.scala) but Verify did not — a 280-query
-      // single-JVM sweep accumulates every query's localCheckpoint blocks,
-      // the repo's documented GCLocker-OOM recipe, and the driver's r13
-      // Verify died mid-sweep leaving CORRECTNESS_r13 empty. Same cleanup,
-      // outside any timed window (Verify is untimed).
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
+    // Runner.run isolates each query: without it a 280-query single-JVM
+    // sweep accumulates every query's localCheckpoint blocks (the r13
+    // Verify died mid-sweep of GCLocker OOMs, leaving CORRECTNESS_r13 empty)
+    val failed = SparkEntry.queries.keys.toSeq
+      .filter(name => only.forall(_.contains(name)))
+      .filter(name => Runner.run(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")).isLeft)
     spark.stop()
+    // every other query's output is written; a failed one still fails the run
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

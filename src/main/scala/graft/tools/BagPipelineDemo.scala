@@ -1,10 +1,10 @@
 package graft.tools
 
+import graft.Sessions
 import graft.core.archive.Tar
 import graft.core.io.TextTables
 import graft.ops.drisip.{CsvRender, DriSip}
 import graft.ops.validate.BagitValidate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executable end-to-end demo of the reference pipeline slice (SURVEY §3.2):
@@ -21,11 +21,7 @@ object BagPipelineDemo {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Runner
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the persisted index lifecycle (IvfIndex / PqIndex):
@@ -20,16 +20,7 @@ object IndexProbe {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_scale_probe"
     val k = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
 
     val reuse = sys.env.get("SPARK_GRAFT_PROBE_REUSE").contains("1") &&
       new java.io.File(s"$out/embeddings.parquet/_SUCCESS").exists()
@@ -37,15 +28,10 @@ object IndexProbe {
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      dt
-    }
+    // later legs read what earlier legs built: a failed leg ends the probe
+    def timed(f: => Unit): Double =
+      Runner.time(spark, "index probe leg")(f)
+        .fold(e => sys.error(s"leg failed: $e"), identity)
     // warmup (JIT/codegen)
     spark.range(1000000).selectExpr("sum(id)").collect()
 

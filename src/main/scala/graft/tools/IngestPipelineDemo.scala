@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.Sessions
 import graft.dedup.DedupIndex
 import graft.sim.{IvfIndex, PqIndex}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end LLM-ingest composition demo — the [[graft.streaming
@@ -19,13 +19,7 @@ import org.apache.spark.sql.functions._
 object IngestPipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.{Runner, SparkEntry}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev-loop overhead profiler: `runMain graft.tools.JobProfile <sfDir>
   * q1,q2 [reps]` — per query, bench-shaped reps reporting wall seconds,
@@ -18,16 +18,7 @@ object JobProfile {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     @volatile var jobs = 0
@@ -35,11 +26,24 @@ object JobProfile {
     @volatile var tasks = 0
     @volatile var taskNanos = 0L
     val sites = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val execSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execSites.put(s.executionId.toString, s.description)
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs += 1
+        // SQL jobs never set the `callSite.short` property. A job's result
+        // stage (highest id) is named after the thread that submitted it,
+        // which for AQE stage jobs is a pool thread (CompletableFuture), so
+        // a job inside a SQL execution takes that execution's call site
         val site = Option(j.properties)
-          .map(_.getProperty("callSite.short", "?")).getOrElse("?")
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSites.get(id)))
+          .getOrElse(if (j.stageInfos.isEmpty) "?"
+            else j.stageInfos.maxBy(_.stageId).name)
         sites.merge(site, 1, (a, b) => a + b)
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -63,15 +67,10 @@ object JobProfile {
         val tBuilt = System.nanoTime()
         df.queryExecution.executedPlan // force plan
         val tPlanned = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
+        Runner.noop(df)
         val tDone = System.nanoTime()
-        // bench-shaped isolation between reps
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-        // listener events drain asynchronously; give them a beat
-        Thread.sleep(300)
+        Runner.isolate(spark)
+        org.apache.spark.sql.graftbridge.drainListeners(spark)
         println(f"PROF $name%-26s rep$rep wall=${(tDone - t0) / 1e9}%6.2f " +
           f"build=${(tBuilt - t0) / 1e9}%5.2f plan=${(tPlanned - tBuilt) / 1e9}%5.2f " +
           f"exec=${(tDone - tPlanned) / 1e9}%6.2f jobs=$jobs%4d (build=$buildJobs) " +

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Sessions, SparkEntry}
+import scala.util.control.NonFatal
 
 /** Dump formatted physical plans for the headline queries so the
   * pushdown / broadcast / whole-stage-codegen properties are reviewable:
@@ -35,13 +35,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
         "q6_forecast_revenue", "dedup_jaccard3", "emb_near_dup", "ev_hourly_agg")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     if (names == Seq("all")) {
       // one audit line per query: the plan-quality red flags at a glance.
@@ -70,7 +64,7 @@ object PlanAudit {
           val gwCol = s"${gw.size}${if (wl) "w" else ""}"
           println(f"$n%-28s ${c("CartesianProduct")}%9d ${c("BroadcastNestedLoopJoin")}%4d " +
             f"$gwCol%9s ${c("Exchange (")}%9d")
-        } catch { case e: Throwable => println(f"$n%-28s ERROR ${e.getMessage.take(80)}") }
+        } catch { case NonFatal(e) => println(f"$n%-28s ERROR ${e.getMessage.take(80)}") }
       }
       println(s"\nGLOBALWIN audit: ${whitelistedN} whitelisted (bounded frames), " +
         s"${unexplained.size} UNEXPLAINED" +

@@ -42,16 +42,7 @@ object ScaleProbe {
     val k = if (args.length > 2) args(2).toInt else 10
     val queryNames =
       if (args.length > 3) args.drop(3).toSeq else defaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Runner.session()
 
     // SPARK_GRAFT_PROBE_REUSE=1: skip re-synthesis when the scaled dir is
     // already on disk from a previous probe run (a 100× synthesis is
@@ -62,18 +53,9 @@ object ScaleProbe {
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def runOne(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // same per-query hygiene as Bench: dead checkpoint blocks must not
-      // bleed into the next measurement
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      dt
-    }
+    def runOne(name: String, dir: String): Double =
+      graft.Runner.run(spark, name, dir)(graft.Runner.noop)
+        .fold(e => sys.error(s"$name over $dir failed: $e"), identity)
     // warmup (JIT/codegen), then base and scaled timings per query
     spark.range(1000000).selectExpr("sum(id)").collect()
     runOne(queryNames.head, base)

@@ -1,54 +1,30 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.Runner
 
 /** Dev-loop subset timer: `runMain graft.tools.TimeQueries <sfDir> q1,q2
   * [reps]` — same session config and noop sink as graft.Bench, but only
   * the named queries, each run `reps` times (default 2: cold + warm) so
   * an optimization's effect is visible without the full-suite wait.
   *
-  * NOTE (ADVICE item): the per-rep cleanup unpersists every persistent
-  * RDD and clears the whole cache manager JVM-WIDE — correct here
-  * because each rep rebuilds from scratch, but a future caller that
-  * caches a frame across queries would be silently evicted.
+  * A rep that throws prints `FAIL(<error class>)` in place of its time.
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
     names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // bench-shaped isolation (graft.Bench's between-query cleanup):
-        // without it, reps inherit the previous run's dead checkpoint
-        // blocks and drift — the r13 lesson that warm un-isolated timings
-        // don't validate a change
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-        dt
-      }
+      // Runner.run isolates each rep: un-isolated reps inherit the
+      // previous run's dead checkpoint blocks and drift (the r13 lesson
+      // that warm un-isolated timings don't validate a change)
+      val runs = (1 to reps).map(_ => Runner.run(spark, name, sfDir)(Runner.noop))
+      val times = runs.collect { case Right(t) => t }
       println(f"TIME $name%-28s " +
-        times.map(t => f"$t%.3f").mkString("  ") +
-        f"  min=${times.min}%.3f")
+        runs.map(_.fold(e => s"FAIL($e)", t => f"$t%.3f")).mkString("  ") +
+        (if (times.isEmpty) "" else f"  min=${times.min}%.3f"))
     }
     spark.stop()
   }

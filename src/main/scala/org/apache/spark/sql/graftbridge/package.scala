@@ -21,6 +21,12 @@ package object graftbridge {
   def analyzed(df: Dataset[_]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
+  /** Block until every listener event posted so far has been delivered
+    * (SparkListeners and QueryExecutionListeners alike).
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a planner strategy once per session (idempotent). */
   def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental

@@ -24,6 +24,35 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(row.getSeq[String](row.fieldIndex("lsh")).map(_.length) == Seq(4, 4))
   }
 
+  test("register exposes every function of the table to SQL") {
+    GraftExtensions.register(spark)
+    val calls = Seq(
+      "percent_encode" -> "percent_encode('a b')",
+      "replace_first" -> "replace_first('aa', 'a', 'b')",
+      "dot_product" -> "dot_product(array(1.0D), array(2.0D))",
+      "minhash_sig" -> "minhash_sig(array('a b'), 2)",
+      "minhash_int_sig" -> "minhash_int_sig(array('a b'), 2)",
+      "oph_minhash_sig" -> "oph_minhash_sig(array('a b'), 2)",
+      "simhash64" -> "simhash64(array('a'))",
+      "ngram_shingles" -> "ngram_shingles(array('a', 'b'), 2)",
+      "lsh_sig" -> "lsh_sig(array(0.5D, -0.5D), 2, 4, 2)",
+      "nfc_normalize" -> "nfc_normalize('a')",
+      "topk_by" -> "topk_by(0.5D, 1L, 1)",
+      "misra_gries" -> "misra_gries('a', 1)",
+      "cdc_chunks" -> "cdc_chunks('abc', 2)",
+      "ac_counts" -> "ac_counts('abab', array('ab'))")
+    calls.foreach { case (name, call) =>
+      assert(spark.sql(s"SELECT $call").collect().length == 1, name)
+    }
+    // a generator resolves in LATERAL VIEW, not the select list
+    spark.sql(
+      """SELECT te.name FROM VALUES ('a.tar', X'') AS v(name, content)
+        |LATERAL VIEW tar_explode(name, content) te WHERE false""".stripMargin)
+      .collect()
+    assert((calls.map(_._1) :+ "tar_explode").toSet ==
+      GraftExtensions.functions.map(_._1).toSet)
+  }
+
   test("topk_by aggregate is callable from SQL after registration") {
     GraftExtensions.register(spark)
     val got = spark.sql(

@@ -43,8 +43,7 @@ class LoopPlanSpec extends SparkSpec {
     spark.listenerManager.register(l)
     try {
       body
-      // listener bus is async — give it a beat to drain before reading
-      Thread.sleep(1000)
+      org.apache.spark.sql.graftbridge.drainListeners(spark)
     } finally spark.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
     plans.asScala.toSeq

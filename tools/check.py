@@ -4,7 +4,8 @@
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads each <name> parquet dir written by graft.Verify, runs the matching
 SQL from oracle_sql.json in DuckDB against the sfDir tables, and compares
-schema + sorted rows.
+schema + sorted rows. An oracle query with no output dir (it failed inside
+Verify, or was never run) counts as a failure.
 """
 import sys, json, glob, os
 import duckdb
@@ -19,6 +20,8 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fail = ok = skip = 0
+for name in sorted(set(oracle) - set(os.listdir(outdir))):
+    print(f"FAIL {name}: no Verify output"); fail += 1
 for name in sorted(os.listdir(outdir)):
     d = os.path.join(outdir, name)
     if not os.path.isdir(d):
