@@ -3,9 +3,12 @@ package graft.core.archive
 import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream, InputStream}
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
 import org.apache.commons.compress.compressors.gzip.{GzipCompressorInputStream, GzipCompressorOutputStream}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
 
 /** One extracted archive entry (S7). `source` is the archive it came from
   * (bag id), `name` has any leading `./` stripped
@@ -26,10 +29,11 @@ final case class PackedArchive(bagId: String, path: String, items: Seq[TarItem],
   *
   * The reference reads whole archives into RAM (tar_lib.py:45,87). Here
   * extraction opens an `FSDataInputStream` per archive path and decodes
-  * entry-by-entry, and packing is a sorted `groupByKey(bagId)` writing
-  * straight to a Hadoop output stream — per-task memory is bounded by the
-  * largest single ENTRY, not the archive, and there is no `binaryFile`
-  * 2 GB whole-archive-row cap (SURVEY §7.4 "100 TB scale").
+  * entry-by-entry in the task that then reduces the bag (`mapArchives`),
+  * and packing streams one bag straight to a Hadoop output stream
+  * (`writeArchive`) — per-task memory is bounded by the largest single
+  * ENTRY, not the archive, there is no `binaryFile` 2 GB whole-archive-row
+  * cap (SURVEY §7.4 "100 TB scale"), and bag-local work needs no shuffle.
   */
 object Tar {
 
@@ -85,31 +89,33 @@ object Tar {
   }
 
   /** Streaming scan: list archive paths under `glob` (driver-side catalog
-    * listing, one status per archive), distribute the paths, and have each
-    * task open its archive's `FSDataInputStream` directly — entries decode
-    * one at a time, so archives of ANY size scan in bounded memory. One
-    * archive per task; many archives extract in parallel.
+    * listing), spread them over the cores without a shuffle, and apply `f`
+    * in the task to (archive name, entries decoded one at a time from an
+    * `FSDataInputStream`) — bounded memory for ANY archive size while `f`
+    * streams. `pathFilter` prunes BEFORE any archive opens.
     */
-  def explodePath(spark: SparkSession, glob: String,
-                  pathFilter: String => Boolean = _ => true): Dataset[TarEntry] = {
-    import spark.implicits._
+  def mapArchives[T: ClassTag](spark: SparkSession, glob: String,
+                               pathFilter: String => Boolean = _ => true)
+                              (f: (String, Iterator[TarEntry]) => T): RDD[T] = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val p = new Path(glob)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pathFilter prunes BEFORE any archive opens — a retry pass over a few
-    // failing bags re-reads only those archives
-    val paths = Option(fs.globStatus(p)).getOrElse(Array.empty)
-      .filter(_.isFile).map(_.getPath.toString).filter(pathFilter).toSeq
+    val paths = Option(fs.globStatus(p)).toSeq.flatten
+      .filter(_.isFile).map(_.getPath.toString).filter(pathFilter)
     val parallelism = math.max(1, math.min(paths.size,
       spark.sparkContext.defaultParallelism))
-    spark.createDataset(paths)
-      .repartition(parallelism)
-      .flatMap { path =>
-        val hp = new Path(path)
-        val in = hp.getFileSystem(conf.value).open(hp)
-        entriesFromStream(hp.getName, in)
-      }
+    spark.sparkContext.parallelize(paths, parallelism).map { path =>
+      val hp = new Path(path)
+      f(hp.getName, entriesFromStream(hp.getName, hp.getFileSystem(conf.value).open(hp)))
+    }
+  }
+
+  /** One row per entry of every archive under `glob` (`mapArchives`). */
+  def explodePath(spark: SparkSession, glob: String,
+                  pathFilter: String => Boolean = _ => true): Dataset[TarEntry] = {
+    import spark.implicits._
+    spark.createDataset(mapArchives(spark, glob, pathFilter)((_, es) => es).flatMap(identity))
   }
 
   /** K3 prefix substitution, reference semantics (tar_lib.py:159-160
@@ -143,35 +149,44 @@ object Tar {
       spark.sparkContext.hadoopConfiguration)
     entries.groupByKey(_.source)
       .flatMapSortedGroups(col(orderCol)) { (bagId, it) =>
-        val outPath = new Path(outDir, s"$bagId.tar.gz")
-        val fs = outPath.getFileSystem(hadoopConf.value)
-        // digest the FINAL compressed bytes while they stream out — the
-        // reference publishes sha256(<archive>.tar.gz) as a sidecar object
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        val out = new TarArchiveOutputStream(
-          new GzipCompressorOutputStream(new java.security.DigestOutputStream(
-            new BufferedOutputStream(fs.create(outPath, true)), md)))
-        out.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
-        val items = Seq.newBuilder[TarItem]
-        try {
-          it.filterNot(_.isDir).foreach { e =>
-            val name = substitutePrefix(e.name, prefixDrop, prefixAdd)
-            val te = new TarArchiveEntry(name)
-            te.setSize(e.bytes.length.toLong)
-            te.setModTime(mtimeSeconds.getOrElse(e.mtime) * 1000L)
-            out.putArchiveEntry(te)
-            out.write(e.bytes)
-            out.closeArchiveEntry()
-            items += TarItem(name, e.bytes.length.toLong)
-          }
-        } finally out.close()
-        val sha = md.digest().map("%02x".format(_)).mkString
-        // `<archive>.tar.gz.sha256` sidecar, "<hex>  <name>" like the
-        // manifest rows checksum validation consumes
-        val shaPath = new Path(outDir, s"$bagId.tar.gz.sha256")
-        val sout = fs.create(shaPath, true)
-        try sout.write(s"$sha  $bagId.tar.gz\n".getBytes("UTF-8")) finally sout.close()
-        Iterator.single(PackedArchive(bagId, outPath.toString, items.result(), sha))
+        Iterator.single(writeArchive(hadoopConf.value, outDir, bagId, it.map(e => e.copy(
+          name = substitutePrefix(e.name, prefixDrop, prefixAdd),
+          mtime = mtimeSeconds.getOrElse(e.mtime)))))
       }
+  }
+
+  /** Write one bag's entries, in the order given and skipping directories,
+    * to `<outDir>/<bagId>.tar.gz` plus its `.sha256` sidecar.
+    */
+  def writeArchive(conf: Configuration, outDir: String, bagId: String,
+                   entries: Iterator[TarEntry]): PackedArchive = {
+    val outPath = new Path(outDir, s"$bagId.tar.gz")
+    val fs = outPath.getFileSystem(conf)
+    // digest the FINAL compressed bytes while they stream out — the
+    // reference publishes sha256(<archive>.tar.gz) as a sidecar object
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val out = new TarArchiveOutputStream(
+      new GzipCompressorOutputStream(new java.security.DigestOutputStream(
+        new BufferedOutputStream(fs.create(outPath, true)), md)))
+    out.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
+    val items = Seq.newBuilder[TarItem]
+    try {
+      entries.filterNot(_.isDir).foreach { e =>
+        val te = new TarArchiveEntry(e.name)
+        te.setSize(e.bytes.length.toLong)
+        te.setModTime(e.mtime * 1000L)
+        out.putArchiveEntry(te)
+        out.write(e.bytes)
+        out.closeArchiveEntry()
+        items += TarItem(e.name, e.bytes.length.toLong)
+      }
+    } finally out.close()
+    val sha = md.digest().map("%02x".format(_)).mkString
+    // `<archive>.tar.gz.sha256` sidecar, "<hex>  <name>" like the
+    // manifest rows checksum validation consumes
+    val shaPath = new Path(outDir, s"$bagId.tar.gz.sha256")
+    val sout = fs.create(shaPath, true)
+    try sout.write(s"$sha  $bagId.tar.gz\n".getBytes("UTF-8")) finally sout.close()
+    PackedArchive(bagId, outPath.toString, items.result(), sha)
   }
 }

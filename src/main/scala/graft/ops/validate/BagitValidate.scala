@@ -1,7 +1,26 @@
 package graft.ops.validate
 
+import graft.core.archive.TarEntry
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** One manifest-vs-file row of `verifyChecksums` (J3). */
+final case class FileCheck(file: String, expected: Option[String],
+                           computed: Option[String], status: String)
+
+/** Every check of one bag (`BagitValidate.checkBag`): the `verifyChecksums`
+  * rows, the `reconcileCounts` columns, the verdict, and the judgment doc
+  * (smallest `data/` name) with its bytes — the only payload kept.
+  */
+final case class BagCheck(bagId: String, checks: Seq[FileCheck],
+                          n_extracted: Long, n_extracted_data: Long,
+                          n_root: Long, n_data: Long,
+                          counts_ok: Boolean, data_counts_ok: Boolean,
+                          ok: Boolean, errors: Seq[String],
+                          judgment_doc: Option[String], doc_bytes: Option[Array[Byte]])
 
 /** Bag validation operators (SURVEY §2 J3/A1/A2/A4/U1/U2), bag-aware: every
   * input carries a `bagId` column so thousands of consignments validate in
@@ -86,10 +105,61 @@ object BagitValidate {
             concat(lit(s"manifest basename mismatch: expected $expectedBasename, got "),
               col("basename"))))).as("errors"))
 
-  /** Fold per-file statuses into a per-bag error array + ok flag. */
-  def summarize(checks: DataFrame): DataFrame =
-    checks.filter(col("status") =!= "ok")
-      .groupBy("bagId")
-      .agg(collect_list(concat(col("status"), lit(": "), col("file"))).as("errors"))
-      .withColumn("ok", lit(false))
+  /** S1 over one `manifest-sha256.txt`: (file, checksum) per non-blank
+    * line, with the UTF8String operations the SQL parse (`decode` → `split`
+    * → `substring` → `lower`/`trim`) calls, so odd lines parse identically.
+    */
+  private def manifestLines(bytes: Array[Byte]): Seq[(String, String)] = {
+    // a new decoder REPORTs malformed input, as SQL `decode` does
+    val text = StandardCharsets.UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)).toString
+    UTF8String.fromString(text).split(UTF8String.fromString("\n"), -1).toSeq
+      .filter(_.trim().numChars() > 0)
+      .map(l => (l.substringSQL(65, Int.MaxValue).trim().toString,
+        l.substringSQL(1, 64).toLowerCase().toString))
+  }
+
+  /** The TRE checks of ONE bag from a single pass over its archive entries
+    * (names carry the `<reference>/` root component, stripped here): the
+    * bag-local equivalent of `verifyChecksums` + `reconcileCounts` + the
+    * per-bag error fold, so a batch validates with no `bagId` join.
+    * `BagCheckSpec` holds it to those operators.
+    */
+  def checkBag(bagId: String, entries: Iterator[TarEntry]): BagCheck = {
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val manifest = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    var nExtracted, nExtractedData, nRoot = 0L
+    var doc: Option[(String, Array[Byte])] = None
+    entries.filterNot(_.isDir).foreach { e =>
+      val name = e.name.substring(e.name.indexOf('/') + 1)
+      nExtracted += 1
+      if (name.startsWith("data/")) {
+        nExtractedData += 1
+        files += name -> java.util.HexFormat.of().formatHex(
+          java.security.MessageDigest.getInstance("SHA-256").digest(e.bytes))
+        // Spark orders strings by their UTF-8 bytes, not UTF-16 units
+        if (doc.forall(d => UTF8String.fromString(name).compareTo(UTF8String.fromString(d._1)) < 0))
+          doc = Some(name -> e.bytes)
+      } else if (name == "manifest-sha256.txt") manifest ++= manifestLines(e.bytes)
+      else nRoot += 1
+    }
+    val computedOf = files.groupMap(_._1)(_._2)
+    val listed = manifest.map(_._1).toSet
+    // full outer join of manifest lines with data files on the name
+    val checks = manifest.toSeq.flatMap { case (file, expected) =>
+      computedOf.get(file) match {
+        case Some(cs) => cs.map(c => FileCheck(file, Some(expected), Some(c),
+          if (c == expected) "ok" else "checksum_mismatch"))
+        case None => Seq(FileCheck(file, Some(expected), None, "missing_file"))
+      }
+    } ++ files.filterNot(f => listed(f._1))
+      .map { case (name, c) => FileCheck(name, None, Some(c), "not_in_manifest") }
+    val nData = manifest.size.toLong
+    val countsOk = 1 + nRoot + nData == nExtracted
+    val dataCountsOk = nData == nExtractedData
+    val errors = checks.filter(_.status != "ok").map(c => s"${c.status}: ${c.file}") ++
+      (if (countsOk) Nil else Seq("file count mismatch")) ++
+      (if (dataCountsOk) Nil else Seq("data file count mismatch"))
+    BagCheck(bagId, checks, nExtracted, nExtractedData, nRoot, nData, countsOk, dataCountsOk,
+      errors.isEmpty, errors, doc.map(_._1), doc.map(_._2))
+  }
 }

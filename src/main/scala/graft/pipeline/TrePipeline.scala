@@ -1,24 +1,25 @@
 package graft.pipeline
 
 import graft.core.archive.{Tar, TarEntry}
-import graft.core.io.TextTables
 import graft.core.model.TreEvents
-import graft.ops.validate.BagitValidate
+import graft.ops.validate.{BagCheck, BagitValidate}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The integrated batch pipeline (SURVEY §3.1 / §7.1 module 7): what the
-  * reference runs as a Step Function of Lambdas becomes ONE Spark job over
-  * a batch of consignments — process boundaries collapse into stage
-  * DataFrames, S3 intermediate state into in-plan columns.
+  * reference runs as a Step Function of Lambdas, one invocation per bag,
+  * becomes ONE Spark job over a batch of consignments. Every TRE check is
+  * bag-local, so each task streams its archives into one `BagCheck` row
+  * per bag, and every stage below is a narrow projection or map of that
+  * one cached Dataset — no `bagId` join, group or shuffle.
   *
-  *   explode(tar) → parse side-files → checksum verify (J3) →
-  *   count reconciliation (A1) + set differences (U1/U2) →
+  *   scan(tar) → checksum verify (J3) + count reconciliation (A1) +
   *   per-bag verdict with error channel → provenance-chained result event
   *
   * Every stage result is exposed so tests/operators can inspect the
   * "execution history" (the reference's per-step inputs/outputs,
-  * tre_module_test consignment_tester.py:147-259).
+  * tre_module_test consignment_tester.py:147-259); `entries` re-reads the
+  * archives lazily, one row per entry.
   */
 final case class PipelineResult(
     entries: Dataset[TarEntry],
@@ -41,29 +42,29 @@ final case class FullPipelineResult(
 
 object TrePipeline {
 
-  /** Exploded entries → (bagId, name, content) rows with the leading
-    * `<reference>/` bag-root component stripped.
-    */
-  private def filesOf(spark: SparkSession, entries: Dataset[TarEntry]): DataFrame = {
+  /** One `BagCheck` per archive under `bagsGlob`, bagId = archive basename. */
+  private def scan(spark: SparkSession, bagsGlob: String,
+                   pathFilter: String => Boolean = _ => true): Dataset[BagCheck] = {
     import spark.implicits._
-    entries.filter(!_.isDir)
-      .map(e => (e.source, e.name.substring(e.name.indexOf('/') + 1), e.bytes))
-      .toDF("bagId", "name", "content")
+    spark.createDataset(Tar.mapArchives(spark, bagsGlob, pathFilter)(
+      (name, entries) => BagitValidate.checkBag(name.stripSuffix(".tar.gz"), entries)))
   }
 
   /** Run validation over a directory of `<reference>.tar.gz` bags. */
   def run(spark: SparkSession, bagsGlob: String,
-          environment: String = "dev"): PipelineResult = {
-    import spark.implicits._
+          environment: String = "dev"): PipelineResult =
+    validation(spark, bagsGlob, scan(spark, bagsGlob).cache(), environment)
 
-    // S7: one streaming explode per archive, bagId = archive basename
+  private def validation(spark: SparkSession, bagsGlob: String, bags: Dataset[BagCheck],
+                         environment: String): PipelineResult = {
+    import spark.implicits._
     val entries = Tar.explodePath(spark, bagsGlob)
       .map(e => e.copy(source = e.source.stripSuffix(".tar.gz")))
-      .cache()
-
-    val files = filesOf(spark, entries)
-
-    val (checksums, reconciliation, verdicts) = verdictsForFiles(files)
+    val checksums = bags.select(col("bagId"), explode(col("checks")).as("c"))
+      .select(col("bagId"), col("c.file"), col("c.expected"), col("c.computed"), col("c.status"))
+    val reconciliation = bags.select("bagId", "n_extracted", "n_extracted_data",
+      "n_root", "n_data", "counts_ok", "data_counts_ok")
+    val verdicts = bags.select("bagId", "ok", "errors", "n_root", "n_data", "n_extracted")
 
     // result event with provenance chain: prior TDR event → TRE event
     // (dual ok/error outputs, tre_vb_validate_bagit.py:124-161)
@@ -91,56 +92,6 @@ object TrePipeline {
     PipelineResult(entries, checksums, reconciliation, verdicts, events)
   }
 
-  /** Checksum verification (J3) + count reconciliation (A1) + per-bag
-    * verdict for a batch of exploded bag files. Factored out so the retry
-    * loop can re-validate a failing subset without re-exploding archives.
-    */
-  private def verdictsForFiles(files: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    // S1 from exploded bytes: data-file manifest per bag
-    val manifestLines = files
-      .filter(col("name") === "manifest-sha256.txt")
-      .select(col("bagId"),
-        explode(split(decode(col("content"), "UTF-8"), "\n")).as("line"))
-      .filter(length(trim(col("line"))) > 0)
-    // fixed-width parse (S1) with the bag key carried through
-    val manifestKeyed = manifestLines.select(col("bagId"),
-      lower(substring(col("line"), 1, 64)).as("checksum"),
-      trim(expr("substring(line, 65)")).as("file"))
-
-    // J3: verify payload checksums against the manifest
-    val dataFiles = files.filter(col("name").startsWith("data/"))
-    val checksums = BagitValidate.verifyChecksums(
-      dataFiles, manifestKeyed.select(col("bagId"), col("file"), col("checksum")))
-
-    // A1: count reconciliation — root manifest rows = files outside data/
-    // minus the manifest itself ("Catch-22", tre_vb_validate_bagit_files.py:88-121)
-    val rootManifest = files
-      .filter(!col("name").startsWith("data/") &&
-        col("name") =!= "manifest-sha256.txt")
-      .select(col("bagId"), col("name").as("file"))
-    val reconciliation = BagitValidate.reconcileCounts(
-      rootManifest, manifestKeyed.select(col("bagId"), col("file")),
-      files.select(col("bagId"), col("name")))
-
-    // per-bag verdict: checksum failures ∪ reconciliation failures
-    val checksumErrors = checksums.filter(col("status") =!= "ok")
-      .groupBy("bagId")
-      .agg(collect_list(concat(col("status"), lit(": "), col("file"))).as("cs_errors"))
-    val verdicts = reconciliation
-      .join(checksumErrors, Seq("bagId"), "left")
-      .withColumn("errors", concat(
-        coalesce(col("cs_errors"), array().cast("array<string>")),
-        when(!col("counts_ok"), array(lit("file count mismatch")))
-          .otherwise(array().cast("array<string>")),
-        when(!col("data_counts_ok"), array(lit("data file count mismatch")))
-          .otherwise(array().cast("array<string>"))))
-      .withColumn("ok", size(col("errors")) === 0)
-      .select(col("bagId"), col("ok"), col("errors"),
-        col("n_root"), col("n_data"), col("n_extracted"))
-
-    (checksums, reconciliation, verdicts)
-  }
-
   /** The complete §3.1 main path in one job: validate → prepare parser
     * input (step 5: first data file, prepare_parser_input.py:124-131) →
     * parser contract (step 6, stub seam) → TRE metadata + editorial bundle
@@ -151,37 +102,20 @@ object TrePipeline {
     import spark.implicits._
     import graft.ops.editorial.{Editorial, ParserStub}
 
-    val v = run(spark, bagsGlob, environment)
-    val okBags = v.verdicts.filter(col("ok")).select(col("bagId"))
+    val bags = scan(spark, bagsGlob).cache()
 
     // step 5: judgment doc = FIRST data file (compat with the reference's
-    // data[0] assumption; generalized inventory kept in `entries`)
-    val dataDocs = v.entries.filter(!_.isDir)
-      .map(e => (e.source, e.name.substring(e.name.indexOf('/') + 1)))
-      .toDF("bagId", "name")
-      .filter(col("name").startsWith("data/"))
-      .groupBy(col("bagId")).agg(min(col("name")).as("judgment_doc"))
-    val parserInputs = okBags.join(dataDocs, Seq("bagId"))
+    // data[0] assumption; generalized inventory kept in `entries`). An ok
+    // bag without a data file gets no parser input and no bundle.
+    val docName = element_at(split(col("judgment_doc"), "/"), -1)
+    val docs = bags.filter(col("ok") && col("judgment_doc").isNotNull)
       .withColumn("msg", Editorial.parserInputMessage(
         col("bagId"), lit("local"), concat(lit("file://"), col("judgment_doc")),
         concat(lit("parsed/judgment/"), col("bagId"), lit("/0/")),
-        element_at(split(col("judgment_doc"), "/"), -1),
-        lit("judgment"), lit(0)))
-
-    // step 6: parser contract (stub seam — swap for the real parser)
-    val parserOutputs = parserInputs.select(
-      col("bagId"), col("judgment_doc"),
-      ParserStub.outputStruct(col("bagId"),
-        element_at(split(col("judgment_doc"), "/"), -1)).as("po"))
-
-    // step 7: TRE metadata JSON + bundle (metadata + judgment doc bytes).
-    // metadata.json is emitted once per bag, and only the step-5 judgment
-    // doc is bundled — a bag with k>1 data files must not get k duplicate
-    // metadata entries or bundle every data file.
-    val docBytes = v.entries.filter(!_.isDir)
-      .map(e => (e.source, e.name.substring(e.name.indexOf('/') + 1), e.bytes))
-      .toDF("bagId", "name", "bytes")
-    val editorial = parserOutputs
+        docName, lit("judgment"), lit(0)))
+      // step 6: parser contract (stub seam — swap for the real parser)
+      .withColumn("po", ParserStub.outputStruct(col("bagId"), docName))
+      // step 7: TRE metadata JSON
       .withColumn("tre_metadata", to_json(struct(
         struct(lit("TRE").as("name"), lit("transform").as("process"),
           lit("judgment").as("type"), lit(environment).as("environment")).as("producer"),
@@ -190,24 +124,22 @@ object TrePipeline {
           lit(version).as(s"$environment-tre-version"),
           col("po.xml").as("xml"), col("po.log").as("log"),
           col("po.error_messages").as("error-messages")).as("parameters"))))
-    val metaEntries = editorial
-      .select(col("bagId"), col("tre_metadata"))
-      .as[(String, String)]
-      .map { case (bag, meta) =>
-        TarEntry(bag, s"$bag/0/metadata.json", meta.getBytes("UTF-8"), 0L, isDir = false)
-      }
-    val docEntries = editorial
-      .select(col("bagId"), col("judgment_doc"))
-      .join(docBytes, Seq("bagId"))
-      .filter(col("name") === col("judgment_doc"))
-      .select(col("bagId"), col("name"), col("bytes"))
-      .as[(String, String, Array[Byte])]
-      .map { case (bag, name, bytes) =>
-        TarEntry(bag, s"$bag/0/" + name.substring(name.indexOf('/') + 1), bytes, 0L, isDir = false)
-      }
-    val bundleEntries = metaEntries.unionByName(docEntries)
-    val bundles = graft.core.archive.Tar
-      .packageBags(bundleEntries, outDir).toDF()
+    val parserInputs = docs.select("bagId", "judgment_doc", "msg")
+    val editorial = docs.select("bagId", "judgment_doc", "po", "tre_metadata")
+
+    // step 7: bundle = metadata.json once + the step-5 judgment doc only (a
+    // bag with k>1 data files must not bundle every data file), written in
+    // name order by the task holding the bag's row
+    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val bundles = docs.select("bagId", "judgment_doc", "doc_bytes", "tre_metadata")
+      .as[(String, String, Array[Byte], String)]
+      .map { case (bag, doc, bytes, meta) =>
+        Tar.writeArchive(hadoopConf.value, outDir, bag, Seq(
+          TarEntry(bag, s"$bag/0/metadata.json", meta.getBytes("UTF-8"), 0L, isDir = false),
+          TarEntry(bag, s"$bag/0/" + doc.substring(doc.indexOf('/') + 1), bytes, 0L, isDir = false)
+        ).sortBy(_.name).iterator)
+      }.toDF()
 
     // K8 demonstrated end-to-end: the per-bag output message carries the
     // packed archive's URL and its .sha256 sidecar URL through the presign
@@ -229,7 +161,8 @@ object TrePipeline {
           concat(col("bagId"), lit(".tar.gz")).as("key"),
           to_json(col("items")).as("items")).as("tar-gz"))).as("output_message"))
 
-    FullPipelineResult(v, parserInputs, parserOutputs.withColumnRenamed("po", "parser_outputs"),
+    FullPipelineResult(validation(spark, bagsGlob, bags, environment), parserInputs,
+      docs.select(col("bagId"), col("judgment_doc"), col("po").as("parser_outputs")),
       editorial, bundles, outputMessages)
   }
 
@@ -259,9 +192,11 @@ object TrePipeline {
     *  - incoming ≥ maxRetries hard-fails the consignment (route `fail`).
     *
     * Rounds are a driver loop bounded by maxRetries; every round's work is
-    * distributed (the driver only unions DataFrames and checks emptiness).
-    * Returns the attempt history:
-    * (bagId, attempt, incoming, route, msg_path, message).
+    * distributed (the driver only collects the failing ids and, at the
+    * end, the history). Returns the attempt history as a local DataFrame,
+    * with every round's cache released:
+    * (bagId, attempt, incoming, route, msg_path, message). No result event
+    * is built here, so `environment` is unused.
     */
   def runWithRetries(spark: SparkSession, bagsGlob: String, stateDir: String,
                      environment: String = "dev", maxRetries: Int = 3,
@@ -270,14 +205,13 @@ object TrePipeline {
     import spark.implicits._
     import graft.ops.editorial.RetryLoop
 
-    val v = run(spark, bagsGlob, environment)
     val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val state = stateDir
     val ctype = consignmentType
 
     // attempt 0: validate everything, seed state (one task per bag)
-    val attempt0 = v.verdicts.select(col("bagId"), col("ok"))
+    val attempt0 = scan(spark, bagsGlob).select(col("bagId"), col("ok"))
       .as[(String, Boolean)]
       .map { case (bag, ok) =>
         val retries = if (ok) 0 else 1   // bumped on error, ready for resubmit
@@ -288,42 +222,43 @@ object TrePipeline {
       .toDF("bagId", "attempt", "incoming", "route", "msg_path", "message")
       .cache()
 
-    var history = attempt0
-    var failing = attempt0.filter(col("route") === "retry").select("bagId")
-    var attempt = 1
-    while (attempt <= maxRetries && !failing.isEmpty) {
-      onAttempt(attempt)   // seam: the reference re-fetches fresh content
-      // re-validation re-reads ONLY the failing archives from storage —
-      // a bag repaired upstream between retries (the reference's
-      // re-download path) is observed, unlike re-checking cached bytes.
-      // The failing-id collect is one string per failing bag, bounded by
-      // the consignment count, not data volume.
-      val failingSet = failing.as[String].collect().toSet
-      val fresh = Tar.explodePath(spark, bagsGlob,
-          p => failingSet.contains(
-            p.split('/').last.stripSuffix(".tar.gz")))
-        .map(e => e.copy(source = e.source.stripSuffix(".tar.gz")))
-      val files = filesOf(spark, fresh)
-      val (_, _, verdicts) = verdictsForFiles(files)
-      val a = attempt
-      val rec = verdicts.select(col("bagId"), col("ok"))
-        .as[(String, Boolean)]
-        .map { case (bag, ok) =>
-          if (ok) (bag, a, a, "ok", "", "")
-          else if (a >= maxRetries) (bag, a, a, "fail", "", "")
-          else RetryLoop.handleRetry(hadoopConf.value, state, ctype, bag, a) match {
-            case Right(msg) =>
-              (bag, a, a, "retry",
-                RetryLoop.messagePath(state, ctype, bag, 0, a).toString, msg)
-            case Left(err) => (bag, a, a, s"error: $err", "", "")
+    // The failing-id collects are one string per failing bag, and the
+    // history at most bags × (maxRetries + 1) rows: both are bounded by
+    // the consignment count, not data volume.
+    def failingIds(round: DataFrame): Set[String] =
+      round.filter(col("route") === "retry").select("bagId").as[String].collect().toSet
+    val rounds = scala.collection.mutable.ArrayBuffer(attempt0)
+    try {
+      var failing = failingIds(attempt0)
+      var attempt = 1
+      while (attempt <= maxRetries && failing.nonEmpty) {
+        onAttempt(attempt)   // seam: the reference re-fetches fresh content
+        // re-validation re-reads ONLY the failing archives from storage —
+        // a bag repaired upstream between retries (the reference's
+        // re-download path) is observed, unlike re-checking cached bytes.
+        val a = attempt
+        val rec = scan(spark, bagsGlob,
+            p => failing.contains(p.split('/').last.stripSuffix(".tar.gz")))
+          .select(col("bagId"), col("ok"))
+          .as[(String, Boolean)]
+          .map { case (bag, ok) =>
+            if (ok) (bag, a, a, "ok", "", "")
+            else if (a >= maxRetries) (bag, a, a, "fail", "", "")
+            else RetryLoop.handleRetry(hadoopConf.value, state, ctype, bag, a) match {
+              case Right(msg) =>
+                (bag, a, a, "retry",
+                  RetryLoop.messagePath(state, ctype, bag, 0, a).toString, msg)
+              case Left(err) => (bag, a, a, s"error: $err", "", "")
+            }
           }
-        }
-        .toDF("bagId", "attempt", "incoming", "route", "msg_path", "message")
-        .cache()
-      history = history.unionByName(rec)
-      failing = rec.filter(col("route") === "retry").select("bagId")
-      attempt += 1
-    }
-    history
+          .toDF("bagId", "attempt", "incoming", "route", "msg_path", "message")
+          .cache()
+        rounds += rec
+        failing = failingIds(rec)
+        attempt += 1
+      }
+      val history = rounds.reduce(_ unionByName _)
+      spark.createDataFrame(java.util.Arrays.asList(history.collect(): _*), history.schema)
+    } finally rounds.foreach(_.unpersist())
   }
 }

@@ -238,7 +238,7 @@ object RefOpQueries {
       // all three counts come off ONE scan as conditional aggregates (one
       // shuffle, map-side partial) — the join-based reconcile for
       // genuinely independent inputs is `BagitValidate.reconcileCounts`,
-      // exercised by the pipeline + specs
+      // the specs' reference for the pipeline's bag-local `checkBag`
       (spark, dir) =>
         Tables.documents(spark, dir)
           .groupBy(col("source"))

@@ -142,4 +142,81 @@ class TrePipelineSpec extends SparkSpec {
       Seq("bagit-validated", "bagit-validation-error"))
     assert(ev.forall(e => e._2 == 2 && e._3 == "TRE-UUID"))
   }
+
+  private def writeTarGz(dir: java.nio.file.Path, name: String, files: Seq[(String, String)]): Unit = {
+    import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+    import org.apache.commons.compress.compressors.gzip.GzipCompressorOutputStream
+    val out = new TarArchiveOutputStream(
+      new GzipCompressorOutputStream(Files.newOutputStream(dir.resolve(name))))
+    files.foreach { case (n, c) =>
+      val b = c.getBytes; val e = new TarArchiveEntry(n)
+      e.setSize(b.length.toLong); out.putArchiveEntry(e); out.write(b); out.closeArchiveEntry()
+    }
+    out.close()
+  }
+
+  /** Every physical node of an executed plan, through AQE stages and the
+    * plans of cached relations it reads.
+    */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+  }
+
+  test("runFull validates and bundles without a shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val dir = Files.createTempDirectory("bagsnoshuffle")
+    val out = Files.createTempDirectory("sipsnoshuffle")
+    makeBags(dir)
+    val r = TrePipeline.runFull(spark, dir.toString + "/*.tar.gz", out.toString)
+    Seq(r.outputMessages, r.validation.events).foreach { df =>
+      assert(df.collect().nonEmpty)
+      val plan = df.queryExecution.executedPlan
+      assert(nodes(plan).collect { case s: ShuffleExchangeLike => s }.isEmpty, plan.treeString)
+    }
+  }
+
+  test("a bag whose archive holds no file gets a verdict and an error event") {
+    val dir = Files.createTempDirectory("bagsempty")
+    makeBags(dir)
+    writeTarGz(dir, "TDR-2022-EMPTY.tar.gz", Seq.empty)
+    val r = TrePipeline.run(spark, dir.toString + "/*.tar.gz")
+    val ev = r.events.filter($"bagId" === "TDR-2022-EMPTY")
+      .select($"ok", $"errors", $"event_name", $"n_extracted")
+      .as[(Boolean, Seq[String], String, Long)].collect().toSeq
+    // 1 + |root| + |data| = 1 ≠ 0 extracted files
+    assert(ev == Seq((false, Seq("file count mismatch"), "bagit-validation-error", 0L)))
+  }
+
+  test("runWithRetries drives a bag with an empty archive to the retry limit") {
+    val dir = Files.createTempDirectory("retryempty")
+    val state = Files.createTempDirectory("retryemptystate")
+    writeTarGz(dir, "TDR-2022-EMPTY.tar.gz", Seq.empty)
+    val routes = TrePipeline.runWithRetries(spark, dir.toString + "/*.tar.gz", state.toString)
+      .orderBy($"attempt").select($"attempt", $"route").as[(Int, String)].collect().toSeq
+    assert(routes == Seq((0, "retry"), (1, "retry"), (2, "retry"), (3, "fail")))
+  }
+
+  test("runWithRetries returns a local history and leaves nothing persisted") {
+    val dir = Files.createTempDirectory("retrycache")
+    val state = Files.createTempDirectory("retrycachestate")
+    makeBags(dir)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val history = TrePipeline.runWithRetries(spark, dir.toString + "/*.tar.gz", state.toString)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(history.isLocal)
+    val routes = history.orderBy($"bagId", $"attempt")
+      .select($"bagId", $"attempt", $"route").as[(String, Int, String)].collect().toSeq
+    assert(routes == Seq(
+      ("TDR-2022-BAD1", 0, "retry"), ("TDR-2022-BAD1", 1, "retry"),
+      ("TDR-2022-BAD1", 2, "retry"), ("TDR-2022-BAD1", 3, "fail"),
+      ("TDR-2022-OK1", 0, "ok")))
+  }
 }
