@@ -1,6 +1,7 @@
 package graft.core.archive
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream, InputStream}
+import graft.core.io.Storage
+import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream, IOException, InputStream}
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
 import org.apache.commons.compress.compressors.gzip.{GzipCompressorInputStream, GzipCompressorOutputStream}
 import org.apache.hadoop.conf.Configuration
@@ -44,9 +45,13 @@ object Tar {
     else new TarArchiveInputStream(buffered)
   }
 
+  /** Largest entry one byte array can hold. */
+  private val MaxEntryBytes: Long = Int.MaxValue - 8
+
   /** Iterate entries of one archive stream, buffering one entry at a time;
     * the stream (and `in` under it) is closed when the last entry is
-    * consumed.
+    * consumed. An entry over `MaxEntryBytes` fails with an `IOException`
+    * naming the archive and the entry, before anything is allocated.
     */
   def entriesFromStream(archiveName: String, in: InputStream): Iterator[TarEntry] = {
     val tin = open(archiveName, in)
@@ -57,6 +62,9 @@ object Tar {
         val content =
           if (e.isDirectory) Array.emptyByteArray
           else {
+            if (e.getSize > MaxEntryBytes) throw new IOException(
+              s"$archiveName: entry ${e.getName} is ${e.getSize} bytes, over the " +
+                s"$MaxEntryBytes-byte limit of one in-memory entry")
             val buf = new java.io.ByteArrayOutputStream(math.max(64, e.getSize.toInt))
             val chunk = new Array[Byte](64 * 1024)
             var n = tin.read(chunk)
@@ -97,8 +105,7 @@ object Tar {
   def mapArchives[T: ClassTag](spark: SparkSession, glob: String,
                                pathFilter: String => Boolean = _ => true)
                               (f: (String, Iterator[TarEntry]) => T): RDD[T] = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = Storage.taskConf(spark)
     val p = new Path(glob)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val paths = Option(fs.globStatus(p)).toSeq.flatten
@@ -107,7 +114,7 @@ object Tar {
       spark.sparkContext.defaultParallelism))
     spark.sparkContext.parallelize(paths, parallelism).map { path =>
       val hp = new Path(path)
-      f(hp.getName, entriesFromStream(hp.getName, hp.getFileSystem(conf.value).open(hp)))
+      f(hp.getName, entriesFromStream(hp.getName, hp.getFileSystem(conf.value.value).open(hp)))
     }
   }
 
@@ -145,11 +152,10 @@ object Tar {
                   orderCol: String = "name"): Dataset[PackedArchive] = {
     val spark = entries.sparkSession
     import spark.implicits._
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = Storage.taskConf(spark)
     entries.groupByKey(_.source)
       .flatMapSortedGroups(col(orderCol)) { (bagId, it) =>
-        Iterator.single(writeArchive(hadoopConf.value, outDir, bagId, it.map(e => e.copy(
+        Iterator.single(writeArchive(hadoopConf.value.value, outDir, bagId, it.map(e => e.copy(
           name = substitutePrefix(e.name, prefixDrop, prefixAdd),
           mtime = mtimeSeconds.getOrElse(e.mtime)))))
       }

@@ -23,8 +23,7 @@ object Ingest {
   def fetchToStorage(requests: DataFrame, overwrite: Boolean = false): DataFrame = {
     val spark = requests.sparkSession
     import spark.implicits._
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = Storage.taskConf(spark)
     // duplicate targets in one batch would race the exists-guard across
     // tasks (TOCTOU — the reference's check-then-put has the same window);
     // within a job the dedup closes it
@@ -32,7 +31,7 @@ object Ingest {
       .mapPartitions { it =>
         it.map { case (url, target) =>
           val p = new Path(target)
-          val fs = p.getFileSystem(hadoopConf.value)
+          val fs = p.getFileSystem(hadoopConf.value.value)
           var written = 0L
           try {
             if (!overwrite && fs.exists(p))

@@ -1,13 +1,25 @@
 package graft.core.io
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Storage-catalog operators (SURVEY §2.1 S4/S5/S8, §2.2 K1) over any
   * Hadoop-compatible filesystem (local in tests, object store at scale).
   */
 object Storage {
+
+  /** The session's Hadoop conf for task closures, broadcast once per call
+    * as `SparkContext.hadoopFile` does. A closure that captures a
+    * `SerializableConfiguration` instead ships all ~1,000 properties in
+    * every task and deserializes a private copy per task. Read it in the
+    * task as `conf.value.value`.
+    */
+  def taskConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
   /** S4: listing under a glob → (path, name, size, mtime_ms) rows. */
   def list(spark: SparkSession, glob: String): DataFrame = {

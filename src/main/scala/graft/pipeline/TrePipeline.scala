@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.archive.{Tar, TarEntry}
+import graft.core.io.Storage
 import graft.core.model.TreEvents
 import graft.ops.validate.{BagCheck, BagitValidate}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -130,12 +131,11 @@ object TrePipeline {
     // step 7: bundle = metadata.json once + the step-5 judgment doc only (a
     // bag with k>1 data files must not bundle every data file), written in
     // name order by the task holding the bag's row
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = Storage.taskConf(spark)
     val bundles = docs.select("bagId", "judgment_doc", "doc_bytes", "tre_metadata")
       .as[(String, String, Array[Byte], String)]
       .map { case (bag, doc, bytes, meta) =>
-        Tar.writeArchive(hadoopConf.value, outDir, bag, Seq(
+        Tar.writeArchive(hadoopConf.value.value, outDir, bag, Seq(
           TarEntry(bag, s"$bag/0/metadata.json", meta.getBytes("UTF-8"), 0L, isDir = false),
           TarEntry(bag, s"$bag/0/" + doc.substring(doc.indexOf('/') + 1), bytes, 0L, isDir = false)
         ).sortBy(_.name).iterator)
@@ -195,18 +195,16 @@ object TrePipeline {
     * distributed (the driver only collects the failing ids and, at the
     * end, the history). Returns the attempt history as a local DataFrame,
     * with every round's cache released:
-    * (bagId, attempt, incoming, route, msg_path, message). No result event
-    * is built here, so `environment` is unused.
+    * (bagId, attempt, incoming, route, msg_path, message).
     */
   def runWithRetries(spark: SparkSession, bagsGlob: String, stateDir: String,
-                     environment: String = "dev", maxRetries: Int = 3,
+                     maxRetries: Int = 3,
                      consignmentType: String = "judgment",
                      onAttempt: Int => Unit = _ => ()): DataFrame = {
     import spark.implicits._
     import graft.ops.editorial.RetryLoop
 
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = Storage.taskConf(spark)
     val state = stateDir
     val ctype = consignmentType
 
@@ -216,7 +214,7 @@ object TrePipeline {
       .map { case (bag, ok) =>
         val retries = if (ok) 0 else 1   // bumped on error, ready for resubmit
         val msg = initialMessage(bag, ctype, retries)
-        val path = RetryLoop.seedState(hadoopConf.value, state, ctype, bag, msg)
+        val path = RetryLoop.seedState(hadoopConf.value.value, state, ctype, bag, msg)
         (bag, 0, 0, if (ok) "ok" else "retry", path, msg)
       }
       .toDF("bagId", "attempt", "incoming", "route", "msg_path", "message")
@@ -244,7 +242,7 @@ object TrePipeline {
           .map { case (bag, ok) =>
             if (ok) (bag, a, a, "ok", "", "")
             else if (a >= maxRetries) (bag, a, a, "fail", "", "")
-            else RetryLoop.handleRetry(hadoopConf.value, state, ctype, bag, a) match {
+            else RetryLoop.handleRetry(hadoopConf.value.value, state, ctype, bag, a) match {
               case Right(msg) =>
                 (bag, a, a, "retry",
                   RetryLoop.messagePath(state, ctype, bag, 0, a).toString, msg)
@@ -259,6 +257,9 @@ object TrePipeline {
       }
       val history = rounds.reduce(_ unionByName _)
       spark.createDataFrame(java.util.Arrays.asList(history.collect(): _*), history.schema)
-    } finally rounds.foreach(_.unpersist())
+    } finally {
+      rounds.foreach(_.unpersist())
+      hadoopConf.destroy()
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.io.Storage
 import java.io.{BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException, InputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
@@ -102,13 +103,12 @@ object Warc {
   def write(docs: DataFrame, outDir: String): Dataset[CdxEntry] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = Storage.taskConf(spark)
     docs.select(col("source"), col("doc_id"), col("text")).as[WarcDoc]
       .groupByKey(_.source)
       .flatMapSortedGroups(col("doc_id")) { (source, it) =>
         val outPath = new Path(outDir, s"$source.warc.gz")
-        val fs = outPath.getFileSystem(hadoopConf.value)
+        val fs = outPath.getFileSystem(hadoopConf.value.value)
         val out = new BufferedOutputStream(fs.create(outPath, true))
         val cdx = Seq.newBuilder[CdxEntry]
         var offset = 0L
@@ -204,8 +204,7 @@ object Warc {
     */
   def read(spark: SparkSession, glob: String): Dataset[WarcRecord] = {
     import spark.implicits._
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = Storage.taskConf(spark)
     val p = new Path(glob)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val paths = Option(fs.globStatus(p)).getOrElse(Array.empty)
@@ -216,7 +215,7 @@ object Warc {
       .repartition(parallelism)
       .flatMap { path =>
         val hp = new Path(path)
-        val in = hp.getFileSystem(hadoopConf.value).open(hp)
+        val in = hp.getFileSystem(hadoopConf.value.value).open(hp)
         parseStream(hp.getName, new GZIPInputStream(in))
       }
   }
@@ -229,12 +228,11 @@ object Warc {
   def fetchByCdx(warcDir: String, cdx: Dataset[CdxEntry]): Dataset[WarcRecord] = {
     val spark = cdx.sparkSession
     import spark.implicits._
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = Storage.taskConf(spark)
     cdx.groupByKey(_.warc_file)
       .flatMapSortedGroups(col("offset")) { (file, it) =>
         val hp = new Path(warcDir, file)
-        val in = hp.getFileSystem(hadoopConf.value).open(hp)
+        val in = hp.getFileSystem(hadoopConf.value.value).open(hp)
         val recs = it.map { e =>
           in.seek(e.offset)
           val member = new Array[Byte](e.length.toInt)

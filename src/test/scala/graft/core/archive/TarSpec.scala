@@ -132,4 +132,27 @@ class TarSpec extends SparkSpec {
     val b2 = Files.readAllBytes(dir2.resolve("bag.tar.gz"))
     assert(java.util.Arrays.equals(b1, b2))
   }
+
+  test("mapArchives ships the Hadoop conf by broadcast, not in each task closure") {
+    val dir = Files.createTempDirectory("tarconf")
+    makeTarGz(dir, "TDR-2022-AA1.tar.gz", bagFiles)
+    val rdd = Tar.mapArchives(spark, dir.toString + "/*.tar.gz")((name, _) => name)
+    // what the scheduler serializes into every task of the stage
+    val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      .serialize(rdd).limit()
+    assert(bytes < 16 * 1024, s"closure of $bytes bytes")
+    assert(rdd.collect().toSeq == Seq("TDR-2022-AA1.tar.gz"))
+  }
+
+  test("an entry over 2 GiB fails with an IOException naming archive and entry") {
+    import org.apache.commons.compress.archivers.tar.TarArchiveEntry
+    // a header-only tar: the entry claims 3 GiB and carries no data
+    val header = new Array[Byte](512)
+    val e = new TarArchiveEntry("TDR-BIG/data/huge.bin")
+    e.setSize(3L << 30)
+    e.writeEntryHeader(header)
+    val err = intercept[java.io.IOException](Tar.entries("TDR-BIG.tar", header).toList)
+    assert(err.getMessage.contains("TDR-BIG.tar"), err.getMessage)
+    assert(err.getMessage.contains("TDR-BIG/data/huge.bin"), err.getMessage)
+  }
 }

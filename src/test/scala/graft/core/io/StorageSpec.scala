@@ -70,4 +70,12 @@ class StorageSpec extends SparkSpec {
     em.publish("topic-a", "hello", Map("k" -> "v"))
     assert(em.sent.toSeq == Seq(("topic-a", "hello", Map("k" -> "v"))))
   }
+
+  test("taskConf carries keys set on the session's Hadoop conf before the call") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("graft.storagespec.key", "visible")
+    val b = Storage.taskConf(spark)
+    try assert(b.value.value.get("graft.storagespec.key") == "visible")
+    finally { conf.unset("graft.storagespec.key"); b.destroy() }
+  }
 }

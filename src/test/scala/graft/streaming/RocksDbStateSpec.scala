@@ -31,9 +31,12 @@ class RocksDbStateSpec extends SparkSpec {
           (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3)))
         ()
       }.start()
-    Files.write(in.resolve("b0.jsonl"),
+    // stage outside the watched dir and move in: the source must never list
+    // a half-written file (it would read the prefix as the whole batch)
+    val staged = Files.write(Files.createTempFile("rocks_stage", ".jsonl"),
       scala.jdk.CollectionConverters.SeqHasAsJava(
         rows.map { case (k, ts) => s"""{"k":"$k","ts_ns":$ts}""" }).asJava)
+    Files.move(staged, in.resolve("b0.jsonl"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     q.processAllAvailable()
     (out.toSet, q)
   }
