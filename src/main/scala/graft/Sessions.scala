@@ -69,6 +69,8 @@ object Sessions {
     * are provider-agnostic (state is Tungsten-row encoded either way);
     * RocksDbStateSpec pins a planted hot-key + wide-cardinality run on
     * this provider and asserts the rocksdb metrics fired.
+    * Kept: the state-store switch for long-running streams; RocksDbStateSpec
+    * pins it.
     */
   def useRocksDbState(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)

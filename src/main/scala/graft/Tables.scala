@@ -95,6 +95,8 @@ object Tables {
   /** Register every TESTDATA table as a temp view so the whole engine
     * surface is reachable from `spark.sql(...)` — `events` keeps its
     * normalized (ts timestamp, ts_ns long) shape.
+    * Kept: the ad-hoc `spark.sql` surface over TESTDATA; SqlSurfaceSpec
+    * drives it.
     */
   def registerAll(s: SparkSession, d: String): Unit =
     names.foreach { n =>

@@ -7,8 +7,7 @@ import org.apache.commons.compress.compressors.gzip.{GzipCompressorInputStream, 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import scala.reflect.ClassTag
 
 /** One extracted archive entry (S7). `source` is the archive it came from
@@ -81,42 +80,15 @@ object Tar {
   def entries(archiveName: String, bytes: Array[Byte]): Iterator[TarEntry] =
     entriesFromStream(archiveName, new ByteArrayInputStream(bytes))
 
-  /** Explode archives read via `spark.read.format("binaryFile")` into one
-    * row per entry (whole-archive rows — subject to the 2 GB row cap; kept
-    * for frames already holding archive bytes).
-    */
-  def explode(binaryFiles: DataFrame): Dataset[TarEntry] = {
-    val spark = binaryFiles.sparkSession
-    import spark.implicits._
-    binaryFiles.select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val base = path.split("/").last
-        entries(base, bytes).map(e => e.copy(source = base))
-      }
-  }
-
-  /** Streaming scan: list archive paths under `glob` (driver-side catalog
-    * listing), spread them over the cores without a shuffle, and apply `f`
-    * in the task to (archive name, entries decoded one at a time from an
-    * `FSDataInputStream`) — bounded memory for ANY archive size while `f`
-    * streams. `pathFilter` prunes BEFORE any archive opens.
+  /** Streaming scan: apply `f` in the task to (archive name, entries
+    * decoded one at a time from an `FSDataInputStream`) for every archive
+    * under `glob` (`Storage.mapFiles`) — bounded memory for ANY archive
+    * size while `f` streams. `pathFilter` prunes BEFORE any archive opens.
     */
   def mapArchives[T: ClassTag](spark: SparkSession, glob: String,
                                pathFilter: String => Boolean = _ => true)
-                              (f: (String, Iterator[TarEntry]) => T): RDD[T] = {
-    val conf = Storage.taskConf(spark)
-    val p = new Path(glob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = Option(fs.globStatus(p)).toSeq.flatten
-      .filter(_.isFile).map(_.getPath.toString).filter(pathFilter)
-    val parallelism = math.max(1, math.min(paths.size,
-      spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(paths, parallelism).map { path =>
-      val hp = new Path(path)
-      f(hp.getName, entriesFromStream(hp.getName, hp.getFileSystem(conf.value.value).open(hp)))
-    }
-  }
+                              (f: (String, Iterator[TarEntry]) => T): RDD[T] =
+    Storage.mapFiles(spark, glob, pathFilter)((name, in) => f(name, entriesFromStream(name, in)))
 
   /** One row per entry of every archive under `glob` (`mapArchives`). */
   def explodePath(spark: SparkSession, glob: String,
@@ -129,6 +101,7 @@ object Tar {
     * `s3_object.replace(drop, '', 1)` then f'{add}{...}'): remove the FIRST
     * occurrence of `drop` anywhere in the name, then unconditionally
     * prepend `add` — even when `drop` never matched.
+    * Kept: the K3 rename the DRI SIP layout needs; only TarSpec calls it.
     */
   def substitutePrefix(name: String, drop: String, add: String): String = {
     val idx = if (drop.isEmpty) -1 else name.indexOf(drop)
@@ -136,29 +109,6 @@ object Tar {
       if (idx < 0) name
       else name.substring(0, idx) + name.substring(idx + drop.length)
     add + stripped
-  }
-
-  /** K2/K3: pack each bag's entries into `<outDir>/<bagId>.tar.gz`,
-    * streaming entries to a Hadoop stream in `orderCol` order —
-    * `flatMapSortedGroups` sorts within groups during the shuffle, so the
-    * entry order (and the recorded item list, and the archive bytes) is
-    * deterministic across runs and task retries, like the reference's
-    * caller-order tar_lib.py:96-125. Returns one row per archive with the
-    * recorded item list (name, size).
-    */
-  def packageBags(entries: Dataset[TarEntry], outDir: String,
-                  prefixDrop: String = "", prefixAdd: String = "",
-                  mtimeSeconds: Option[Long] = None,
-                  orderCol: String = "name"): Dataset[PackedArchive] = {
-    val spark = entries.sparkSession
-    import spark.implicits._
-    val hadoopConf = Storage.taskConf(spark)
-    entries.groupByKey(_.source)
-      .flatMapSortedGroups(col(orderCol)) { (bagId, it) =>
-        Iterator.single(writeArchive(hadoopConf.value.value, outDir, bagId, it.map(e => e.copy(
-          name = substitutePrefix(e.name, prefixDrop, prefixAdd),
-          mtime = mtimeSeconds.getOrElse(e.mtime)))))
-      }
   }
 
   /** Write one bag's entries, in the order given and skipping directories,
@@ -191,8 +141,7 @@ object Tar {
     // `<archive>.tar.gz.sha256` sidecar, "<hex>  <name>" like the
     // manifest rows checksum validation consumes
     val shaPath = new Path(outDir, s"$bagId.tar.gz.sha256")
-    val sout = fs.create(shaPath, true)
-    try sout.write(s"$sha  $bagId.tar.gz\n".getBytes("UTF-8")) finally sout.close()
+    Storage.writeString(fs, shaPath, s"$sha  $bagId.tar.gz\n", overwrite = true)
     PackedArchive(bagId, outPath.toString, items.result(), sha)
   }
 }

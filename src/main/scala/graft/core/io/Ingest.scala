@@ -12,6 +12,8 @@ import org.apache.spark.sql.DataFrame
   * distributed pass via `mapPartitions` — each task streams one object at
   * a time (5 MB buffer, never the whole object in memory). Results carry
   * an error channel instead of raising per row.
+  * Kept: the reference's TDR→TRE bag download; no pipeline path fetches
+  * URLs yet, so only IngestSpec calls it.
   */
 object Ingest {
 
@@ -32,32 +34,38 @@ object Ingest {
         it.map { case (url, target) =>
           val p = new Path(target)
           val fs = p.getFileSystem(hadoopConf.value.value)
+          var created = false
           var written = 0L
           try {
             if (!overwrite && fs.exists(p))
               IngestResult(url, target, 0L, "", s"target exists: $target")
             else {
               val in = java.net.URI.create(url).toURL.openStream()
-              val out = fs.create(p, overwrite)
-              val md = java.security.MessageDigest.getInstance("SHA-256")
               try {
-                val buf = new Array[Byte](ChunkSize)
-                var n = in.read(buf)
-                while (n >= 0) {
-                  out.write(buf, 0, n)
-                  md.update(buf, 0, n)
-                  written += n
-                  n = in.read(buf)
-                }
-              } finally { in.close(); out.close() }
-              IngestResult(url, target, written,
-                md.digest().map("%02x".format(_)).mkString, null)
+                val out = fs.create(p, overwrite)
+                created = true
+                val md = java.security.MessageDigest.getInstance("SHA-256")
+                try {
+                  val buf = new Array[Byte](ChunkSize)
+                  var n = in.read(buf)
+                  while (n >= 0) {
+                    out.write(buf, 0, n)
+                    md.update(buf, 0, n)
+                    written += n
+                    n = in.read(buf)
+                  }
+                } finally out.close()
+                IngestResult(url, target, written,
+                  md.digest().map("%02x".format(_)).mkString, null)
+              } finally in.close()
             }
           } catch {
             case e: Exception =>
-              // abort semantics: remove the partial object (the reference
-              // aborts the multipart upload, object_lib.py:131-140)
-              try fs.delete(p, false) catch { case _: Exception => () }
+              // abort semantics: remove the partial object this task created
+              // (the reference aborts the multipart upload,
+              // object_lib.py:131-140); a fetch that failed first leaves
+              // the existing object alone
+              if (created) try fs.delete(p, false) catch { case _: Exception => () }
               IngestResult(url, target, written, "", e.toString)
           }
         }

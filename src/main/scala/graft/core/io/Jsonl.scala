@@ -79,6 +79,8 @@ object Jsonl {
     * sink effectively exactly-once. Downstream readers see `batch_id`
     * as a discovered partition column (provenance for free). No stream
     * state, so a 100 TB backlog drains at scan throughput.
+    * Kept: the streaming form of the JSONL corpus intake (SURVEY §2.11);
+    * JsonlSpec drives it.
     */
   def streamWithDlq(spark: SparkSession, path: String, schema: StructType,
                     goodDir: String, dlqDir: String,

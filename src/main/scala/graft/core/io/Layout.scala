@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (not a post-scan `Filter`) and the scan's input files stay confined
   * to matching directories. Complements `ops.ZOrder`, which orders rows
   * WITHIN files for range-skipping on non-partition columns.
+  * Kept: SURVEY §4 partition layout at scale; no query writes a partitioned
+  * table, LayoutSpec pins the pruning.
   */
 object Layout {
 

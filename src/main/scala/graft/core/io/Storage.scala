@@ -1,10 +1,14 @@
 package graft.core.io
 
-import org.apache.hadoop.fs.Path
+import java.io.{FileNotFoundException, InputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.io.IOUtils
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
+import scala.reflect.ClassTag
 
 /** Storage-catalog operators (SURVEY §2.1 S4/S5/S8, §2.2 K1) over any
   * Hadoop-compatible filesystem (local in tests, object store at scale).
@@ -21,7 +25,10 @@ object Storage {
     spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
-  /** S4: listing under a glob → (path, name, size, mtime_ms) rows. */
+  /** S4: listing under a glob → (path, name, size, mtime_ms) rows.
+    * Kept: the reference's prefix listing; `mapFiles` lists its own glob,
+    * so only StorageSpec calls it.
+    */
   def list(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
     val p = new Path(glob)
@@ -32,77 +39,59 @@ object Storage {
       .toDF("path", "name", "size", "mtime_ms")
   }
 
-  /** S4: existence probe. */
+  /** S4: existence probe. Kept: the reference's head-object check; only
+    * specs call it.
+    */
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** S5 driver-side: max numeric child-folder number under a prefix
-    * (retry discovery, object_lib.py:54-85 — int max, not the reference's
-    * lexicographic-string max).
+  /** Spread the files under `glob` that pass `pathFilter` (driver-side
+    * listing, pruned before anything opens) over the cores with
+    * `parallelize` — no shuffle of the list — and apply `f` in the task to
+    * (file name, open stream). One `taskConf` broadcast per call.
     */
-  def maxNumericChildFolder(spark: SparkSession, dir: String): Option[Int] = {
-    val p = new Path(dir)
+  def mapFiles[T: ClassTag](spark: SparkSession, glob: String,
+                            pathFilter: String => Boolean = _ => true)
+                           (f: (String, InputStream) => T): RDD[T] = {
+    val conf = taskConf(spark)
+    val p = new Path(glob)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val nums = fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.matches("[0-9]+")).map(_.toInt)
-      if (nums.isEmpty) None else Some(nums.max)
+    val paths = Option(fs.globStatus(p)).toSeq.flatten
+      .filter(_.isFile).map(_.getPath.toString).filter(pathFilter)
+    val parallelism = math.max(1, math.min(paths.size,
+      spark.sparkContext.defaultParallelism))
+    spark.sparkContext.parallelize(paths, parallelism).map { path =>
+      val hp = new Path(path)
+      f(hp.getName, hp.getFileSystem(conf.value.value).open(hp))
     }
   }
 
-  /** K1: write a string object, failing if the key exists (the reference's
-    * idempotency guard, object_lib.py:173-209 — exactly ErrorIfExists).
+  /** S5: max numeric child-folder number under `dir` (retry discovery,
+    * object_lib.py:54-85 — int max, not the reference's lexicographic
+    * string max, where '9' > '10').
     */
-  def writeStringErrorIfExists(spark: SparkSession, path: String, content: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, false)   // overwrite=false → FileAlreadyExistsException
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def maxNumericChildFolder(fs: FileSystem, dir: Path): Option[Int] =
+    if (!fs.exists(dir)) None
+    else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.matches("[0-9]+")).map(_.toInt).maxOption
 
-  /** S8: error-wrapped read — missing objects become error-channel rows
-    * instead of raising (object_lib.py:260-274).
+  /** S8: error-wrapped read — a missing object is a `Left` for the error
+    * channel instead of an exception (object_lib.py:260-274).
     */
-  def readStringOrError(spark: SparkSession, path: String): Either[String, String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Left(s"object not found: $path")
-    else {
+  def readString(fs: FileSystem, p: Path): Either[String, String] =
+    try {
       val in = fs.open(p)
-      try Right(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
-  }
-}
+      try Right(new String(IOUtils.readFullyToByteArray(in), UTF_8)) finally in.close()
+    } catch { case _: FileNotFoundException => Left(s"object not found: $p") }
 
-/** A5 scale path: SHA-256 over objects too large for one row. Rows carry
-  * (file, chunkIdx, bytes); chunks fold through one MessageDigest in
-  * chunkIdx order per file via `flatMapSortedGroups` — Spark sorts within
-  * groups during the shuffle (no per-group buffering), so memory is one
-  * chunk at a time regardless of object size. This replaces the builtin
-  * `sha2(content)` only when whole-object rows are infeasible
-  * (s3_lib/s3_lib/checksum_lib.py:101-119 streams 5 MB chunks the same way).
-  */
-object ChunkedSha256 {
-
-  def forChunks(chunks: DataFrame, fileCol: String = "file",
-                idxCol: String = "chunk_idx", bytesCol: String = "bytes"): DataFrame = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks.select(col(fileCol).as("file"), col(idxCol).as("chunk_idx"),
-      col(bytesCol).as("bytes"))
-      .as[(String, Long, Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapSortedGroups(col("chunk_idx")) { (file, it) =>
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        it.foreach(r => md.update(r._3))
-        Iterator((file, md.digest().map("%02x".format(_)).mkString))
-      }
-      .toDF("file", "sha256")
+  /** K1: write a string object. With `overwrite = false` an existing key
+    * fails with `FileAlreadyExistsException` (the reference's idempotency
+    * guard, object_lib.py:173-209).
+    */
+  def writeString(fs: FileSystem, p: Path, content: String, overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(content.getBytes(UTF_8)) finally out.close()
   }
 }

@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
   * becomes a declarative projection over `spark.read.text`, so Catalyst can
   * prune/pushdown and the same logic applies to a column of lines derived
   * any other way (e.g. exploded from an archive).
+  * Kept: the `read*` forms read S1–S3 side files straight from storage; the
+  * bag path parses the same lines in `checkBag`, so only specs call them.
   */
 object TextTables {
 
@@ -67,12 +69,4 @@ object TextTables {
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .csv(path)
-
-  /** S5 — max numeric child-folder under a prefix (retry discovery;
-    * reference: s3_lib/s3_lib/object_lib.py:54-85). Reference bug NOT
-    * replicated: it takes a lexicographic string max ('9' > '10'); we cast
-    * to int (SURVEY §4 "latent bugs").
-    */
-  def maxNumericChild(keys: DataFrame, keyCol: Column, prefixPattern: String): Column =
-    max(regexp_extract(keyCol, prefixPattern, 1).cast("int"))
 }

@@ -52,8 +52,12 @@ object TreEvents {
     StructField("consignment-type", StringType),
     StructField("number-of-retries", IntegerType)))
 
+  /** Kept: the v1 flat message of PAPER.md §0; the stream decode reads v2
+    * events only, TreEventsSpec pins this one.
+    */
   def parseV1(jsonCol: Column): Column = from_json(jsonCol, v1Schema)
 
+  /** Kept: the validation half of the v1 decode (see `parseV1`). */
   def v1ValidationErrors(m: Column): Column = array_compact(array(
     when(m.isNull, lit("message: not valid JSON")),
     when(m.getField("consignment-reference").isNull, lit("consignment-reference: missing")),
@@ -71,6 +75,8 @@ object TreEvents {
 
   /** SQS record body → SNS Message → TRE event: the double JSON decode of
     * the stream intake (S9; tre_forward.py:55-59).
+    * Kept: the SQS→SNS→TRE double decode (S9); the file-drop stream carries
+    * bare events, TreEventsSpec pins this one.
     */
   def parseSqsRecord(bodyCol: Column): Column = {
     val snsSchema = StructType(Seq(

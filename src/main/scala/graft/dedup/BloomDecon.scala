@@ -59,6 +59,8 @@ object BloomDecon {
 
   /** The original declarative probe — the SQL-replayable rendering the
     * parity spec pins [[probe]] against; not used on hot paths.
+    * Kept: declarative parity rendering of the native Bloom probe, pinned by
+    * CorpusOpsSpec.
     */
   def probeDeclarative(shArr: Column, bits: Array[Long], m: Int, k: Int): Column = {
     val bitsLit = typedLit(bits.toSeq)

@@ -346,6 +346,8 @@ object Dedup {
     * — any equality-preserving window key yields identical profiles —
     * pinned by spec; kept as the reference the native rolling-hash
     * expression is audited against.
+    * Kept: declarative parity rendering of the native span profile, pinned
+    * by ClusteringSpec.
     */
   private[graft] def dyadicSpanProfileDeclarative(
       docs: DataFrame, levels: Seq[Int] = Seq(8, 16, 32, 64),
@@ -409,19 +411,6 @@ object Dedup {
       .select(col("id"),
         coalesce(col("max_dup_len"), lit(0)).as("max_dup_len"),
         coalesce(col("n_dup_min"), lit(0L)).as("n_dup_min"))
-  }
-
-  /** MinHash signature as an array of k string-min hashes:
-    * sig_s = min over shingles of md5(s || ':' || shingle). String-min over
-    * md5 hex is an order statistic — deterministic and SQL-mirrorable
-    * (the classic (a·h+b) mod p permutation family needs bigint mults that
-    * overflow differently across engines).
-    */
-  def minhashSignature(docs: DataFrame, n: Int, k: Int,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = array_distinct(TextAnalysis.shingles(col(textCol), n))
-    spread(docs).select(col(idCol).as("id"), graft.functions.minhash_sig(sh, k).as("sig"),
-      size(sh).as("n_sh"))
   }
 
   /** Benchmark decontamination: flag training docs sharing ≥ `minOverlap`
@@ -720,6 +709,8 @@ object Dedup {
   /** Corpus-level dedup: near-dup pairs (any detector) → clusters → keep
     * one representative (min id) per cluster; docs in no pair survive
     * untouched. Returns the deduplicated corpus.
+    * Kept: the pairs→clusters→representative step (SURVEY §2.11) any
+    * detector feeds; TrainSpec drives it.
     */
   def dedupeByPairs(docs: DataFrame, pairs: DataFrame,
                     idCol: String = "doc_id"): DataFrame = {
@@ -738,6 +729,8 @@ object Dedup {
     * capped buckets drop BEFORE the self-join, and a true near-dup pair
     * recollides in another band unless degenerate in all four. Exact
     * audit = explicit `maxBucket = Int.MaxValue` (skips the count pass).
+    * Kept: SimHash near-dup (SURVEY §2.11); the queries use the MinHash/OPH
+    * paths, TrainSpec pins this one.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int,
                    idCol: String = "doc_id", textCol: String = "text",

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.io.Storage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -132,8 +133,7 @@ object DedupIndex {
         Seq("shingle"), "left_anti")
       .groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
       .write.mode("overwrite").parquet(s"$indexDir/sizes/base")
-    val out = fs.create(new Path(s"$indexDir/_sizes_maxdf"), true)
-    try out.write(maxDf.toString.getBytes("UTF-8")) finally out.close()
+    Storage.writeString(fs, new Path(s"$indexDir/_sizes_maxdf"), maxDf.toString, overwrite = true)
   }
 
   /** Ensure the admission sidecars exist and were capped under THIS
@@ -148,12 +148,8 @@ object DedupIndex {
     recover(spark, s"$indexDir/sizes")
     val fs = fsOf(spark, indexDir)
     val tag = new Path(s"$indexDir/_sizes_maxdf")
-    val tagOk = fs.exists(tag) && {
-      val in = fs.open(tag)
-      val s = try scala.io.Source.fromInputStream(in).mkString
-        finally in.close()
-      scala.util.Try(s.trim.toLong).toOption.contains(maxDf)
-    }
+    val tagOk = Storage.readString(fs, tag).toOption
+      .exists(s => scala.util.Try(s.trim.toLong).toOption.contains(maxDf))
     if (fs.exists(new Path(s"$indexDir/df")) &&
         fs.exists(new Path(s"$indexDir/sizes")) && tagOk) return
     writeSidecarsFrom(spark, indexDir,

@@ -1,6 +1,6 @@
 package graft.mm
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,32 +31,12 @@ object Multimodal {
   // KB-scale so memory is bounded by one image per in-flight task.
   javax.imageio.ImageIO.setUseCache(false)
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("content", BinaryType),
-    StructField("mime", StringType),
-    StructField("meta", StructType(Seq(
-      StructField("byte_len", LongType),
-      StructField("sha256", StringType))))))
-
   val decodedSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("width", IntegerType),
     StructField("height", IntegerType),
     StructField("channels", IntegerType),
     StructField("frames", ArrayType(StringType))))
-
-  /** Build a structurally valid PNG prefix (magic + IHDR length/tag +
-    * 4-byte big-endian width/height) as a binary column — the fixture
-    * side of header-parse testing. Pure hex/unhex builtins, no codec.
-    */
-  def pngHeader(width: org.apache.spark.sql.Column,
-                height: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    unhex(concat(
-      lit("89504E470D0A1A0A"),    // PNG magic
-      lit("0000000D49484452"),    // IHDR chunk length (13) + "IHDR"
-      lpad(hex(width.cast("long")), 8, "0"),
-      lpad(hex(height.cast("long")), 8, "0")))
 
   /** Parse width/height from PNG bytes WITHOUT a codec: IHDR's 4-byte
     * big-endian dims sit at fixed offsets (bytes 17-24), so the metadata
@@ -793,6 +773,8 @@ object Multimodal {
     * sample rate, height the sample count, frames are md5s of the first
     * ≤8 `frameStride`-sample windows. Other content falls back to the
     * deterministic video stub.
+    * Kept: the one-call multimodal decode stage (SURVEY §2.11); the queries
+    * call the per-type stages, TrainSpec drives this one.
     */
   def decode(media: DataFrame, frameStride: Int = 50): DataFrame = {
     val enc = org.apache.spark.sql.Encoders.row(decodedSchema)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * a sort-merge join with NO shuffle exchange — at 100 TB the dominant
   * cost of repeated joins is the repartition, and bucketing pays it once
   * at write time.
+  * Kept: SURVEY §4 shuffle-free repeated joins; no query joins bucketed
+  * tables, BucketingSpec pins the plan.
   */
 object Bucketing {
 

@@ -41,6 +41,7 @@ object Compaction {
   /** Per-group rollup of a plan: how many files and bytes each rewrite
     * group carries (all groups except a directory's last hold ≥ the
     * target minus one file, by construction).
+    * Kept: the rollup CompactionSpec checks the packing bound with.
     */
   def groupStats(planned: DataFrame): DataFrame =
     planned.groupBy(col("dir"), col("grp"))

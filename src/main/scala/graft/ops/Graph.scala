@@ -280,6 +280,8 @@ object Graph {
     * Scale shape per round: one map-combined degree aggregate + two
     * left-semi joins on the endpoint keys — never more than the edge
     * list on the wire.
+    * Kept: fixed-k form of the peeling loop the `kcoreMeanFrac` query runs;
+    * GraphSpec pins it.
     */
   def kcore(pairs: DataFrame, k: Int, rounds: Int): DataFrame =
     kcoreWith(pairs, p => p.sparkSession.range(1).select(lit(k.toLong).as("k")),

@@ -1,7 +1,7 @@
 package graft.ops.drisip
 
 import graft.functions.{percent_encode, replace_first}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Batch/series naming derived from the consignment reference
@@ -17,12 +17,6 @@ final case class DriConfig(consignmentReference: String, consignmentSeries: Stri
   val series: String = consignmentSeries.replace(" ", "_")
   val internalPrefix: String = s"$batch/$series/"
   val identifierPrefix: String = s"file:/$internalPrefix"
-  val metadataInSip: String = internalPrefix + "metadata.csv"
-  val closureInSip: String = internalPrefix + "closure.csv"
-  val metadataSchemaInSip: String = internalPrefix + "metadata.csvs"
-  val closureSchemaInSip: String = internalPrefix + "closure.csvs"
-  val metadataChecksumInSip: String = internalPrefix + "metadata.csv.sha256"
-  val closureChecksumInSip: String = internalPrefix + "closure.csv.sha256"
 }
 
 /** The DRI pre-ingest SIP transform (SURVEY §3.2, the flagship slice):
@@ -38,6 +32,8 @@ final case class DriConfig(consignmentReference: String, consignmentSeries: Stri
   * channel instead). The checksum lookup is a broadcast left join against
   * the manifest (the reference is an O(rows×manifest) linear scan,
   * tre_bagit.py:78-81).
+  * Kept: the DRI pre-ingest SIP transform (SURVEY §3.2); no pipeline path
+  * emits SIPs yet, DriSipSpec pins it against the reference goldens.
   */
 object DriSip {
 
@@ -165,6 +161,7 @@ object DriSip {
   * contains a comma, quote, CR or LF; quotes double. Spark's csv writer
   * has different quoting defaults, so rows are rendered as strings
   * (still distributed — one string column, written via `text`).
+  * Kept: renders the DRI SIP CSVs (see `DriSip`).
   */
 object CsvRender {
 
@@ -188,14 +185,5 @@ object CsvRender {
       .select(lines(df, fields).as("line"))
       .collect().map(_.getString(0))
     (fields.mkString(",") +: body).mkString("", "\n", "\n")
-  }
-
-  /** Distributed render: write `header`+lines as text at scale (one file
-    * per partition; use for big tables where byte-exact single-file output
-    * isn't required).
-    */
-  def toLineDs(df: DataFrame, fields: Seq[String]): Dataset[String] = {
-    import df.sparkSession.implicits._
-    df.select(lines(df, fields).as("line")).as[String]
   }
 }

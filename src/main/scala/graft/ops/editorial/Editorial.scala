@@ -78,7 +78,10 @@ object Editorial {
       .drop("_ctx_blocks", "_out_blocks")
   }
 
-  /** Mandatory-field validation (tre_editorial_integration.py:197-242). */
+  /** Mandatory-field validation (tre_editorial_integration.py:197-242).
+    * Kept: the reference's check over located parser events; `runFull`
+    * sets these fields itself, so only EditorialSpec calls it.
+    */
   def fieldErrors: Column = {
     def miss(c: Column, name: String) = when(c.isNull, lit(s"missing $name"))
     array_compact(array(
@@ -115,6 +118,8 @@ object Editorial {
     * {TRE: versions+payload, PARSER: parser metadata ⊕ error-messages,
     * TDR: bag-info}. `parserMetadataJson` is the raw metadata.json string;
     * `bagInfoJson` the bag-info key/value map as JSON.
+    * Kept: the full build_tre_metadata over located parser events; `runFull`
+    * writes the reduced stub-parser form.
     */
   def treMetadata(metadataFilename: Column, parserMetadataJson: Column,
                   bagInfoJson: Column, environment: String, version: String,
@@ -149,6 +154,8 @@ object Editorial {
   /** Files to bundle into the editorial tar.gz (process(),
     * tre_editorial_integration.py:253-279): metadata file, xml, log,
     * judgment doc, images — nulls skipped.
+    * Kept: the reference's bundle list with parser xml/log/images; the stub
+    * parser emits none, so `runFull` bundles metadata + judgment doc.
     */
   def tarList(prefix: Column, metadataKey: Column): Column =
     array_compact(concat(
@@ -173,14 +180,15 @@ object Editorial {
       .otherwise(concat(lit("file://"), path))
 
   /** Editorial output message (tre_editorial_integration.py:311-324). */
-  def outputMessage(tarGzUrl: Column, tarGzSha256Url: Column, bucket: Column,
-                    tarGzKey: Column, itemsJson: Column, retries: Column): Column =
+  def outputMessage(reference: Column, consignmentType: Column, tarGzUrl: Column,
+                    tarGzSha256Url: Column, bucket: Column, tarGzKey: Column,
+                    itemsJson: Column, retries: Column): Column =
     to_json(struct(
       struct(
-        col("parser_inputs.consignment-reference").as("consignment-reference"),
+        reference.as("consignment-reference"),
         tarGzUrl.as("s3-folder-url"),
         tarGzSha256Url.as("s3-sha256-url"),
-        col("context.consignment-type").as("consignment-type"),
+        consignmentType.as("consignment-type"),
         retries.as("number-of-retries")).as("editorial-output"),
       struct(
         bucket.as("bucket"),
@@ -190,6 +198,8 @@ object Editorial {
   /** Retry validation (RetryHandler, tre_editorial_integration.py:472-542):
     * the incoming retry number must be exactly lastRetry+1; first runs must
     * find no prior output folder. Pure column logic over a catalog listing.
+    * Kept: the column form of the RetryHandler check over a listing;
+    * `RetryLoop.handleRetry` runs it per consignment.
     */
   def retryErrors(incomingRetries: Column, lastRetry: Column): Column =
     array_compact(array(

@@ -1,6 +1,6 @@
 package graft.ops.editorial
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,41 +9,20 @@ import org.apache.spark.sql.types._
   * lambda_functions/tre-prepare-parser-input/prepare_parser_input.py:174-188
   * and testing/parser_testing/test_parser_lambda_fn.py:82-134).
   *
-  * The engine treats the parser as an exchangeable per-row service invoked
-  * batch-wise with `mapPartitions`: in → `{context, parser-inputs}` rows,
-  * out → `{parser-outputs}` rows (xml/metadata/images/log/error-messages).
-  * This deterministic STUB honours the output schema exactly — swap
-  * `parse` for a real docx→XML invocation without touching the plan.
+  * The engine treats the parser as an exchangeable per-row service: in →
+  * (consignment reference, judgment document), out → a `{parser-outputs}`
+  * struct (xml/metadata/images/log/error-messages). This deterministic
+  * STUB honours the output schema exactly; a real docx→XML invocation
+  * replaces `outputStruct` (e.g. batch-wise in `mapPartitions`) without
+  * touching the rest of the plan.
   * Documents whose name contains "invalid" produce the error-path shape
   * (error-messages non-empty, nullable outputs null), mirroring the
   * reference's fail-corpus tests (test_parser_error_path.py:23-60).
   */
 object ParserStub {
 
-  val outputSchema: StructType = StructType(Seq(
-    StructField("consignment_reference", StringType),
-    StructField("xml", StringType),
-    StructField("metadata", StringType),
-    StructField("images", ArrayType(StringType)),
-    StructField("attachments", ArrayType(StringType)),
-    StructField("log", StringType),
-    StructField("error_messages", ArrayType(StringType))))
-
-  /** One parser invocation (pure, deterministic). */
-  def parse(reference: String, judgmentDoc: String): Row = {
-    if (judgmentDoc.contains("invalid"))
-      Row(reference, null, null, Seq.empty[String], Seq.empty[String],
-        "parser.log", Seq(s"Unable to parse document '$judgmentDoc'"))
-    else
-      Row(reference, s"$reference.xml", "metadata.json",
-        Seq("image-1.png"), Seq.empty[String], "parser.log", Seq.empty[String])
-  }
-
-  /** Column-level rendering of the same contract (for fully-declarative
-    * pipelines; identical semantics to `parse`).
-    */
-  def outputStruct(reference: org.apache.spark.sql.Column,
-                   judgmentDoc: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  /** The parser-outputs struct for one (reference, judgment document). */
+  def outputStruct(reference: Column, judgmentDoc: Column): Column = {
     val err = struct(
       lit(null).cast(StringType).as("xml"),
       lit(null).cast(StringType).as("metadata"),
@@ -60,19 +39,5 @@ object ParserStub {
       lit("parser.log").as("log"),
       array().cast(ArrayType(StringType)).as("error_messages"))
     when(judgmentDoc.contains("invalid"), err).otherwise(ok)
-  }
-
-  /** Batch-wise invocation over located parser events
-    * (Editorial.locateBlocks output): the mapPartitions seam where a real
-    * parser container/process call goes.
-    */
-  def run(located: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(outputSchema)
-    located.select(
-      col("parser_inputs.consignment-reference").as("ref"),
-      col("context.judgment-document").as("doc"))
-      .mapPartitions { it =>
-        it.map(r => parse(r.getString(0), r.getString(1)))
-      }(enc)
   }
 }

@@ -1,7 +1,8 @@
 package graft.ops.editorial
 
+import graft.core.io.Storage
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -68,28 +69,6 @@ object RetryLoop {
                   tdrRetry: Int, edRetry: Int): Path =
     new Path(stateRoot, s"$consignmentType/$reference/$tdrRetry/$edRetry/output-message.json")
 
-  private def maxNumericChild(fs: FileSystem, dir: Path): Option[Int] = {
-    if (!fs.exists(dir)) None
-    else {
-      val nums = fs.listStatus(dir).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.matches("[0-9]+")).map(_.toInt)
-      if (nums.isEmpty) None else Some(nums.max)
-    }
-  }
-
-  private def readString(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  private def writeString(fs: FileSystem, p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** Rewrite the `number-of-retries` field inside `editorial-output`
     * (the reference mutates the loaded dict in place). The message is our
     * own render, so the field shape is fixed.
@@ -103,27 +82,30 @@ object RetryLoop {
     * folder, then the last editorial retry under it; require
     * incoming == last+1; reload the saved output-message.json, bump its
     * retry count, save it under the new folder. Returns the new message
-    * or the reference's error text.
+    * or the reference's error text (a missing saved message included).
     */
   def handleRetry(conf: Configuration, stateRoot: String, consignmentType: String,
                   reference: String, incoming: Int): Either[String, String] = {
     val root = new Path(stateRoot, s"$consignmentType/$reference")
     val fs = root.getFileSystem(conf)
-    maxNumericChild(fs, root) match {
+    Storage.maxNumericChildFolder(fs, root) match {
       case None => Left("No TDR output data found")
       case Some(tdr) =>
         val edRoot = new Path(root, tdr.toString)
-        maxNumericChild(fs, edRoot) match {
+        Storage.maxNumericChildFolder(fs, edRoot) match {
           case None => Left("No Editorial output data found")
           case Some(last) =>
             val expected = last + 1
             if (incoming != expected)
               Left(s"""Expected number-of-retries to be "$expected" but got "$incoming"""")
             else {
-              val prior = readString(fs, new Path(edRoot, s"$last/output-message.json"))
-              val bumped = bumpRetries(prior, expected)
-              writeString(fs, new Path(edRoot, s"$expected/output-message.json"), bumped)
-              Right(bumped)
+              val prior = Storage.readString(fs, new Path(edRoot, s"$last/output-message.json"))
+              prior.map { msg =>
+                val bumped = bumpRetries(msg, expected)
+                Storage.writeString(fs, new Path(edRoot, s"$expected/output-message.json"), bumped,
+                  overwrite = true)
+                bumped
+              }
             }
         }
     }
@@ -136,8 +118,7 @@ object RetryLoop {
   def seedState(conf: Configuration, stateRoot: String, consignmentType: String,
                 reference: String, message: String): String = {
     val p = messagePath(stateRoot, consignmentType, reference, 0, 0)
-    val fs = p.getFileSystem(conf)
-    writeString(fs, p, message)
+    Storage.writeString(p.getFileSystem(conf), p, message, overwrite = true)
     p.toString
   }
 }

@@ -36,6 +36,7 @@ object BagitValidate {
     * Full outer join also surfaces manifest entries with no file
     * (`missing_file`) and files with no manifest entry (`not_in_manifest`).
     * Reference per-item verify: s3_lib/s3_lib/checksum_lib.py:81-99,121-154.
+    * Kept: join-operator reference for `checkBag` (J3), pinned by BagCheckSpec.
     */
   def verifyChecksums(files: DataFrame, manifest: DataFrame): DataFrame = {
     // disjoint column names before the join: both inputs may derive from
@@ -62,6 +63,7 @@ object BagitValidate {
     * `1 + |root| + |data|` must equal `|extracted|` (the root manifest
     * lists everything except itself — the reference's "Catch-22" comment),
     * and `|data|` must equal the extracted files under `data/`.
+    * Kept: join-operator reference for `checkBag` (A1), pinned by BagCheckSpec.
     */
   def reconcileCounts(rootManifest: DataFrame, dataManifest: DataFrame,
                       extracted: DataFrame, dataDir: String = "data/"): DataFrame = {
@@ -80,6 +82,7 @@ object BagitValidate {
   /** U1/U2: set-difference checks, strictly stronger than the reference's
     * count equality (SURVEY §4 "latent bugs"): per bag, names listed but
     * not extracted and vice versa.
+    * Kept: join-operator reference for `checkBag`, pinned by BagCheckSpec.
     */
   def setDifferences(listing: DataFrame, extracted: DataFrame): DataFrame = {
     val l = listing.select(col("bagId"), col("name"))
@@ -92,6 +95,7 @@ object BagitValidate {
   /** A4: a checksum side-file must contain exactly one entry whose basename
     * matches the expected archive name
     * (tre_vb_validate_bagit.py:100-116; tre_bagit_checksum_validation.py:136-152).
+    * Kept: join-operator reference for `checkBag` (A4), pinned by BagCheckSpec.
     */
   def singleEntryCheck(manifest: DataFrame, expectedBasename: String): DataFrame =
     manifest.groupBy("bagId").agg(

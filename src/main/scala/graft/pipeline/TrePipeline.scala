@@ -51,7 +51,9 @@ object TrePipeline {
       (name, entries) => BagitValidate.checkBag(name.stripSuffix(".tar.gz"), entries)))
   }
 
-  /** Run validation over a directory of `<reference>.tar.gz` bags. */
+  /** Run validation over a directory of `<reference>.tar.gz` bags.
+    * Kept: the validation-only entry (§3.1 steps 3–4) the stream specs drive.
+    */
   def run(spark: SparkSession, bagsGlob: String,
           environment: String = "dev"): PipelineResult =
     validation(spark, bagsGlob, scan(spark, bagsGlob).cache(), environment)
@@ -144,36 +146,18 @@ object TrePipeline {
     // K8 demonstrated end-to-end: the per-bag output message carries the
     // packed archive's URL and its .sha256 sidecar URL through the presign
     // seam (outputMessage shape, tre_editorial_integration.py:311-324)
-    val outputMessages = bundles.select(
-      col("bagId"),
-      Editorial.presignUrl(col("path")).as("s3_folder_url"),
-      Editorial.presignUrl(concat(col("path"), lit(".sha256"))).as("s3_sha256_url"),
-      col("sha256"),
-      to_json(struct(
-        struct(
-          col("bagId").as("consignment-reference"),
-          Editorial.presignUrl(col("path")).as("s3-folder-url"),
-          Editorial.presignUrl(concat(col("path"), lit(".sha256"))).as("s3-sha256-url"),
-          lit("judgment").as("consignment-type"),
-          lit(0).as("number-of-retries")).as("editorial-output"),
-        struct(
-          lit("local").as("bucket"),
-          concat(col("bagId"), lit(".tar.gz")).as("key"),
-          to_json(col("items")).as("items")).as("tar-gz"))).as("output_message"))
+    val url = Editorial.presignUrl(col("path"))
+    val shaUrl = Editorial.presignUrl(concat(col("path"), lit(".sha256")))
+    val outputMessages = bundles.select(col("bagId"), url.as("s3_folder_url"),
+      shaUrl.as("s3_sha256_url"), col("sha256"),
+      Editorial.outputMessage(col("bagId"), lit("judgment"), url, shaUrl, lit("local"),
+        concat(col("bagId"), lit(".tar.gz")), to_json(col("items")), lit(0))
+        .as("output_message"))
 
     FullPipelineResult(validation(spark, bagsGlob, bags, environment), parserInputs,
       docs.select(col("bagId"), col("judgment_doc"), col("po").as("parser_outputs")),
       editorial, bundles, outputMessages)
   }
-
-  /** Initial editorial output message (outputMessage shape,
-    * tre_editorial_integration.py:311-324) for the attempt-0 state seed.
-    */
-  private def initialMessage(bag: String, consignmentType: String, retries: Int): String =
-    s"""{"editorial-output":{"consignment-reference":"$bag",""" +
-      s""""s3-folder-url":"file://$bag.tar.gz","s3-sha256-url":"file://$bag.tar.gz.sha256",""" +
-      s""""consignment-type":"$consignmentType","number-of-retries":$retries},""" +
-      s""""tar-gz":{"bucket":"local","key":"$bag.tar.gz","items":"[]"}}"""
 
   /** §3.1 with the retry protocol wired end-to-end (RetryHandler
     * tre_editorial_integration.py:432-542 + the Step Function's retry-limit
@@ -202,18 +186,22 @@ object TrePipeline {
                      consignmentType: String = "judgment",
                      onAttempt: Int => Unit = _ => ()): DataFrame = {
     import spark.implicits._
-    import graft.ops.editorial.RetryLoop
+    import graft.ops.editorial.{Editorial, RetryLoop}
 
     val hadoopConf = Storage.taskConf(spark)
     val state = stateDir
     val ctype = consignmentType
 
-    // attempt 0: validate everything, seed state (one task per bag)
-    val attempt0 = scan(spark, bagsGlob).select(col("bagId"), col("ok"))
-      .as[(String, Boolean)]
-      .map { case (bag, ok) =>
-        val retries = if (ok) 0 else 1   // bumped on error, ready for resubmit
-        val msg = initialMessage(bag, ctype, retries)
+    // attempt 0: validate everything, seed state (one task per bag) with
+    // the initial editorial output message, retries bumped to 1 on error
+    // (ready for resubmit)
+    val archive = concat(col("bagId"), lit(".tar.gz"))
+    val attempt0 = scan(spark, bagsGlob)
+      .select(col("bagId"), col("ok"), Editorial.outputMessage(col("bagId"), lit(ctype),
+        concat(lit("file://"), archive), concat(lit("file://"), archive, lit(".sha256")),
+        lit("local"), archive, lit("[]"), when(col("ok"), 0).otherwise(1)))
+      .as[(String, Boolean, String)]
+      .map { case (bag, ok, msg) =>
         val path = RetryLoop.seedState(hadoopConf.value.value, state, ctype, bag, msg)
         (bag, 0, 0, if (ok) "ok" else "retry", path, msg)
       }

@@ -1185,7 +1185,6 @@ object TrainQueries {
         val gt = expr("concat(text, repeat(' #', CAST(doc_id % 12 AS INT)), " +
           "repeat(' ...', CAST(doc_id % 7 AS INT)), " +
           "repeat(' 12345', CAST(doc_id % 5 AS INT)))")
-        val toks = regexp_extract_all(lower(gt), lit("[a-z0-9]+"), lit(0))
         // Gopher's published list is (the, be, to, of, and, that, have,
         // with); the fixture swaps in the corpus's actual function words
         // so the rule discriminates — the rule SHAPE (≥2 distinct required

@@ -463,22 +463,15 @@ object IvfIndex {
     */
   private[sim] def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
                           indexDir: String, parts: Seq[String]): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$indexDir/_rebuild_swap"), true)
-    try out.write(parts.mkString(",").getBytes("UTF-8")) finally out.close()
+    graft.core.io.Storage.writeString(fs, new org.apache.hadoop.fs.Path(s"$indexDir/_rebuild_swap"),
+      parts.mkString(","), overwrite = true)
   }
 
   private[sim] def readMarkerParts(fs: org.apache.hadoop.fs.FileSystem,
                               indexDir: String): Option[Seq[String]] = {
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_rebuild_swap")
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val s = try scala.io.Source.fromInputStream(in).mkString
-        finally in.close()
-      val ps = s.trim.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      if (ps.isEmpty) None else Some(ps)
-    }
+    graft.core.io.Storage.readString(fs, marker).toOption
+      .map(_.trim.split(",").map(_.trim).filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
   }
 
   /** One guarded swap step for artifact `d`: rename canonical aside and

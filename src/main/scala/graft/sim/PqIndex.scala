@@ -285,6 +285,8 @@ object PqIndex {
   /** Close the maintenance loop for the memory-scale store: consult the
     * [[health]] fat-cell policy and [[rebuild]] from `corpus` when due.
     * Returns whether a rebuild ran.
+    * Kept: the store maintenance loop (health → rebuild); the queries
+    * rebuild explicitly, the index specs drive this one.
     */
   def rebuildIfNeeded(spark: SparkSession, indexDir: String,
                       corpus: DataFrame,

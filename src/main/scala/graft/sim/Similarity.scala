@@ -77,10 +77,6 @@ object Similarity {
     */
   def round6(c: Column): Column = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** All pairs (i<j) with dot ≥ threshold — embedding near-dup detection.
     *
     * Pairs are enumerated by triangle blocking: rows hash into `blocks`
@@ -89,6 +85,8 @@ object Similarity {
     * product with an i<j post-filter — half the candidate pairs and a
     * better join operator). Exact same result set; `lshTopK` is the
     * approximate path when even n²/2 is prohibitive.
+    * Kept: exact embedding near-dup baseline the LSH/IVF paths are checked
+    * against in TrainSpec.
     */
   def nearDupPairs(emb: DataFrame, threshold: Double,
                    idCol: String = "vec_id", vecCol: String = "embedding",
@@ -470,6 +468,8 @@ object Similarity {
     * dot(v, plane_p), planes built deterministically from md5 parity
     * (component d of plane (table,p) is +1 iff the (d%32)-th hex nibble of
     * md5("<table>:<p>:<d/32>") is ≥ 8). SQL-mirrorable, no RNG state.
+    * Kept: declarative parity rendering of the native `lsh_sig`, pinned by
+    * TrainSpec.
     */
   def lshSignature(vec: Column, table: Int, planes: Int, dims: Int): Column = {
     val bits = transform(sequence(lit(0), lit(planes - 1)), p => {

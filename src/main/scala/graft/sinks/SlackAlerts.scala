@@ -3,35 +3,11 @@ package graft.sinks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Outbound sinks (SURVEY §2.2 K4–K7) as pluggable emitters. The reference
-  * posts to SNS/Slack over HTTP; in this engine those are `foreachBatch`
-  * targets behind one interface, so tests and offline runs swap in a
-  * collecting emitter.
-  */
-trait Emitter extends Serializable {
-  /** K4: publish a message with attributes to a topic/queue. */
-  def publish(topic: String, message: String, attributes: Map[String, String]): Unit
-}
-
-/** Collects messages in memory (tests / dry runs). */
-final class CollectingEmitter extends Emitter {
-  val sent = scala.collection.mutable.ArrayBuffer[(String, String, Map[String, String])]()
-  override def publish(topic: String, message: String,
-                       attributes: Map[String, String]): Unit =
-    sent.synchronized { sent += ((topic, message, attributes)) }
-}
-
-/** Logs messages (production default when no HTTP egress is configured). */
-final class LogEmitter extends Emitter {
-  @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  override def publish(topic: String, message: String,
-                       attributes: Map[String, String]): Unit =
-    log.info(s"publish topic=$topic attrs=$attributes message=$message")
-}
-
 /** K6: Slack state-machine status message formatting
   * (tre_slack_alerts.py:8-49): severity icon + environment + execution
   * detail lines. Pure column logic so alerts batch through the engine.
+  * Kept: the reference's Slack alert Lambdas; no pipeline path posts
+  * alerts, so only StorageSpec calls it.
   */
 object SlackAlerts {
 
@@ -50,6 +26,7 @@ object SlackAlerts {
 
   /** K7: DLQ alert decode — source queue + topic from the record ARNs
     * (tre_dlq_slack_alerts.py:11-37: resource = arn.split(':')[5]).
+    * Kept: the reference's DLQ alert Lambda (see above).
     */
   def dlqAlert(df: DataFrame, env: String): DataFrame =
     df.withColumn("queue", split(col("event_source_arn"), ":").getItem(5))

@@ -11,7 +11,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{StructField, StructType, StringType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector for the reference's checksum-manifest format
   * (S1: fixed-width `64-hex-digest  path` lines —

@@ -198,26 +198,14 @@ object Warc {
       }
     }
 
-  /** Full-scan read of every WARC file matching `glob`: one task per
-    * file, `GZIPInputStream` walks the concatenated members, memory = one
-    * record.
+  /** Full-scan read of every WARC file matching `glob` (`Storage.mapFiles`,
+    * no shuffle): `GZIPInputStream` walks the concatenated members,
+    * memory = one record.
     */
   def read(spark: SparkSession, glob: String): Dataset[WarcRecord] = {
     import spark.implicits._
-    val hadoopConf = Storage.taskConf(spark)
-    val p = new Path(glob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = Option(fs.globStatus(p)).getOrElse(Array.empty)
-      .filter(_.isFile).map(_.getPath.toString).toSeq
-    val parallelism = math.max(1, math.min(paths.size,
-      spark.sparkContext.defaultParallelism))
-    spark.createDataset(paths)
-      .repartition(parallelism)
-      .flatMap { path =>
-        val hp = new Path(path)
-        val in = hp.getFileSystem(hadoopConf.value.value).open(hp)
-        parseStream(hp.getName, new GZIPInputStream(in))
-      }
+    spark.createDataset(Storage.mapFiles(spark, glob)((name, in) =>
+      parseStream(name, new GZIPInputStream(in))).flatMap(identity))
   }
 
   /** Selective fetch: read ONLY the records the CDX rows address. Offsets

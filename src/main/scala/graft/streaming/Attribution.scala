@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   * Emits one row per (view, purchase) touch with the view→purchase gap;
   * last-touch / multi-touch credit models are a downstream aggregation
   * over the emitted pairs.
+  * Kept: the bounded-state stream-stream join (SURVEY §2.9); AttributionSpec
+  * drives it.
   */
 object Attribution {
 

@@ -188,6 +188,8 @@ object CorpusIngest {
 
   /** foreachBatch writer: decisions land in `outDir/b<batchId>` (same
     * idempotent per-batch layout as the store).
+    * Kept: the streaming front door of the corpus store; CorpusIngestSpec
+    * drives it.
     */
   def writer(docs: DataFrame, storeDir: String, outDir: String,
              bands: Int = 4, threshold: Double = 0.8,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.dedup.DedupIndex
 import graft.sim.{IvfIndex, PqIndex}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._

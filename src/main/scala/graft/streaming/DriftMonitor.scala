@@ -16,6 +16,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * at the bucket grain), the batch contributes one pass; the appended
   * row is ONE summary row per batch. State lives in the sink, not the
   * stream — restarts replay idempotently from the checkpoint.
+  * Kept: SURVEY §2.11's streaming drift monitor; DriftMonitorSpec drives it.
   */
 object DriftMonitor {
 

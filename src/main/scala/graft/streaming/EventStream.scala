@@ -7,9 +7,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 /** S9 + §2.9: the streaming front-end. A file-drop directory stands in for
-  * the SQS queue (each line = one record body, exactly the double-JSON
-  * SNS envelope the reference unwraps, tre_forward.py:50-65); micro-batches
-  * feed the same batch pipeline via foreachBatch.
+  * the SQS queue: each line is one TRE event's JSON, which `decoded`
+  * parses directly (the reference first unwraps the SQS body and SNS
+  * envelope, tre_forward.py:50-65; `TreEvents.parseSqsRecord` is that
+  * decode). Micro-batches feed the same batch pipeline via foreachBatch.
   *
   * Streaming policies (reference behavior per SURVEY §2.9):
   *  - dedup: `dropDuplicates` on the latest UUID (the reference's TODO test
@@ -17,36 +18,23 @@ import org.apache.spark.sql.Row
   *    state it). Unbounded state by default — pass a watermark column for
   *    bounded state at scale.
   *  - validation split: structurally invalid events → DLQ (error-channel
-  *    table + alert emitter, mirroring tre-dlq-slack-alerts).
+  *    table + DLQ alert, mirroring tre-dlq-slack-alerts).
   *  - retry: `number-of-retries` ≥ maxRetries → fail route
   *    (tre_bagit_checksum_validation.py:159-163; limit 3).
   */
-/** The queue-connector seam: a source yields a streaming DataFrame with a
-  * single `json` column of raw message bodies. `FileDropSource` is the
-  * zero-egress stand-in for SQS (each line = one record body); a real
-  * connector (Kafka `value`, SQS poller) implements `read` and drops in —
-  * nothing downstream of `decoded` changes.
-  */
-trait QueueSource {
-  def read(spark: SparkSession): DataFrame
-}
+object EventStream {
 
-/** File-drop directory as a queue (tre_sqs_sf_trigger.py:6-9 analogue). */
-final case class FileDropSource(dir: String, maxFilesPerTrigger: Int = 10)
-    extends QueueSource {
-  override def read(spark: SparkSession): DataFrame =
+  /** Read a file-drop queue of raw JSON event lines as a stream with one
+    * `json` column (tre_sqs_sf_trigger.py:6-9 analogue). A real connector
+    * (Kafka `value`, SQS poller) yielding the same column drops in here —
+    * nothing downstream of `decoded` changes.
+    */
+  def readRaw(spark: SparkSession, dir: String,
+              maxFilesPerTrigger: Int = 10): DataFrame =
     spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger) // ≤10 records/batch, like SQS→Lambda
       .text(dir)
       .withColumnRenamed("value", "json")
-}
-
-object EventStream {
-
-  /** Read a file-drop queue of raw JSON event lines as a stream. */
-  def readRaw(spark: SparkSession, dir: String,
-              maxFilesPerTrigger: Int = 10): DataFrame =
-    FileDropSource(dir, maxFilesPerTrigger).read(spark)
 
   /** Decode + validate + dedup: returns the decoded frame with
     * `event`, `event_errors`, `latest_uuid`, `ok` columns.
@@ -83,6 +71,8 @@ object EventStream {
     * O(open windows × keys) however long the stream runs. Rows later
     * than `lateness` are discarded by the watermark (count-completeness
     * is traded for bounded state, the streaming contract).
+    * Kept: the streaming-window shape the event queries batch-compute;
+    * no stream path aggregates yet, so only WindowedCountsSpec calls it.
     */
   def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
                      windowDur: String, lateness: String): DataFrame =
@@ -103,6 +93,8 @@ object EventStream {
     * while the stream runs, re-read it per batch inside `foreachBatch`
     * and apply this same join to the batch DataFrame (works unchanged on
     * batch frames; StreamEnrichSpec drives both patterns).
+    * Kept: the dimension-lookup pattern for event enrichment; no stream
+    * path enriches yet, so only StreamEnrichSpec calls it.
     */
   def enrich(stream: DataFrame, dim: DataFrame, keys: Seq[String],
              joinType: String = "left"): DataFrame =
@@ -131,6 +123,8 @@ object EventStream {
     * The reference externalizes this state to S3 retry folders
     * (tre_editorial_integration.py:472-542); this is the streaming-native
     * alternative when the queue replays faster than storage round-trips.
+    * Kept: the streaming-state alternative to the storage retry folders
+    * `runWithRetries` uses; EventStreamSpec drives it.
     */
   def retryTracker(decodedStream: DataFrame, maxRetries: Int = 3,
                    stateTimeoutMs: Option[Long] = None): DataFrame = {
@@ -173,6 +167,8 @@ object EventStream {
 
   /** Drive the stream through foreachBatch with an ok/DLQ split — the
     * Spark analogue of the Step Function dispatch (K5) + DLQ alert (K7).
+    * Kept: the K5/K7 dispatch for a handler; the benchmark wires its own
+    * `foreachBatch`, EventStreamSpec drives this one.
     */
   def writer(decodedStream: DataFrame, handler: BatchHandler): DataStreamWriter[Row] =
     withRetryRoute(decodedStream).writeStream

@@ -20,6 +20,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Batch twin: `ev_sessionize` computes the same sessions with a lag()
   * window over the full history.
+  * Kept: the streaming form of the `ev_sessionize` query (SURVEY §2.9);
+  * SessionizeSpec drives it.
   */
 object Sessionize {
 

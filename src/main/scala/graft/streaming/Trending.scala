@@ -20,11 +20,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * the same pattern EventStream.retryTracker uses). Events inside a
   * batch are folded in event-time order per key, so replayed batches
   * fold identically.
+  * Kept: the streaming trend leg (SURVEY §2.11); TrendingSpec and
+  * RocksDbStateSpec drive it.
   */
 object Trending {
 
   /** (key, intervalIdx, decayed_x1024, status) rows; status ∈
     * {active, spike, expired}.
+    * Kept: the streaming trend leg (SURVEY §2.11); TrendingSpec and
+    * RocksDbStateSpec drive it.
     */
   def decayedCounts(events: DataFrame, keyCol: String, tsNsCol: String,
                     intervalNs: Long, spikeX100: Long,

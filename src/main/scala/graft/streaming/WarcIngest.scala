@@ -24,6 +24,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * collision odds ~2⁻⁶⁴ per pair; the dedup store's
   * first-occurrence-wins tie then resolves by hash order rather than
   * arrival order (documented, deterministic across replays).
+  * Kept: SURVEY §2.11's crawl-landing ingest leg; WarcIngestSpec drives it.
   */
 object WarcIngest {
 
@@ -49,7 +50,6 @@ object WarcIngest {
   def ingestBatch(entries: Dataset[CdxEntry], warcDir: String,
                   storeDir: String, corpusDir: String, batchId: Long,
                   minChars: Int, bands: Int, threshold: Double): (Long, Long, Long) = {
-    val spark = entries.sparkSession
     val docs = Warc.fetchByCdx(warcDir, entries).toDF()
       .select(col("uri"), expr("CAST(payload AS STRING)").as("text"))
       .withColumn("doc_id", xxhash64(col("uri")))

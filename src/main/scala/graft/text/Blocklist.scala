@@ -23,6 +23,8 @@ object Blocklist {
     * automaton's all-occurrence count exactly when no pattern has a
     * border (a proper prefix that is also a suffix). Do not use at
     * scale: k full scans of the text per row.
+    * Kept: declarative parity rendering of the native Aho-Corasick counts,
+    * pinned by AhoCorasickSpec.
     */
   def countsDeclarative(c: Column, patterns: Seq[String]): Column =
     array(patterns.map { p =>

@@ -78,6 +78,8 @@ object Bpe {
     * training order over the same delimited representation. Returns
     * (word, n_symbols) — the corpus token-inflation measure a tokenizer
     * change is judged by.
+    * Kept: replays learned merges to measure token inflation; BpeSpec checks
+    * the trainer with it.
     */
   def segment(words: DataFrame, wordCol: String,
               merges: Seq[(String, String)]): DataFrame = {

@@ -49,6 +49,8 @@ object TextAnalysis {
 
   /** Declarative rendering of the same arg-max (parity reference for the
     * oracle and LangIdExpr tests — do not use in hot paths).
+    * Kept: declarative parity rendering of the native `lang_id`, pinned by
+    * TrainSpec.
     */
   def languageIdDeclarative(c: Column): Column = {
     val t = tokens(c)
@@ -63,24 +65,19 @@ object TextAnalysis {
     }
   }
 
-  /** Quality features: word count, character count, alpha ratio,
-    * stopword(en) ratio, mean word length — each deterministic arithmetic.
+  /** Quality features: alpha ratio and stopword(en) ratio — each
+    * deterministic arithmetic.
     */
-  def wordCount(c: Column): Column = tokenCount(c)
   def alphaRatio(c: Column): Column =
     size(regexp_extract_all(lower(c), lit("[a-z]"), lit(0))) / greatest(length(c), lit(1))
-  def stopwordRatio(c: Column): Column =
-    markerCount(tokens(c), stopwords("en")) / greatest(tokenCount(c), lit(1))
-  /** [[stopwordRatio]] over an already-hoisted token-array ATTRIBUTE —
+  /** Stopword(en) ratio over an already-hoisted token-array ATTRIBUTE —
     * markerCount is an interpreted `filter` HOF that re-evaluates an
     * inlined array subtree per element (the repo's documented trap), so
     * hot paths hoist `tokens(c)` into a projection and pass the column
-    * here. Same value.
+    * here.
     */
   def stopwordRatioOf(toks: Column): Column =
     markerCount(toks, stopwords("en")) / greatest(size(toks), lit(1))
-  def meanWordLen(c: Column): Column =
-    size(regexp_extract_all(lower(c), lit("[a-z0-9]"), lit(0))) / greatest(tokenCount(c), lit(1))
 
   /** 4-decimal rounding that operates on the BINARY double:
     * floor(x·10⁴ + 0.5)/10⁴ evaluates identically in every engine.
@@ -93,16 +90,9 @@ object TextAnalysis {
   def round4(c: Column): Column = floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
 
   /** Composite quality score in [0,1]: length saturation + stopword signal
-    * + alpha density (weights fixed; SQL-mirrored in the oracle).
-    */
-  def qualityScore(c: Column): Column =
-    round4(
-      least(wordCount(c) / lit(100.0), lit(1.0)) * 0.4 +
-        least(stopwordRatio(c) * lit(3.0), lit(1.0)) * 0.3 +
-        alphaRatio(c) * 0.3)
-
-  /** [[qualityScore]] with the token array supplied as a hoisted
-    * attribute (see [[stopwordRatioOf]]). Same value.
+    * + alpha density (weights fixed; SQL-mirrored in the oracle), with the
+    * token array `toks` of `c` supplied as a hoisted attribute (see
+    * [[stopwordRatioOf]]).
     */
   def qualityScoreOf(c: Column, toks: Column): Column =
     round4(
@@ -159,6 +149,8 @@ object TextAnalysis {
 
   /** Declarative rendering of the same shingles (parity/oracle reference;
     * re-tokenizes per element — do not use at scale).
+    * Kept: declarative parity rendering of the native shingles, pinned by
+    * TrainSpec.
     */
   def shinglesDeclarative(c: Column, n: Int): Column = {
     val t = tokens(c)
@@ -212,6 +204,8 @@ object TextAnalysis {
 
   /** Declarative rendering of the same signature (parity reference for the
     * oracle and SimHashExpr tests; 64× the hashing — do not use at scale).
+    * Kept: declarative parity rendering of the native simhash bits, pinned
+    * by TrainSpec.
     */
   def simhashBitsDeclarative(c: Column): Column = {
     val toks = tokens(c)

@@ -81,6 +81,8 @@ object Unigram {
     * b(j) into its ≤MaxSub consumers would blow up 4^12 expression
     * nodes (CollapseProject keeps multi-referenced non-cheap
     * expressions materialized).
+    * Kept: per-word segmentation value the unigram specs check `segmentDocs`
+    * against.
     */
   def withSegmentValue(df: DataFrame, wordCol: String,
                        vocab: Map[String, Long]): DataFrame = {

@@ -3,7 +3,6 @@ package graft.tools
 import graft.Sessions
 import graft.dedup.DedupIndex
 import graft.sim.{IvfIndex, PqIndex}
-import org.apache.spark.sql.functions._
 
 /** End-to-end LLM-ingest composition demo — the [[graft.streaming
   * .CurateIngest]] front door driven against real file-source

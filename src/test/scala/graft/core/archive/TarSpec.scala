@@ -49,18 +49,20 @@ class TarSpec extends SparkSpec {
     assert(Tar.explodePath(spark, dir.toString + "/*.tar.gz").count() == 0)
   }
 
-  test("packageBags round-trips entries with prefix substitution (K2/K3)") {
+  test("writeArchive round-trips entries with prefix substitution (K2/K3)") {
     val dir = Files.createTempDirectory("tarpack")
     val entries = Seq(
       TarEntry("bagA", "TDR-2022-AA1/data/doc.docx", "DOCX".getBytes, 1660000000L, isDir = false),
       TarEntry("bagA", "TDR-2022-AA1/bag-info.txt", "k: v".getBytes, 1660000000L, isDir = false),
-      TarEntry("bagB", "other/x.txt", "X".getBytes, 1660000000L, isDir = false)
-    ).toDS()
-    val packed = Tar.packageBags(entries, dir.toString,
-      prefixDrop = "TDR-2022-AA1/", prefixAdd = "BATCH/SERIES/").collect()
+      TarEntry("bagB", "other/x.txt", "X".getBytes, 1660000000L, isDir = false))
+    val packed = entries.groupBy(_.source).toSeq.map { case (bag, es) =>
+      Tar.writeArchive(spark.sparkContext.hadoopConfiguration, dir.toString, bag,
+        es.map(e => e.copy(name = Tar.substitutePrefix(e.name, "TDR-2022-AA1/", "BATCH/SERIES/")))
+          .sortBy(_.name).iterator)
+    }
     assert(packed.length == 2)
     val bagA = packed.find(_.bagId == "bagA").get
-    // flatMapSortedGroups(name) ⇒ items arrive in name order, deterministically
+    // items are recorded in the order written (name order here)
     assert(bagA.items.map(_.name) ==
       Seq("BATCH/SERIES/bag-info.txt", "BATCH/SERIES/data/doc.docx"))
     assert(bagA.items.map(_.size).sum == 8)
@@ -89,8 +91,9 @@ class TarSpec extends SparkSpec {
     def norm(es: Array[TarEntry]) =
       es.map(e => (e.source, e.name, new String(e.bytes, "UTF-8"), e.mtime)).sorted.toSeq
     val streamed = norm(Tar.explodePath(spark, dir.toString + "/*.tar.gz").collect())
-    val viaBytes = norm(Tar.explode(
-      spark.read.format("binaryFile").load(dir.toString + "/*.tar.gz")).collect())
+    val viaBytes = norm(spark.read.format("binaryFile").load(dir.toString + "/*.tar.gz")
+      .select($"path", $"content").as[(String, Array[Byte])].collect()
+      .flatMap { case (path, bytes) => Tar.entries(path.split('/').last, bytes) })
     assert(streamed == viaBytes)
     assert(streamed.size == 3)
   }
@@ -118,16 +121,18 @@ class TarSpec extends SparkSpec {
     assert(Tar.substitutePrefix("a.txt", "", "X/") == "X/a.txt")
   }
 
-  test("packageBags archive bytes are deterministic across runs") {
+  test("writeArchive archive bytes are deterministic across runs") {
     val dir1 = Files.createTempDirectory("tardet1")
     val dir2 = Files.createTempDirectory("tardet2")
-    // reversed input order must not change the packed archive
+    // reversed input order must not change the packed archive once the
+    // entries are put in name order (the order runFull writes bundles in)
     val es = Seq(
       TarEntry("bag", "z.txt", "Z".getBytes, 1660000000L, isDir = false),
       TarEntry("bag", "a.txt", "A".getBytes, 1660000000L, isDir = false),
       TarEntry("bag", "m.txt", "M".getBytes, 1660000000L, isDir = false))
-    Tar.packageBags(es.toDS(), dir1.toString).collect()
-    Tar.packageBags(es.reverse.toDS().repartition(3), dir2.toString).collect()
+    val conf = spark.sparkContext.hadoopConfiguration
+    Tar.writeArchive(conf, dir1.toString, "bag", es.sortBy(_.name).iterator)
+    Tar.writeArchive(conf, dir2.toString, "bag", es.reverse.sortBy(_.name).iterator)
     val b1 = Files.readAllBytes(dir1.resolve("bag.tar.gz"))
     val b2 = Files.readAllBytes(dir2.resolve("bag.tar.gz"))
     assert(java.util.Arrays.equals(b1, b2))

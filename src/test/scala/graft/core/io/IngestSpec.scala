@@ -7,6 +7,11 @@ import org.apache.spark.sql.functions._
 class IngestSpec extends SparkSpec {
   import spark.implicits._
 
+  private def read(path: String): Either[String, String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    Storage.readString(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
   test("fetchToStorage streams URLs with on-the-fly sha256 + error channel (S6)") {
     val src = Files.createTempDirectory("ingest-src")
     val dst = Files.createTempDirectory("ingest-dst")
@@ -25,7 +30,7 @@ class IngestSpec extends SparkSpec {
     val expected = java.security.MessageDigest.getInstance("SHA-256")
       .digest(content.getBytes).map("%02x".format(_)).mkString
     assert(ok.getAs[String]("sha256") == expected)
-    assert(Storage.readStringOrError(spark, dst.toString + "/bag.tar.gz") == Right(content))
+    assert(read(dst.toString + "/bag.tar.gz") == Right(content))
 
     val bad = got(dst.toString + "/missing.tar.gz")
     assert(bad.getAs[String]("error") != null)
@@ -42,6 +47,16 @@ class IngestSpec extends SparkSpec {
       .toDF("url", "target")
     val r = Ingest.fetchToStorage(reqs).head()
     assert(r.getAs[String]("error").contains("target exists"))
-    assert(Storage.readStringOrError(spark, dst.toString + "/x.txt") == Right("old"))
+    assert(read(dst.toString + "/x.txt") == Right("old"))
+  }
+
+  test("a fetch that fails before writing leaves an existing target alone under overwrite") {
+    val dst = Files.createTempDirectory("o-dst")
+    Files.write(java.nio.file.Paths.get(dst.toString, "x.txt"), "old".getBytes)
+    val reqs = Seq(("file:///nonexistent/missing.txt", dst.toString + "/x.txt"))
+      .toDF("url", "target")
+    val r = Ingest.fetchToStorage(reqs, overwrite = true).head()
+    assert(r.getAs[String]("error") != null)
+    assert(read(dst.toString + "/x.txt") == Right("old"))
   }
 }

@@ -1,9 +1,9 @@
 package graft.core.io
 
 import graft.SparkSpec
-import graft.sinks.{CollectingEmitter, SlackAlerts}
+import graft.sinks.SlackAlerts
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 class StorageSpec extends SparkSpec {
   import spark.implicits._
@@ -20,36 +20,23 @@ class StorageSpec extends SparkSpec {
     assert(Storage.exists(spark, dir.toString + "/bags/a.txt"))
     assert(!Storage.exists(spark, dir.toString + "/bags/zz.txt"))
     // int max, not the reference's lexicographic-string max ('9' > '10')
-    assert(Storage.maxNumericChildFolder(spark, dir.toString + "/bags") == Some(10))
-    assert(Storage.maxNumericChildFolder(spark, dir.toString + "/nope") == None)
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    assert(Storage.maxNumericChildFolder(fs, new Path(dir.toString + "/bags")) == Some(10))
+    assert(Storage.maxNumericChildFolder(fs, new Path(dir.toString + "/nope")) == None)
   }
 
-  test("writeStringErrorIfExists enforces the K1 idempotency guard") {
+  test("writeString without overwrite enforces the K1 idempotency guard") {
     val dir = Files.createTempDirectory("k1")
-    val p = dir.toString + "/out.json"
-    Storage.writeStringErrorIfExists(spark, p, "first")
-    intercept[Exception] {
-      Storage.writeStringErrorIfExists(spark, p, "second")
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val p = new Path(dir.toString + "/out.json")
+    Storage.writeString(fs, p, "first", overwrite = false)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      Storage.writeString(fs, p, "second", overwrite = false)
     }
-    assert(Storage.readStringOrError(spark, p) == Right("first"))
-    assert(Storage.readStringOrError(spark, p + ".missing").isLeft)
-  }
-
-  test("ChunkedSha256 folds chunks in order and matches whole-object sha2 (A5)") {
-    val content = ("A" * 100) + ("B" * 100) + "tail"
-    val chunks = Seq(
-      ("f1", 1L, ("B" * 100).getBytes),   // out of order on purpose
-      ("f1", 0L, ("A" * 100).getBytes),
-      ("f1", 2L, "tail".getBytes),
-      ("f2", 0L, "small".getBytes)
-    ).toDF("file", "chunk_idx", "bytes")
-    val got = ChunkedSha256.forChunks(chunks)
-      .as[(String, String)].collect().toMap
-    val expected = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(content.getBytes).map("%02x".format(_)).mkString
-    assert(got("f1") == expected)
-    assert(got("f2") == java.security.MessageDigest.getInstance("SHA-256")
-      .digest("small".getBytes).map("%02x".format(_)).mkString)
+    assert(Storage.readString(fs, p) == Right("first"))
+    assert(Storage.readString(fs, p.suffix(".missing")).isLeft)
+    Storage.writeString(fs, p, "third", overwrite = true)
+    assert(Storage.readString(fs, p) == Right("third"))
   }
 
   test("Slack alert formatting + DLQ arn decode (K6/K7)") {
@@ -65,10 +52,6 @@ class StorageSpec extends SparkSpec {
         .toDF("event_source_arn", "topic_arn"), "dev")
       .select($"alert").as[String].head()
     assert(dlq == ":x: dev DLQ `tre-dlq` received from `tre-out`")
-
-    val em = new CollectingEmitter
-    em.publish("topic-a", "hello", Map("k" -> "v"))
-    assert(em.sent.toSeq == Seq(("topic-a", "hello", Map("k" -> "v"))))
   }
 
   test("taskConf carries keys set on the session's Hadoop conf before the call") {

@@ -57,7 +57,7 @@ class DriSipSpec extends SparkSpec {
     assert(cfg.batch == "MOCKA101Y22TBAA1")
     assert(cfg.series == "MOCKA_101")
     assert(cfg.identifierPrefix == "file:/MOCKA101Y22TBAA1/MOCKA_101/")
-    assert(cfg.metadataChecksumInSip == "MOCKA101Y22TBAA1/MOCKA_101/metadata.csv.sha256")
+    assert(cfg.internalPrefix == "MOCKA101Y22TBAA1/MOCKA_101/")
   }
 
   test("v1.2 input → golden metadata.csv, byte-exact") {

@@ -97,6 +97,7 @@ class EditorialSpec extends SparkSpec {
   test("outputMessage carries presigned urls, retry number, tar record") {
     val df = Editorial.locateBlocks(Seq(okEvent).toDF("json"), "json")
     val json = df.select(Editorial.outputMessage(
+      $"parser_inputs.consignment-reference", $"context.consignment-type",
       lit("https://tar"), lit("https://sha"), $"parser_inputs.s3-bucket",
       lit("parsed/judgment/ABC-123/0/0/TRE-ABC-123.tar.gz"),
       lit("""[{"name":"x","size":1}]"""), lit(0)).as("m")).as[String].head()
@@ -118,7 +119,10 @@ class EditorialSpec extends SparkSpec {
     val invalid = ctxBlock.replace("test.docx", "invalid.docx")
     val located = Editorial.locateBlocks(
       Seq(okEvent, s"""[$invalid,[$outBlock]]""").toDF("json"), "json")
-    val rows = ParserStub.run(located).collect()
+    val ref = $"parser_inputs.consignment-reference"
+    val rows = located.select(ref.as("consignment_reference"),
+        ParserStub.outputStruct(ref, $"context.judgment-document").as("po"))
+      .select("consignment_reference", "po.*").collect()
     def errs(r: org.apache.spark.sql.Row) =
       r.getAs[scala.collection.Seq[String]]("error_messages")
     // ok corpus: xml/metadata/log populated, no errors

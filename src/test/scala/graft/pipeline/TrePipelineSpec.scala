@@ -219,4 +219,28 @@ class TrePipelineSpec extends SparkSpec {
       ("TDR-2022-BAD1", 2, "retry"), ("TDR-2022-BAD1", 3, "fail"),
       ("TDR-2022-OK1", 0, "ok")))
   }
+
+  test("runWithRetries seeds attempt 0 with valid editorial JSON for any bag name") {
+    val dir = Files.createTempDirectory("retryquote")
+    val state = Files.createTempDirectory("retryquotestate")
+    makeBags(dir)
+    writeTarGz(dir, "q\"uote.tar.gz", Seq.empty)
+    val history = TrePipeline.runWithRetries(spark, dir.toString + "/*.tar.gz", state.toString)
+    val msgs = history.filter($"attempt" === 0).select($"bagId", $"message",
+      get_json_object($"message", "$['editorial-output']['consignment-reference']"))
+      .as[(String, String, String)].collect().toSeq
+    assert(msgs.map(_._1).sorted == Seq("TDR-2022-BAD1", "TDR-2022-OK1", "q\"uote"))
+    msgs.foreach { case (bag, _, ref) => assert(ref == bag) }
+    // the message bytes of an ordinary bag name are the seeded state file
+    assert(msgs.find(_._1 == "TDR-2022-OK1").get._2 ==
+      """{"editorial-output":{"consignment-reference":"TDR-2022-OK1",""" +
+      """"s3-folder-url":"file://TDR-2022-OK1.tar.gz","s3-sha256-url":"file://TDR-2022-OK1.tar.gz.sha256",""" +
+      """"consignment-type":"judgment","number-of-retries":0},""" +
+      """"tar-gz":{"bucket":"local","key":"TDR-2022-OK1.tar.gz","items":"[]"}}""")
+    val routes = history.select($"bagId", $"attempt", $"route")
+      .as[(String, Int, String)].collect().toSeq.sorted
+    val retried = Seq((0, "retry"), (1, "retry"), (2, "retry"), (3, "fail"))
+    assert(routes == (retried.map(r => ("TDR-2022-BAD1", r._1, r._2)) :+
+      (("TDR-2022-OK1", 0, "ok"))) ++ retried.map(r => ("q\"uote", r._1, r._2)))
+  }
 }

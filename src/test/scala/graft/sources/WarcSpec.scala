@@ -26,6 +26,24 @@ class WarcSpec extends SparkSpec {
     assert(got("https://corpus.invalid/crawl-b/10") == "b" * 10000)
   }
 
+  test("read spreads the WARC files without a shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // every physical node, through the AQE plan and its query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val dir = freshDir()
+    Warc.write(docsDf, dir.toString).collect()
+    val df = Warc.read(spark, s"$dir/*.warc.gz")
+    assert(df.collect().length == 4)
+    val plan = df.queryExecution.executedPlan
+    assert(nodes(plan).collect { case s: ShuffleExchangeLike => s }.isEmpty, plan.treeString)
+  }
+
   test("rendered archives are byte-deterministic across writes") {
     val d1 = freshDir(); val d2 = freshDir()
     Warc.write(docsDf, d1.toString).collect()

@@ -667,6 +667,17 @@ class SimilaritySpec extends SparkSpec {
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A structurally valid PNG prefix (magic + IHDR length/tag + 4-byte
+    * big-endian width/height) as a binary column, from hex builtins.
+    */
+  private def pngHeader(width: org.apache.spark.sql.Column,
+                        height: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    unhex(concat(
+      lit("89504E470D0A1A0A"),    // PNG magic
+      lit("0000000D49484452"),    // IHDR chunk length (13) + "IHDR"
+      lpad(hex(width.cast("long")), 8, "0"),
+      lpad(hex(height.cast("long")), 8, "0")))
+
   test("asMedia: binary content + typed metadata (schema contract)") {
     val m = Multimodal.asMedia(Seq((7L, "hello world")).toDF("id", "payload"),
       "id", "payload", "text/plain")
@@ -680,7 +691,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("pngDims parses IHDR dims from raw bytes; non-PNG bytes yield null") {
     val df = Seq(1L).toDF("id")
-      .select(Multimodal.pngHeader(lit(640), lit(480)).as("png"),
+      .select(pngHeader(lit(640), lit(480)).as("png"),
         lit("not a png").cast("binary").as("junk"))
     val row = df.select(
       $"png".substr(1, 8),                       // magic intact
