@@ -31,16 +31,15 @@ object Tables {
     *
     * Scale posture: the trigger derives from input size and session
     * parallelism — when the Catalyst size estimate says the scan already
-    * splits ≥ parallelism ways (any production input), this is a no-op;
-    * `spark.graft.fanout=false` is the session kill switch (also used
-    * for same-JVM A/B measurement). Sub-100 KB inputs are left alone.
+    * splits ≥ parallelism ways (any production input), this is a no-op.
+    * Sub-100 KB inputs are left alone. To A/B a change to it, run the
+    * parent and the change each from its own worktree.
     * Determinism: gated results are partitioning-invariant by the
     * repo's oracle design, and `repartition(n)` is deterministic under
     * retries (sort-before-repartition, SPARK-23207).
     */
   def fanOutForCompute(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    if (spark.conf.getOption("spark.graft.fanout").contains("false")) return df
     val target = spark.sparkContext.defaultParallelism
     val bytes =
       try BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes.toString)

@@ -1,6 +1,6 @@
 package graft.core.io
 
-import java.io.{FileNotFoundException, InputStream}
+import java.io.{FileNotFoundException, IOException, InputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.IOUtils
@@ -94,4 +94,10 @@ object Storage {
     val out = fs.create(p, overwrite)
     try out.write(content.getBytes(UTF_8)) finally out.close()
   }
+
+  /** `fs.rename` that raises where Hadoop only returns false (a missing
+    * source, a rename the file system refused).
+    */
+  def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst)) throw new IOException(s"could not rename $src to $dst")
 }

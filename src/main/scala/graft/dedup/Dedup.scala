@@ -655,7 +655,7 @@ object Dedup {
     // gate is off and everything falls back to the shuffle plan.
     val nodeBytes = BigInt(labels.count()) * 64
     def bc(df: DataFrame): DataFrame =
-      graft.ops.Hints.broadcastIfFitsSwitched(df, nodeBytes, "spark.graft.loopbc")
+      graft.ops.Hints.broadcastIfFits(df, nodeBytes)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {

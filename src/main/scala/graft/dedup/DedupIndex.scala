@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.core.io.Storage
+import graft.core.io.{Storage, StoreDir}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,56 +34,38 @@ import org.apache.spark.sql.functions._
   *    scratch rebuild exactly; under a shifting cap the already-mined
   *    pairs keep their original scores (monotone: pairs are never lost).
   *
-  * `labels/` is rewritten on every build/append, so it uses the
-  * rename-aside swap (write `__new` → rename old aside → rename new in →
-  * delete old; readers self-heal) — the [[graft.sim.IvfIndex.compactDir]]
-  * ordering, with the same no-loss-at-any-crash-point property.
+  * Every rewrite of a part — the whole store on [[build]], `labels/` on
+  * each [[append]], the folded dirs on [[compact]] — is staged and
+  * swapped in by [[StoreDir]], so a crash at any step leaves the
+  * complete old or the complete new store; every reader and writer runs
+  * its recover first.
   */
 object DedupIndex {
+
+  private val buildParts =
+    Seq("postings", "pairs", "labels", "labels_log", "df", "sizes")
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Swap-replace `dir` with the content of frame `df` (rename-aside
-    * ordering; see class doc).
-    */
-  private def swapWrite(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val p = new Path(dir)
-    val tmp = new Path(dir + "__new")
-    val old = new Path(dir + "__old")
-    recover(spark, dir)
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(p)) fs.rename(p, old)
-    fs.rename(tmp, p)
-    fs.delete(old, true)
-  }
+  private def recover(spark: SparkSession, indexDir: String): Unit =
+    new StoreDir(spark, indexDir).recover()
 
-  /** Heal an interrupted [[swapWrite]]: canonical missing + `__old`
-    * survivor present → rename back.
-    */
-  private def recover(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(dir)
-    val old = new Path(dir + "__old")
-    if (!fs.exists(p) && fs.exists(old)) fs.rename(old, p)
-  }
-
-  private def readDir(spark: SparkSession, dir: String): DataFrame = {
-    recover(spark, dir)
-    // recursive: flat build layout and per-batch append subdirs coexist
+  // recursive: flat build layout and per-batch append subdirs coexist
+  private def readDir(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("recursiveFileLookup", "true").parquet(dir)
-  }
 
-  /** Mine the corpus once and persist postings + pairs + labels.
-    * Overwrites any prior index at the path (idempotent refresh).
+  /** Mine the corpus once and persist postings + pairs + labels, the
+    * `base` label version and the admission sidecars, swapped in
+    * together. Replaces any prior index at the path (idempotent
+    * refresh).
     */
   def build(docs: DataFrame, outDir: String, n: Int = 3,
             threshold: Double = 0.10, maxDf: Long = 4096L,
             idCol: String = "doc_id", textCol: String = "text"): Unit = {
+    val spark = docs.sparkSession
+    val st = new StoreDir(spark, outDir)
+    st.begin(buildParts)
     // fused: one shingling materialization feeds the store write AND the
     // mining pass; one pair materialization feeds the pair write AND the
     // clustering (re-reading each stage from parquet measured +60% on
@@ -91,40 +73,37 @@ object DedupIndex {
     // bytes and the checkpointed rows are the same deterministic frames)
     val sh = Dedup.shinglePostings(docs, n, idCol, textCol)
       .localCheckpoint(eager = false)
-    swapWrite(sh, s"$outDir/postings")
+    sh.write.mode("overwrite").parquet(st.stage("postings"))
     val pairs = Dedup.jaccardPairsFromPostings(sh, threshold, maxDf)
       .localCheckpoint(eager = false)
-    swapWrite(pairs, s"$outDir/pairs")
-    swapWrite(Dedup.clusters(pairs), s"$outDir/labels")
+    pairs.write.mode("overwrite").parquet(st.stage("pairs"))
+    Dedup.clusters(pairs).write.mode("overwrite").parquet(st.stage("labels"))
     // version log: a fresh build resets history; the built labels
     // snapshot as version `base` (tiny frame — label grain)
-    fsOf(docs.sparkSession, outDir)
-      .delete(new Path(s"$outDir/labels_log"), true)
-    readDir(docs.sparkSession, s"$outDir/labels")
-      .write.mode("overwrite").parquet(s"$outDir/labels_log/base")
+    spark.read.parquet(st.stage("labels"))
+      .write.mode("overwrite").parquet(s"${st.stage("labels_log")}/base")
     // admission sidecars (r12 judge item: append re-aggregated the whole
     // posting store per batch for the global df hot set): df/ holds
     // additive (shingle, cnt) deltas, sizes/ additive capped per-doc
     // (id, n_sh) deltas — both derivable here from the already-
     // checkpointed shingle frame, so append merges sidecars instead of
     // re-scanning postings (see [[shingleDf]]/[[docSizes]])
-    writeSidecarsFrom(docs.sparkSession, outDir, sh, maxDf)
+    stageSidecars(st, sh, maxDf)
+    st.commit(buildParts)
+    stampMaxDf(st, maxDf)
   }
 
-  /** (Re)derive both admission sidecars from a posting frame and stamp
-    * the cap they were capped under. `sizes/` bakes in the hot set AT
-    * WRITE TIME (corrections land as later deltas), so its rows are only
-    * exact under a per-store-constant `maxDf` — the tag makes a cap
-    * switch trigger a one-time rebuild instead of silent drift.
+  /** Stage both admission sidecars derived from a posting frame.
+    * `sizes/` bakes in the hot set AT WRITE TIME (corrections land as
+    * later deltas), so its rows are only exact under a per-store-constant
+    * `maxDf` — [[stampMaxDf]], after the swap, makes a cap switch
+    * trigger a one-time rebuild instead of silent drift.
     */
-  private def writeSidecarsFrom(spark: SparkSession, indexDir: String,
-                                postings: DataFrame, maxDf: Long): Unit = {
-    val fs = fsOf(spark, indexDir)
-    fs.delete(new Path(s"$indexDir/df"), true)
-    fs.delete(new Path(s"$indexDir/sizes"), true)
+  private def stageSidecars(st: StoreDir, postings: DataFrame,
+                            maxDf: Long): Unit = {
     postings.groupBy(col("shingle")).agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(s"$indexDir/df/base")
-    val dfBase = spark.read.parquet(s"$indexDir/df/base")
+      .write.mode("overwrite").parquet(s"${st.stage("df")}/base")
+    val dfBase = st.spark.read.parquet(s"${st.stage("df")}/base")
     val hotBytes = graft.ops.Hints.estimatedBytes(postings) /
       BigInt(math.max(maxDf, 1L)) * 4
     val hot = dfBase.filter(col("cnt") > maxDf).select(col("shingle"))
@@ -132,37 +111,36 @@ object DedupIndex {
       .join(graft.ops.Hints.broadcastIfFits(hot, hotBytes),
         Seq("shingle"), "left_anti")
       .groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
-      .write.mode("overwrite").parquet(s"$indexDir/sizes/base")
-    Storage.writeString(fs, new Path(s"$indexDir/_sizes_maxdf"), maxDf.toString, overwrite = true)
+      .write.mode("overwrite").parquet(s"${st.stage("sizes")}/base")
   }
+
+  private def stampMaxDf(st: StoreDir, maxDf: Long): Unit =
+    Storage.writeString(st.fs, new Path(st.path("_sizes_maxdf")),
+      maxDf.toString, overwrite = true)
 
   /** Ensure the admission sidecars exist and were capped under THIS
     * call's `maxDf` — a pre-r13 store (or a cap switch) pays a one-time
     * O(store) upgrade here, the cost one legacy append paid EVERY batch.
     * Call before landing the batch's postings (the store must not yet
-    * contain them).
+    * contain them), after `st.begin` over `df` and `sizes`.
     */
-  private def ensureSidecars(spark: SparkSession, indexDir: String,
-                             maxDf: Long): Unit = {
-    recover(spark, s"$indexDir/df")
-    recover(spark, s"$indexDir/sizes")
-    val fs = fsOf(spark, indexDir)
-    val tag = new Path(s"$indexDir/_sizes_maxdf")
-    val tagOk = Storage.readString(fs, tag).toOption
-      .exists(s => scala.util.Try(s.trim.toLong).toOption.contains(maxDf))
-    if (fs.exists(new Path(s"$indexDir/df")) &&
-        fs.exists(new Path(s"$indexDir/sizes")) && tagOk) return
-    writeSidecarsFrom(spark, indexDir,
-      readDir(spark, s"$indexDir/postings"), maxDf)
+  private def ensureSidecars(st: StoreDir, maxDf: Long): Unit = {
+    val tagOk = Storage.readString(st.fs, new Path(st.path("_sizes_maxdf")))
+      .toOption.exists(s => scala.util.Try(s.trim.toLong).toOption.contains(maxDf))
+    if (st.fs.exists(new Path(st.path("df"))) &&
+        st.fs.exists(new Path(st.path("sizes"))) && tagOk) return
+    stageSidecars(st, readDir(st.spark, st.path("postings")), maxDf)
+    st.commit(Seq("df", "sizes"))
+    stampMaxDf(st, maxDf)
   }
 
   /** Read every child of a sidecar dir except an excluded `b<id>` delta
     * (the replay-exclusion primitive: a replayed batch must derive its
-    * state from the store WITHOUT its own crashed-attempt delta).
+    * state from the store WITHOUT its own crashed-attempt delta). The
+    * caller has run the store's recover.
     */
   private def readSidecar(spark: SparkSession, dir: String,
                           exclude: Option[String]): DataFrame = {
-    recover(spark, dir) // heal a crashed foldSidecar swap
     val p = new Path(dir)
     val fs = fsOf(spark, dir)
     val inputs = fs.listStatus(p)
@@ -178,18 +156,22 @@ object DedupIndex {
     * sidecar alone: O(sidecar rows), NEVER reads a posting file
     * (spec-pinned with the posting dir absent, the health-probe shape).
     */
-  def shingleDf(spark: SparkSession, indexDir: String): DataFrame =
+  def shingleDf(spark: SparkSession, indexDir: String): DataFrame = {
+    recover(spark, indexDir)
     readSidecar(spark, s"$indexDir/df", None)
       .groupBy(col("shingle")).agg(sum(col("cnt")).as("cnt"))
+  }
 
   /** Merged capped per-doc posting sizes — (id, n_sh) from the `sizes/`
     * sidecar alone (base rows + later-hot corrections): O(sidecar rows),
     * never reads a posting file. Exact under the store's stamped cap.
     */
-  def docSizes(spark: SparkSession, indexDir: String): DataFrame =
+  def docSizes(spark: SparkSession, indexDir: String): DataFrame = {
+    recover(spark, indexDir)
     readSidecar(spark, s"$indexDir/sizes", None)
       .groupBy(col("id")).agg(sum(col("n_sh")).as("n_sh"))
       .filter(col("n_sh") > 0)
+  }
 
   /** [[build]] only when no usable index exists at the path — the
     * entry point for export jobs that share a long-lived store (a fresh
@@ -201,13 +183,11 @@ object DedupIndex {
                     threshold: Double = 0.10, maxDf: Long = 4096L,
                     idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    recover(spark, s"$outDir/labels")
+    recover(spark, outDir)
     val fs = fsOf(spark, outDir)
     // a usable store needs BOTH the label frame and the committed base
-    // version snapshot: build writes labels (swap) before labels_log, so
-    // a crash in between would otherwise leave a store this check deems
-    // complete whose provenanceAsOf("base")/versions fail until a manual
-    // rebuild. _SUCCESS (not just the dir) guards a crash mid-snapshot.
+    // version snapshot (build swaps them in together; a store built
+    // before that could hold labels without the log)
     if (!fs.exists(new Path(s"$outDir/labels")) ||
         !fs.exists(new Path(s"$outDir/labels_log/base/_SUCCESS")))
       build(docs, outDir, n, threshold, maxDf, idCol, textCol)
@@ -240,16 +220,18 @@ object DedupIndex {
       case Some(b) => df.write.mode("overwrite").parquet(s"$dir/b$b")
       case None    => df.write.mode("append").parquet(dir)
     }
+    val st = new StoreDir(spark, indexDir)
+    st.begin(Seq("labels", "df", "sizes"))
     // sidecar upgrade BEFORE the batch's postings land (the store must
     // not yet contain them); no-op on an up-to-date store
-    ensureSidecars(spark, indexDir, maxDf)
+    ensureSidecars(st, maxDf)
     // read OLD labels/pairs before any write (incremental relabel below).
     // Broadcast budgets come from PRE-checkpoint subtrees (Hints class
     // doc): batch-derived frames are bounded by the batch source ×2
     // (shingle keys are 8-byte hashes, ≤ text bytes for real text),
     // label-derived frames by the persisted label parquet ×2.
-    val labelBytes = graft.ops.Hints.estimatedBytes(labels(spark, indexDir)) * 2
-    val oldLabels = labels(spark, indexDir).localCheckpoint(eager = true)
+    val labelBytes = graft.ops.Hints.estimatedBytes(readDir(spark, st.path("labels"))) * 2
+    val oldLabels = readDir(spark, st.path("labels")).localCheckpoint(eager = true)
     val oldPairs = readDir(spark, s"$indexDir/pairs")
       .localCheckpoint(eager = true)
     val newBytes = graft.ops.Hints.estimatedBytes(
@@ -385,8 +367,9 @@ object DedupIndex {
     val kept = oldLabels
       .join(bLbl(touchedClusters), Seq("cluster"), "left_anti")
       .select(col("id"), col("cluster"))
-    swapWrite(kept.unionByName(subLabels.select(col("id"), col("cluster"))),
-      s"$indexDir/labels")
+    kept.unionByName(subLabels.select(col("id"), col("cluster")))
+      .write.mode("overwrite").parquet(st.stage("labels"))
+    st.commit(Seq("labels"))
     // version log: batch appends snapshot the post-append labels as
     // `b<batchId>` with overwrite semantics (a replayed batch rewrites
     // its own snapshot). Unbatched appends keep no history — versioned
@@ -408,65 +391,48 @@ object DedupIndex {
   }
 
   /** Fold the posting and pair stores' accumulated append artifacts into
-    * target-sized files — same crash-safe swap and newest-`b<N>`
-    * replay-unit preservation as [[graft.sim.IvfIndex.compact]] — and
-    * bound the version log: every batch append snapshots the FULL label
-    * frame, so a daily-append pipeline accumulates a label copy per day
-    * unbounded unless compaction prunes. `keepVersions` batch snapshots
-    * survive (newest-first) plus `base`; surviving versions answer
+    * target-sized files and re-densify the sidecars — one staged swap,
+    * with the newest-`b<N>` replay unit kept as in
+    * [[graft.sim.IvfIndex.compact]] — and bound the version log: every
+    * batch append snapshots the FULL label frame, so a daily-append
+    * pipeline accumulates a label copy per day unbounded unless
+    * compaction prunes. `keepVersions` batch snapshots survive
+    * (newest-first) plus `base`; surviving versions answer
     * [[provenanceAsOf]] byte-identically, pruned ones fail loudly there.
     */
   def compact(spark: SparkSession, indexDir: String,
               targetBytes: Long = 128L << 20,
               keepVersions: Int = 8): Unit = {
-    graft.sim.IvfIndex.compactDir(spark, s"$indexDir/postings", targetBytes)
-    graft.sim.IvfIndex.compactDir(spark, s"$indexDir/pairs", targetBytes)
-    foldSidecar(spark, s"$indexDir/df", "shingle", "cnt")
-    foldSidecar(spark, s"$indexDir/sizes", "id", "n_sh")
+    val parts = Seq("postings", "pairs", "df", "sizes")
+    val st = new StoreDir(spark, indexDir)
+    st.begin(parts)
+    graft.sim.IvfIndex.stageCompacted(st, "postings", targetBytes)
+    graft.sim.IvfIndex.stageCompacted(st, "pairs", targetBytes)
+    stageFolded(st, "df", "shingle", "cnt")
+    stageFolded(st, "sizes", "id", "n_sh")
+    st.commit(parts)
     pruneVersions(spark, indexDir, keepVersions)
   }
 
-  /** Re-densify an additive sidecar: every delta EXCEPT the newest
-    * streaming `b<N>` (the one replay unit a checkpoint restart can
-    * still rewrite — the [[graft.sim.IvfIndex.compactDir]] contract)
-    * folds into one key-grain frame, so per-append read cost stays
-    * O(distinct keys) instead of growing with the delta count. Counts
-    * are additive, so row-folding is semantics-preserving; the same
-    * rename-aside swap as [[swapWrite]] keeps every crash point safe.
+  /** Stage a re-densified additive sidecar: every delta EXCEPT the
+    * newest streaming `b<N>` ([[StoreDir.foldSplit]]) folds into one
+    * key-grain `base` frame, so per-append read cost stays O(distinct
+    * keys) instead of growing with the delta count. Counts are additive,
+    * so row-folding is semantics-preserving. Stages nothing when there is
+    * nothing to fold.
     */
-  private def foldSidecar(spark: SparkSession, dir: String,
+  private def stageFolded(st: StoreDir, part: String,
                           key: String, valCol: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val p = new Path(dir)
-    recover(spark, dir)
-    if (!fs.exists(p)) return
-    val entries = fs.listStatus(p)
-    val newest = entries
-      .filter(s => s.isDirectory && s.getPath.getName.matches("b\\d+"))
-      .map(_.getPath.getName.drop(1).toLong).sorted.lastOption
-    val foldInputs = entries
-      .filterNot(s => s.isDirectory && newest.contains(
-        scala.util.Try(s.getPath.getName.drop(1).toLong).getOrElse(-1L)) &&
-        s.getPath.getName.matches("b\\d+"))
-      .filterNot(s => s.isFile &&
-        (s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith(".")))
-      .map(_.getPath.toString)
-    if (foldInputs.isEmpty) return
-    val tmp = new Path(dir + "__new")
-    val old = new Path(dir + "__old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(foldInputs.toIndexedSeq: _*)
+    val (fold, newest) = StoreDir.foldSplit(st.fs, new Path(st.path(part)))
+    if (fold.isEmpty) return
+    st.spark.read.option("recursiveFileLookup", "true")
+      .parquet(fold.map(_.toString): _*)
       .groupBy(col(key)).agg(sum(col(valCol)).as(valCol))
-      .write.mode("overwrite").parquet(s"${tmp}/base")
+      .write.mode("overwrite").parquet(s"${st.stage(part)}/base")
     newest.foreach { b =>
-      spark.read.parquet(s"$dir/b$b")
-        .write.mode("overwrite").parquet(s"${tmp}/b$b")
+      st.spark.read.parquet(s"${st.path(part)}/$b")
+        .write.mode("overwrite").parquet(s"${st.stage(part)}/$b")
     }
-    fs.rename(p, old)
-    fs.rename(tmp, p)
-    fs.delete(old, true)
   }
 
   /** Delete all but the newest `keep` batch snapshots from the version
@@ -480,8 +446,10 @@ object DedupIndex {
   }
 
   /** The persisted (id, cluster) label frame. */
-  def labels(spark: SparkSession, indexDir: String): DataFrame =
+  def labels(spark: SparkSession, indexDir: String): DataFrame = {
+    recover(spark, indexDir)
     readDir(spark, s"$indexDir/labels")
+  }
 
   /** Cluster-size audit over the persisted label frame: one row per
     * ⌊log2 size⌋ bucket — `(bucket, n_clusters, n_docs)`, integer-exact
@@ -532,6 +500,7 @@ object DedupIndex {
   def provenanceAsOf(spark: SparkSession, indexDir: String,
                      docs: DataFrame, version: String,
                      idCol: String = "doc_id"): DataFrame = {
+    recover(spark, indexDir)
     if (!fsOf(spark, indexDir).exists(
         new Path(s"$indexDir/labels_log/$version")))
       throw new java.util.NoSuchElementException(
@@ -566,6 +535,7 @@ object DedupIndex {
 
   /** Logged label versions, oldest-first (`base`, then batch order). */
   def versions(spark: SparkSession, indexDir: String): Seq[String] = {
+    recover(spark, indexDir)
     val p = new Path(s"$indexDir/labels_log")
     val fs = fsOf(spark, s"$indexDir/labels_log")
     if (!fs.exists(p)) Seq.empty

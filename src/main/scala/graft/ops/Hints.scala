@@ -72,13 +72,4 @@ object Hints {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     threshold > 0 && buildBytes < BigInt(threshold)
   }
-
-  /** [[broadcastIfFits]] behind a session kill switch (same-JVM A/B
-    * measurement, the r13 `spark.graft.fanout` convention): when
-    * `confKey` is "false" the frame is returned unhinted.
-    */
-  def broadcastIfFitsSwitched(df: DataFrame, buildBytes: BigInt,
-                              confKey: String): DataFrame =
-    if (df.sparkSession.conf.getOption(confKey).contains("false")) df
-    else broadcastIfFits(df, buildBytes)
 }

@@ -921,7 +921,7 @@ object CorpusOpsQueries {
     //    build on the even-id half, grow with a streamed-shape b0 batch
     //    (odd ids, frozen artifacts), then PqIndex.rebuild from the
     //    corpus — retrains coarse + codebooks over the GROWN id
-    //    population behind __stage siblings + the marker-bracketed swap
+    //    population behind staged siblings + the marker-bracketed swap
     //    (no outage window; the b0 replay unit is re-encoded against the
     //    NEW artifacts). A rebuilt store is bit-identical to a fresh
     //    full-corpus build, so the oracle is the ann_ivfpq_persist

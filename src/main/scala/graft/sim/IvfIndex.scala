@@ -1,5 +1,7 @@
 package graft.sim
 
+import graft.core.io.StoreDir
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,9 +32,13 @@ import org.apache.spark.sql.functions._
   * SQL oracle replays build+query end-to-end and a rebuilt index is
   * bit-identical to an appended one given the same centroid set.
   * Parquet round-trips float arrays exactly, so persisted vectors score
-  * identically to in-memory ones.
+  * identically to in-memory ones. Every rewrite of a part (build,
+  * compact, rebuild) is staged and swapped in by [[StoreDir]], and every
+  * reader and writer runs its recover first.
   */
 object IvfIndex {
+
+  private val ivfParts = Seq("centroids", "postings", "cells")
 
   /** Coarse-quantize `emb` against the m-row `cents` frame (broadcast —
     * m ≪ n) and keep each vector's top-1 cell. One map-side pass: the
@@ -61,30 +67,29 @@ object IvfIndex {
     * `postings/`). `centroidMod <= 0` auto-sizes to ⌊√n⌋ cells — the
     * IVF balance point (assignment n^1.5, probe volume nprobe·√n per
     * query); an explicit positive mod is the paper-replay opt-in.
-    * Overwrites any prior index at the path (a rebuild).
+    * Replaces any prior index at the path (a rebuild); a crashed
+    * [[rebuild]] is finished first and then superseded.
     */
   def build(emb: DataFrame, outDir: String, centroidMod: Int = 0,
             idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    // a fresh build SUPERSEDES any crashed rebuild: drop its marker and
-    // staged/aside artifacts FIRST — recoverRebuild would otherwise
-    // finish the stale swap on the next read and silently clobber this
-    // build's dirs with the pre-crash staged ones
-    clearRebuildState(emb.sparkSession, outDir)
+    val spark = emb.sparkSession
+    val st = new StoreDir(spark, outDir)
+    st.begin(ivfParts)
     val mod =
       if (centroidMod > 0) centroidMod.toLong
       else math.max(1L, math.sqrt(emb.count().toDouble).toLong)
     val cents = emb.filter(pmod(col(idCol), lit(mod)) === 0)
       .select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    cents.write.mode("overwrite").parquet(s"$outDir/centroids")
-    val spark = emb.sparkSession
-    assignTop1(emb, broadcast(spark.read.parquet(s"$outDir/centroids")),
+    cents.write.mode("overwrite").parquet(st.stage("centroids"))
+    assignTop1(emb, broadcast(spark.read.parquet(st.stage("centroids"))),
         idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$outDir/postings")
+      .write.mode("overwrite").parquet(st.stage("postings"))
     // cells sidecar: per-cell counts (cell grain — ≤ ⌈√n⌉ rows), kept in
     // lockstep by every append so stats/health never re-scan the store
-    spark.read.parquet(s"$outDir/postings")
+    spark.read.parquet(st.stage("postings"))
       .groupBy(col("cid")).agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(s"$outDir/cells")
+      .write.mode("overwrite").parquet(st.stage("cells"))
+    st.commit(ivfParts)
   }
 
   /** Land the batch's cell-count delta in the `cells/` sidecar (cell
@@ -97,16 +102,15 @@ object IvfIndex {
     * rewrites BOTH, so counts never double. A crash between the posting
     * write and the delta write undercounts health by one batch until
     * the replay (batched) or the next rebuild (unbatched) — advisory
-    * drift only, queries are unaffected.
+    * drift only, queries are unaffected. The caller has run the store's
+    * recover.
     */
   private[sim] def maintainCells(spark: SparkSession, indexDir: String,
                                  assigned: DataFrame, batchId: Option[Long],
                                  cellCol: String = "cid"): Unit = {
     val dir = s"$indexDir/cells"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, p)
-    if (!fs.exists(p)) return
+    val p = new Path(dir)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) return
     val delta = assigned.groupBy(col(cellCol).as("cid"))
       .agg(count(lit(1)).as("cnt"))
     batchId match {
@@ -122,7 +126,7 @@ object IvfIndex {
     */
   def append(spark: SparkSession, indexDir: String, newEmb: DataFrame,
              idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    recoverRebuild(spark, indexDir)
+    new StoreDir(spark, indexDir).recover()
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val assigned = assignTop1(newEmb, broadcast(cents), idCol, vecCol)
       .localCheckpoint(eager = false)
@@ -141,7 +145,7 @@ object IvfIndex {
   def appendBatch(spark: SparkSession, indexDir: String, newEmb: DataFrame,
                   batchId: Long,
                   idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    recoverRebuild(spark, indexDir)
+    new StoreDir(spark, indexDir).recover()
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val assigned = assignTop1(newEmb, broadcast(cents), idCol, vecCol)
       .localCheckpoint(eager = false)
@@ -149,124 +153,70 @@ object IvfIndex {
     maintainCells(spark, indexDir, assigned, Some(batchId))
   }
 
-  /** Heal a dir from a [[compactDir]] swap interrupted between the two
-    * renames: canonical missing + the rename-aside `__old` survivor
-    * present → rename it back. Idempotent; called by readers and by
-    * compactDir itself, so a crashed compaction never needs manual
-    * repair.
-    */
-  private def recoverDir(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(p.toString + "__old")
-    if (!fs.exists(p) && fs.exists(old)) fs.rename(old, p)
-  }
-
   /** Posting-store read: recursive, so the flat layout and the
-    * streaming per-batch subdir layout both resolve; self-heals a
-    * store whose compaction swap was interrupted (see [[compactDir]]).
+    * streaming per-batch subdir layout both resolve. The caller has run
+    * the store's recover.
     */
-  private[sim] def readPostings(spark: SparkSession, indexDir: String): DataFrame = {
-    recoverRebuild(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
-    recoverDir(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  private[sim] def readPostings(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$indexDir/postings")
-  }
 
-  /** Rewrite a parquet dir into ⌈bytes/targetBytes⌉ files — the
-    * OPTIMIZE step for a posting store that has taken many [[append]]
-    * batches (each append adds part-files; a long-running ingest
-    * accumulates thousands — the CorpusIngest small-file lesson).
+  /** Stage a compacted copy of `part`: ⌈bytes/targetBytes⌉ files — the
+    * OPTIMIZE step for a store that has taken many [[append]] batches
+    * (each append adds part-files; a long-running ingest accumulates
+    * thousands — the CorpusIngest small-file lesson). A missing part
+    * stages nothing.
     *
-    * Two invariants (both spec-pinned by a kill at every step):
-    *
-    *  - '''No loss at any crash point.''' The compacted tree is fully
-    *    written to an invisible `__compact` sibling first, then swapped
-    *    in by rename-old-aside (`__old`) → rename-new-in → delete-old.
-    *    The canonical path is complete-old before the first rename and
-    *    complete-new after the second; in the one window where it is
-    *    absent the data exists at BOTH siblings and [[recoverDir]]
-    *    (invoked on every read and on the next compact) renames `__old`
-    *    back. The r10 shape (delete-then-rename) had a window that left
-    *    the canonical path empty — closed here.
-    *  - '''The streaming replay boundary survives.''' Per-batch `b<N>`
-    *    subdirs are [[appendBatch]]'s idempotent overwrite units; a
-    *    checkpoint restart replays at most the ONE batch whose offsets
-    *    committed but whose batch didn't — always the newest-numbered
-    *    dir. Compaction folds everything EXCEPT the newest `b<N>` into
-    *    flat target-sized files and rewrites the newest as its own
-    *    compacted subdir, so a replayed batch still overwrites exactly
-    *    its own rows, never double-counts against folded copies.
-    *    (Contract as [[graft.streaming.CorpusIngest]]: a fresh
-    *    checkpoint over an existing store is a misuse on every path.)
-    *
-    * `failAfter` is a test-only kill switch (throws after swap step k).
+    * The streaming replay boundary survives: per-batch `b<N>` subdirs
+    * are [[appendBatch]]'s idempotent overwrite units, and a checkpoint
+    * restart replays at most the ONE batch whose offsets committed but
+    * whose batch didn't — always the newest-numbered dir. Everything but
+    * the newest `b<N>` ([[StoreDir.foldSplit]]) folds into flat
+    * target-sized files and the newest is rewritten as its own compacted
+    * subdir, so a replayed batch still overwrites exactly its own rows,
+    * never double-counts against folded copies. (Contract as
+    * [[graft.streaming.CorpusIngest]]: a fresh checkpoint over an
+    * existing store is a misuse on every path.)
     */
-  private[graft] def compactDir(spark: SparkSession, dir: String,
-                              targetBytes: Long,
-                              failAfter: Int = Int.MaxValue): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, p)
-    if (!fs.exists(p)) return
-    val old = new Path(dir + "__old")
-    val tmp = new Path(dir + "__compact")
-    fs.delete(old, true) // stray from a crash after rename-new-in
-    fs.delete(tmp, true) // stray partial from a crash before the swap
-    val entries = fs.listStatus(p)
-    // newest b<N> = the only dir a checkpoint restart can still replay
-    val batchDirs = entries.filter(s => s.isDirectory &&
-      s.getPath.getName.matches("b\\d+"))
-    val newest = batchDirs.map(_.getPath.getName.drop(1).toLong)
-      .sorted.lastOption
-    val foldInputs = entries
-      .filterNot(s => newest.contains(
-        scala.util.Try(s.getPath.getName.drop(1).toLong).getOrElse(-1L))
-        && s.getPath.getName.matches("b\\d+"))
-      .filterNot(s => s.isFile &&
-        (s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith(".")))
-      .map(_.getPath)
+  private[graft] def stageCompacted(st: StoreDir, part: String,
+                                    targetBytes: Long): Unit = {
+    val p = new Path(st.path(part))
+    if (!st.fs.exists(p)) return
+    val (fold, newest) = StoreDir.foldSplit(st.fs, p)
     def nFiles(bytes: Long): Int =
       math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    if (foldInputs.nonEmpty) {
-      val bytes = foldInputs.map(fp => fs.getContentSummary(fp).getLength).sum
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(foldInputs.map(_.toString).toIndexedSeq: _*)
-        .coalesce(nFiles(bytes))
-        .write.mode("overwrite").parquet(tmp.toString)
-    } else fs.mkdirs(tmp)
+    if (fold.nonEmpty)
+      st.spark.read.option("recursiveFileLookup", "true")
+        .parquet(fold.map(_.toString): _*)
+        .coalesce(nFiles(fold.map(st.fs.getContentSummary(_).getLength).sum))
+        .write.mode("overwrite").parquet(st.stage(part))
+    else st.fs.mkdirs(new Path(st.stage(part)))
     newest.foreach { b =>
-      val bp = new Path(p, s"b$b")
-      spark.read.parquet(bp.toString)
-        .coalesce(nFiles(fs.getContentSummary(bp).getLength))
-        .write.mode("overwrite").parquet(new Path(tmp, s"b$b").toString)
+      val bp = new Path(p, b)
+      st.spark.read.parquet(bp.toString)
+        .coalesce(nFiles(st.fs.getContentSummary(bp).getLength))
+        .write.mode("overwrite").parquet(s"${st.stage(part)}/$b")
     }
-    def kill(k: Int): Unit =
-      if (failAfter <= k) throw new IllegalStateException(
-        s"compactDir test kill at step $k")
-    kill(1)             // canonical untouched; tmp is a stray
-    fs.rename(p, old)
-    kill(2)             // canonical absent; complete at __old AND __compact
-    fs.rename(tmp, p)
-    kill(3)             // canonical new; __old is a stray
-    fs.delete(old, true)
   }
 
   /** Fold the posting store's accumulated append part-files into
     * target-sized ones. Results are unaffected (row-set identical);
     * run after a burst of [[append]] batches — and safe between stream
     * runs: the newest `b<N>` replay unit is preserved (see
-    * [[compactDir]]).
+    * [[stageCompacted]]). The cells sidecar, whose `b<N>` deltas are
+    * replay-paired with the postings', folds in the same swap.
     */
   def compact(spark: SparkSession, indexDir: String,
-              targetBytes: Long = 128L << 20): Unit = {
-    recoverRebuild(spark, indexDir)
-    compactDir(spark, s"$indexDir/postings", targetBytes)
-    // the cells sidecar accumulates one tiny delta per append — fold it
-    // with the same newest-b<N> preservation (its b<N> is replay-paired
-    // with the posting store's)
-    compactDir(spark, s"$indexDir/cells", targetBytes)
+              targetBytes: Long = 128L << 20): Unit =
+    compactParts(spark, indexDir, Seq("postings", "cells"), targetBytes)
+
+  /** Stage every part of `parts` compacted and swap them in together. */
+  private[sim] def compactParts(spark: SparkSession, indexDir: String,
+                                parts: Seq[String], targetBytes: Long): Unit = {
+    val st = new StoreDir(spark, indexDir)
+    st.begin(parts)
+    parts.foreach(stageCompacted(st, _, targetBytes))
+    st.commit(parts)
   }
 
   /** Index-health audit: cell-occupancy histogram over the posting
@@ -295,11 +245,9 @@ object IvfIndex {
     */
   private def cellCounts(spark: SparkSession, indexDir: String,
                          cellCol: String): DataFrame = {
-    recoverRebuild(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/cells")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, p)
-    if (fs.exists(p))
+    val st = new StoreDir(spark, indexDir)
+    st.recover()
+    if (st.fs.exists(new Path(st.path("cells"))))
       spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$indexDir/cells")
         .groupBy(col("cid")).agg(sum(col("cnt")).as("cnt"))
@@ -363,37 +311,25 @@ object IvfIndex {
     * [[build]] rule over the GROWN id population) and re-runs the n·√n
     * assignment once.
     *
-    * Crash-safe via staged artifacts + a marker-bracketed swap: new
-    * `centroids`/`postings`/`cells` are fully written as invisible
-    * `__stage` siblings first; a `_rebuild_swap` marker brackets the
-    * rename window, and [[recoverRebuild]] — run by every reader and
-    * writer — finishes an interrupted swap, so a crash at ANY step
-    * self-heals to either the complete old or the complete new index
-    * (spec-pinned by a kill at every step). Queries keep answering
-    * throughout the staging phase (the long part — canonical dirs are
-    * untouched); the swap itself is three renames.
+    * Crash-safe: new `centroids`/`postings`/`cells` are fully staged
+    * and swapped in together by [[StoreDir]], so a crash at ANY step
+    * heals to either the complete old or the complete new index. Queries
+    * keep answering throughout the staging phase (the long part — live
+    * dirs are untouched); the swap itself is a few renames.
     *
     * The newest streaming `b<N>` subdir survives as its own replay unit
-    * (the [[compactDir]] contract): its rows are reassigned into
+    * (the [[stageCompacted]] contract): its rows are reassigned into
     * `postings/b<N>` + a paired `cells/b<N>` delta, so a checkpoint
     * restart's replayed batch still overwrites exactly its own rows —
     * against the NEW centroid table, which is what [[appendBatch]]
     * reads after the swap.
     *
-    * IVF-only: PQ codes are lossy, so a [[PqIndex]] retrain is a fresh
-    * `PqIndex.build` from the corpus (documented there).
+    * IVF-only: PQ codes are lossy, so a [[PqIndex]] retrain re-reads the
+    * corpus ([[PqIndex.rebuild]]).
     */
-  def rebuild(spark: SparkSession, indexDir: String, centroidMod: Int = 0,
-              failAfter: Int = Int.MaxValue): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRebuild(spark, indexDir)
-    val parts = ivfParts
-    parts.foreach { d => // strays from a crash before the marker
-      fs.delete(new Path(s"$indexDir/${d}__stage"), true)
-      fs.delete(new Path(s"$indexDir/${d}__old"), true)
-    }
+  def rebuild(spark: SparkSession, indexDir: String, centroidMod: Int = 0): Unit = {
+    val st = new StoreDir(spark, indexDir)
+    st.begin(ivfParts)
     val all = readPostings(spark, indexDir).select(col("id"), col("v"))
       .localCheckpoint(eager = false)
     val mod =
@@ -401,143 +337,30 @@ object IvfIndex {
       else math.max(1L, math.sqrt(all.count().toDouble).toLong)
     all.filter(pmod(col("id"), lit(mod)) === 0)
       .select(col("id").as("cid"), col("v").as("cv"))
-      .write.mode("overwrite").parquet(s"$indexDir/centroids__stage")
-    val cents = broadcast(spark.read.parquet(s"$indexDir/centroids__stage"))
-    // newest b<N> = the one dir a checkpoint restart can still replay
-    val entries = fs.listStatus(new Path(s"$indexDir/postings"))
-    val newest = entries
-      .filter(s => s.isDirectory && s.getPath.getName.matches("b\\d+"))
-      .map(_.getPath.getName.drop(1).toLong).sorted.lastOption
-    val foldInputs = entries
-      .filterNot(s => s.isDirectory &&
-        newest.contains(
-          scala.util.Try(s.getPath.getName.drop(1).toLong).getOrElse(-1L)) &&
-        s.getPath.getName.matches("b\\d+"))
-      .filterNot(s => s.isFile &&
-        (s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith(".")))
-      .map(_.getPath.toString)
-    def reassign(src: DataFrame, dest: String): Unit = {
+      .write.mode("overwrite").parquet(st.stage("centroids"))
+    val cents = broadcast(spark.read.parquet(st.stage("centroids")))
+    val (fold, newest) = StoreDir.foldSplit(st.fs, new Path(st.path("postings")))
+    def reassign(src: DataFrame, sub: String): Unit = {
       val a = assignTop1(src.select(col("id"), col("v")), cents, "id", "v")
         .localCheckpoint(eager = false)
-      a.write.mode("overwrite").parquet(dest)
+      a.write.mode("overwrite").parquet(st.stage("postings") + sub)
       a.groupBy(col("cid")).agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(
-          dest.replace("postings__stage", "cells__stage"))
+        .write.mode("overwrite").parquet(st.stage("cells") + sub)
     }
-    if (foldInputs.nonEmpty)
+    if (fold.nonEmpty)
       reassign(spark.read.option("recursiveFileLookup", "true")
-          .parquet(foldInputs.toIndexedSeq: _*),
-        s"$indexDir/postings__stage")
+        .parquet(fold.map(_.toString): _*), "")
     else {
-      fs.mkdirs(new Path(s"$indexDir/postings__stage"))
-      // keep the staged artifact set complete even for a degenerate
-      // (empty) store: a missing cells__stage would otherwise skip the
-      // cells swap and leave a stale sidecar next to empty postings
-      fs.mkdirs(new Path(s"$indexDir/cells__stage"))
+      // keep the staged part set complete even for a degenerate (empty)
+      // store: a missing cells stage would skip the cells swap and leave
+      // a stale sidecar next to empty postings
+      st.fs.mkdirs(new Path(st.stage("postings")))
+      st.fs.mkdirs(new Path(st.stage("cells")))
     }
     newest.foreach { b =>
-      reassign(spark.read.parquet(s"$indexDir/postings/b$b"),
-        s"$indexDir/postings__stage/b$b")
+      reassign(spark.read.parquet(s"${st.path("postings")}/$b"), s"/$b")
     }
-    def kill(k: Int): Unit =
-      if (failAfter <= k) throw new IllegalStateException(
-        s"rebuild test kill at step $k")
-    kill(1)                       // canonical untouched; stages are strays
-    writeMarker(fs, indexDir, parts)
-    parts.zipWithIndex.foreach { case (d, i) =>
-      kill(2 + 2 * i)             // marker up; recoverRebuild finishes
-      swapPart(fs, indexDir, d)
-      kill(3 + 2 * i)
-      fs.delete(new Path(s"$indexDir/${d}__old"), true)
-    }
-    fs.delete(new Path(s"$indexDir/_rebuild_swap"), true)
-  }
-
-  private[sim] val ivfParts = Seq("centroids", "postings", "cells")
-
-  /** Stamp the `_rebuild_swap` marker with the artifact list it
-    * brackets, so [[recoverRebuild]] — invoked by EVERY reader entry
-    * point, including [[PqIndex]] stores whose artifact set differs —
-    * finishes the right swap. An empty/legacy marker recovers the IVF
-    * part set.
-    */
-  private[sim] def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
-                          indexDir: String, parts: Seq[String]): Unit = {
-    graft.core.io.Storage.writeString(fs, new org.apache.hadoop.fs.Path(s"$indexDir/_rebuild_swap"),
-      parts.mkString(","), overwrite = true)
-  }
-
-  private[sim] def readMarkerParts(fs: org.apache.hadoop.fs.FileSystem,
-                              indexDir: String): Option[Seq[String]] = {
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_rebuild_swap")
-    graft.core.io.Storage.readString(fs, marker).toOption
-      .map(_.trim.split(",").map(_.trim).filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
-  }
-
-  /** One guarded swap step for artifact `d`: rename canonical aside and
-    * the `__stage` sibling in. Safe under writer/reader overlap — the
-    * scaladoc'd contract is that queries keep answering DURING a
-    * rebuild, and every reader runs [[recoverRebuild]], so a reader can
-    * complete the whole swap (and clear the marker) while the rebuild
-    * writer is still inside its own swap loop. The r12 shape renamed
-    * the freshly-swapped-in canonical dir aside, silently failed the
-    * stage rename (unchecked boolean), then deleted the new data with
-    * `delete(old)`. Guards: a part whose stage is ALREADY consumed is
-    * skipped outright (never touches canonical), and a failed rename is
-    * an error UNLESS the end state shows a concurrent recover won the
-    * race (canonical present, stage gone).
-    */
-  private[sim] def swapPart(fs: org.apache.hadoop.fs.FileSystem,
-                            indexDir: String, d: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val stage = new Path(s"$indexDir/${d}__stage")
-    val can = new Path(s"$indexDir/$d")
-    val old = new Path(s"$indexDir/${d}__old")
-    if (!fs.exists(stage)) return // already swapped, or never staged
-    if (fs.exists(can) && !fs.rename(can, old) && fs.exists(can))
-      throw new IllegalStateException(
-        s"rebuild swap: could not rename $can aside")
-    if (!fs.rename(stage, can) && !(fs.exists(can) && !fs.exists(stage)))
-      throw new IllegalStateException(
-        s"rebuild swap: could not rename $stage into place")
-  }
-
-  /** Finish a [[rebuild]] swap interrupted by a crash: while the
-    * `_rebuild_swap` marker stands, any artifact whose `__stage` sibling
-    * still exists gets its swap completed (old renamed aside, stage
-    * renamed in), strays are dropped, and the marker is cleared.
-    * Idempotent; invoked by every reader/writer entry point, so a store
-    * killed mid-swap needs no manual repair.
-    */
-  /** Abandon a crashed [[rebuild]] outright (marker + staged + aside
-    * artifacts deleted) — for writers that are about to overwrite every
-    * canonical dir anyway ([[build]]), where finishing the stale swap
-    * would clobber the new data. Any canonical dir a crashed swap left
-    * missing is recreated by the caller's overwrite writes.
-    */
-  private[sim] def clearRebuildState(spark: SparkSession, indexDir: String,
-                                     defaultParts: Seq[String] = ivfParts): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$indexDir/_rebuild_swap")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = readMarkerParts(fs, indexDir).getOrElse(defaultParts)
-    fs.delete(marker, false)
-    parts.foreach { d =>
-      fs.delete(new Path(s"$indexDir/${d}__stage"), true)
-      fs.delete(new Path(s"$indexDir/${d}__old"), true)
-    }
-  }
-
-  private[sim] def recoverRebuild(spark: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$indexDir/_rebuild_swap")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) return
-    readMarkerParts(fs, indexDir).getOrElse(ivfParts).foreach { d =>
-      swapPart(fs, indexDir, d)
-      fs.delete(new Path(s"$indexDir/${d}__old"), true)
-    }
-    fs.delete(marker, true)
+    st.commit(ivfParts)
   }
 
   /** Close the maintenance loop: consult [[health]] and [[rebuild]]
@@ -588,7 +411,7 @@ object IvfIndex {
                       org.apache.spark.sql.Column,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
-    recoverRebuild(spark, indexDir)
+    new StoreDir(spark, indexDir).recover()
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val postings = readPostings(spark, indexDir)
     val probes = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))

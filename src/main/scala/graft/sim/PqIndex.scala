@@ -1,5 +1,7 @@
 package graft.sim
 
+import graft.core.io.StoreDir
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,8 +29,9 @@ import org.apache.spark.sql.functions._
   *
   * [[append]] encodes only the new vectors against the FROZEN coarse
   * table and codebooks — the incremental path; quantization drift after
-  * heavy growth is a retrain (a fresh [[build]]), exactly as with
-  * [[IvfIndex]] centroids.
+  * heavy growth is a retrain ([[rebuild]]), exactly as with
+  * [[IvfIndex]] centroids. Part rewrites are staged and swapped in by
+  * [[StoreDir]], as in [[IvfIndex]].
   */
 object PqIndex {
 
@@ -81,12 +84,10 @@ object PqIndex {
             dims: Int = 64, m: Int = 16, k: Int = 16, lloydIters: Int = 0,
             idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m subspaces")
-    // a fresh build SUPERSEDES any crashed rebuild (the IvfIndex.build
-    // rule): drop its marker + staged/aside artifacts first, or the next
-    // reader's recoverRebuild would clobber this build with stale stages
-    IvfIndex.clearRebuildState(emb.sparkSession, outDir, pqParts)
     val subDim = dims / m
     val spark = emb.sparkSession
+    val st = new StoreDir(spark, outDir)
+    st.begin(pqParts)
     val micro = emb
       .select(col(idCol).as("id"), Clustering.microVec(col(vecCol)).as("vu"))
       .localCheckpoint(eager = false)
@@ -95,7 +96,7 @@ object PqIndex {
       else math.max(1L, math.sqrt(emb.count().toDouble).toLong)
     micro.filter(pmod(col("id"), lit(mod)) === 0)
       .select(col("id").as("ccid"), col("vu").as("cv"))
-      .write.mode("overwrite").parquet(s"$outDir/coarse")
+      .write.mode("overwrite").parquet(st.stage("coarse"))
     require(k <= 256, s"k=$k codewords exceed one byte per subspace")
     val sub = Pq.subvectors(micro, m, subDim).localCheckpoint(eager = false)
     var cb = Pq.codebook(micro, m, subDim, k).localCheckpoint(eager = false)
@@ -107,16 +108,17 @@ object PqIndex {
     cb.withColumn("ord",
         (row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("s")).orderBy(col("cid"))) - 1).cast("int"))
-      .write.mode("overwrite").parquet(s"$outDir/codebook")
-    val cents = spark.read.parquet(s"$outDir/coarse")
-    val book = spark.read.parquet(s"$outDir/codebook")
+      .write.mode("overwrite").parquet(st.stage("codebook"))
+    val cents = spark.read.parquet(st.stage("coarse"))
+    val book = spark.read.parquet(st.stage("codebook"))
     encode(micro, cents, broadcast(book), m, subDim)
-      .write.mode("overwrite").parquet(s"$outDir/postings")
+      .write.mode("overwrite").parquet(st.stage("postings"))
     // cells sidecar (see IvfIndex.maintainCells): per-cell counts so
     // stats/health merge deltas instead of re-scanning code postings
-    spark.read.parquet(s"$outDir/postings")
+    spark.read.parquet(st.stage("postings"))
       .groupBy(col("ccid").as("cid")).agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(s"$outDir/cells")
+      .write.mode("overwrite").parquet(st.stage("cells"))
+    st.commit(pqParts)
   }
 
   /** Encode only `newEmb` against the frozen coarse table + codebooks
@@ -126,7 +128,7 @@ object PqIndex {
   def append(spark: SparkSession, indexDir: String, newEmb: DataFrame,
              dims: Int = 64, m: Int = 16,
              idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    IvfIndex.recoverRebuild(spark, indexDir)
+    new StoreDir(spark, indexDir).recover()
     val subDim = dims / m
     val micro = newEmb
       .select(col(idCol).as("id"), Clustering.microVec(col(vecCol)).as("vu"))
@@ -149,7 +151,7 @@ object PqIndex {
   def appendBatch(spark: SparkSession, indexDir: String, newEmb: DataFrame,
                   batchId: Long, dims: Int = 64, m: Int = 16,
                   idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    IvfIndex.recoverRebuild(spark, indexDir)
+    new StoreDir(spark, indexDir).recover()
     val subDim = dims / m
     val micro = newEmb
       .select(col(idCol).as("id"), Clustering.microVec(col(vecCol)).as("vu"))
@@ -164,14 +166,11 @@ object PqIndex {
   }
 
   /** Fold the posting store's accumulated append part-files into
-    * target-sized ones (see [[IvfIndex.compactDir]]).
+    * target-sized ones (see [[IvfIndex.compact]]).
     */
   def compact(spark: SparkSession, indexDir: String,
-              targetBytes: Long = 128L << 20): Unit = {
-    IvfIndex.recoverRebuild(spark, indexDir)
-    IvfIndex.compactDir(spark, s"$indexDir/postings", targetBytes)
-    IvfIndex.compactDir(spark, s"$indexDir/cells", targetBytes)
-  }
+              targetBytes: Long = 128L << 20): Unit =
+    IvfIndex.compactParts(spark, indexDir, Seq("postings", "cells"), targetBytes)
 
   /** Cell-occupancy histogram of the code-posting store (see
     * [[IvfIndex.stats]] — same retrain-due signal, cell key `ccid`).
@@ -184,7 +183,7 @@ object PqIndex {
              maxTailShareMicro: Long = 250000L): DataFrame =
     IvfIndex.health(spark, indexDir, cellCol = "ccid", maxTailShareMicro)
 
-  private[sim] val pqParts = Seq("coarse", "codebook", "postings", "cells")
+  private val pqParts = Seq("coarse", "codebook", "postings", "cells")
 
   /** Retrain the memory-scale store — the staged, crash-safe analog of
     * [[IvfIndex.rebuild]] (the r12 judge gap: acting on `needs_rebuild`
@@ -194,36 +193,26 @@ object PqIndex {
     * drop out of the rebuilt index). Everything else follows the
     * IvfIndex protocol exactly:
     *
-    *  - new `coarse`/`codebook`/`postings`/`cells` are fully written as
-    *    invisible `__stage` siblings (the long phase — queries keep
-    *    answering from the canonical dirs throughout);
-    *  - the `_rebuild_swap` marker (stamped with the PQ artifact list,
-    *    so ANY reader's [[IvfIndex.recoverRebuild]] finishes the right
-    *    swap) brackets the rename window; a kill at any step self-heals
-    *    to the complete old or complete new index;
+    *  - new `coarse`/`codebook`/`postings`/`cells` are fully staged (the
+    *    long phase — queries keep answering from the live dirs
+    *    throughout) and swapped in together by [[StoreDir]], so a crash
+    *    at any step heals to the complete old or complete new index;
     *  - the newest streaming `b<N>` subdir survives as its own replay
-    *    unit: its ids are re-encoded against the NEW artifacts into
-    *    `postings__stage/b<N>` + a paired `cells__stage/b<N>` delta, so
-    *    a checkpoint restart's replayed batch still overwrites exactly
-    *    its own rows — against the artifacts [[appendBatch]] reads
-    *    after the swap.
+    *    unit: its ids are re-encoded against the NEW artifacts into the
+    *    staged `postings/b<N>` + a paired `cells/b<N>` delta, so a
+    *    checkpoint restart's replayed batch still overwrites exactly its
+    *    own rows — against the artifacts [[appendBatch]] reads after
+    *    the swap.
     */
   def rebuild(spark: SparkSession, indexDir: String, corpus: DataFrame,
               centroidMod: Int = 0, dims: Int = 64, m: Int = 16,
               k: Int = 16, lloydIters: Int = 0,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              failAfter: Int = Int.MaxValue): Unit = {
-    import org.apache.hadoop.fs.Path
+              idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m subspaces")
     require(k <= 256, s"k=$k codewords exceed one byte per subspace")
     val subDim = dims / m
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IvfIndex.recoverRebuild(spark, indexDir)
-    pqParts.foreach { d => // strays from a crash before the marker
-      fs.delete(new Path(s"$indexDir/${d}__stage"), true)
-      fs.delete(new Path(s"$indexDir/${d}__old"), true)
-    }
+    val st = new StoreDir(spark, indexDir)
+    st.begin(pqParts)
     val micro = corpus
       .select(col(idCol).as("id"), Clustering.microVec(col(vecCol)).as("vu"))
       .localCheckpoint(eager = false)
@@ -234,7 +223,7 @@ object PqIndex {
     // rebuilt store is bit-identical to a fresh full-corpus build
     micro.filter(pmod(col("id"), lit(mod)) === 0)
       .select(col("id").as("ccid"), col("vu").as("cv"))
-      .write.mode("overwrite").parquet(s"$indexDir/coarse__stage")
+      .write.mode("overwrite").parquet(st.stage("coarse"))
     val sub = Pq.subvectors(micro, m, subDim).localCheckpoint(eager = false)
     var cb = Pq.codebook(micro, m, subDim, k).localCheckpoint(eager = false)
     for (_ <- 1 to lloydIters)
@@ -242,44 +231,28 @@ object PqIndex {
     cb.withColumn("ord",
         (row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("s")).orderBy(col("cid"))) - 1).cast("int"))
-      .write.mode("overwrite").parquet(s"$indexDir/codebook__stage")
-    val cents = spark.read.parquet(s"$indexDir/coarse__stage")
-    val book = spark.read.parquet(s"$indexDir/codebook__stage")
+      .write.mode("overwrite").parquet(st.stage("codebook"))
+    val cents = spark.read.parquet(st.stage("coarse"))
+    val book = spark.read.parquet(st.stage("codebook"))
     val encoded = encode(micro, cents, broadcast(book), m, subDim)
       .localCheckpoint(eager = false)
-    // newest b<N> = the one dir a checkpoint restart can still replay
-    val newest = fs.listStatus(new Path(s"$indexDir/postings"))
-      .filter(s => s.isDirectory && s.getPath.getName.matches("b\\d+"))
-      .map(_.getPath.getName.drop(1).toLong).sorted.lastOption
-    def land(df: DataFrame, dest: String): Unit = {
-      df.write.mode("overwrite").parquet(dest)
+    def land(df: DataFrame, sub: String): Unit = {
+      df.write.mode("overwrite").parquet(st.stage("postings") + sub)
       df.groupBy(col("ccid").as("cid")).agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(
-          dest.replace("postings__stage", "cells__stage"))
+        .write.mode("overwrite").parquet(st.stage("cells") + sub)
     }
-    newest match {
+    StoreDir.foldSplit(st.fs, new Path(st.path("postings")))._2 match {
       case Some(b) =>
-        val bIds = spark.read.parquet(s"$indexDir/postings/b$b")
+        val bIds = spark.read.parquet(s"${st.path("postings")}/$b")
           .select(col("nid")).localCheckpoint(eager = true)
         land(encoded.join(broadcast(bIds), Seq("nid"), "left_anti")
-          .localCheckpoint(eager = false), s"$indexDir/postings__stage")
+          .localCheckpoint(eager = false), "")
         land(encoded.join(broadcast(bIds), Seq("nid"), "left_semi")
-          .localCheckpoint(eager = false), s"$indexDir/postings__stage/b$b")
+          .localCheckpoint(eager = false), s"/$b")
       case None =>
-        land(encoded, s"$indexDir/postings__stage")
+        land(encoded, "")
     }
-    def kill(kk: Int): Unit =
-      if (failAfter <= kk) throw new IllegalStateException(
-        s"pq rebuild test kill at step $kk")
-    kill(1)                       // canonical untouched; stages are strays
-    IvfIndex.writeMarker(fs, indexDir, pqParts)
-    pqParts.zipWithIndex.foreach { case (d, i) =>
-      kill(2 + 2 * i)             // marker up; recoverRebuild finishes
-      IvfIndex.swapPart(fs, indexDir, d)
-      kill(3 + 2 * i)
-      fs.delete(new Path(s"$indexDir/${d}__old"), true)
-    }
-    fs.delete(new Path(s"$indexDir/_rebuild_swap"), true)
+    st.commit(pqParts)
   }
 
   /** Close the maintenance loop for the memory-scale store: consult the
@@ -334,7 +307,7 @@ object PqIndex {
                       org.apache.spark.sql.Column,
                     dims: Int = 64, m: Int = 16,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    IvfIndex.recoverRebuild(spark, indexDir)
+    new StoreDir(spark, indexDir).recover()
     val subDim = dims / m
     val cents = spark.read.parquet(s"$indexDir/coarse")
     val book = spark.read.parquet(s"$indexDir/codebook")

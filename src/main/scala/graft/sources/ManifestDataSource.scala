@@ -1,8 +1,10 @@
 package graft.sources
 
+import graft.core.io.Storage
 import java.util
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -54,7 +56,9 @@ class ManifestDataSource extends TableProvider
   * lower-hex digest + two spaces + path — the exact fixed-width format
   * the read side and the reference's checksum_lib parse), then commits
   * by renaming from a task-attempt staging name — the standard
-  * write-task protocol, so failed/speculative attempts never surface.
+  * write-task protocol, so failed/speculative attempts never surface. A
+  * rename the file system refuses fails the task. Tasks open the file
+  * system from the session's Hadoop conf, broadcast once per write.
   */
 private class ManifestWriteBuilder(path: String, schema: StructType)
     extends org.apache.spark.sql.connector.write.WriteBuilder {
@@ -63,21 +67,23 @@ private class ManifestWriteBuilder(path: String, schema: StructType)
     s"manifest write needs (checksum, file [, ...]) columns, got " +
       schema.fieldNames.mkString(","))
   override def build(): Write = new Write {
+    private val conf = Storage.taskConf(SparkSession.active)
     override def toBatch: BatchWrite = new BatchWrite {
       override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new ManifestWriterFactory(path)
+        new ManifestWriterFactory(path, conf)
       override def commit(messages: Array[WriterCommitMessage]): Unit = ()
       override def abort(messages: Array[WriterCommitMessage]): Unit = ()
     }
   }
 }
 
-private class ManifestWriterFactory(path: String)
+private class ManifestWriterFactory(path: String,
+    conf: Broadcast[org.apache.spark.util.SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   import org.apache.spark.sql.connector.write._
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val fs = new Path(path).getFileSystem(new Configuration())
+      private val fs = new Path(path).getFileSystem(conf.value.value)
       private val staged = new Path(path, s".part-$partitionId-$taskId.manifest.inprogress")
       private val out = fs.create(staged, true)
       private val w = new java.io.BufferedWriter(
@@ -90,7 +96,7 @@ private class ManifestWriterFactory(path: String)
       }
       override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
         w.close()
-        fs.rename(staged, new Path(path, s"part-$partitionId.manifest"))
+        Storage.rename(fs, staged, new Path(path, s"part-$partitionId.manifest"))
         new WriterCommitMessage {}
       }
       override def abort(): Unit = { w.close(); fs.delete(staged, false); () }
@@ -304,7 +310,7 @@ private class ManifestScan(path: String, required: StructType,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
     val files =
       if (fs.getFileStatus(p).isDirectory)
         fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)
@@ -313,12 +319,15 @@ private class ManifestScan(path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(required, pushed, aggs, groupCols, limit)
+    new ManifestReaderFactory(Storage.taskConf(SparkSession.active), required, pushed,
+      aggs, groupCols, limit)
 }
 
 private case class ManifestFilePartition(file: String) extends InputPartition
 
-private class ManifestReaderFactory(required: StructType,
+private class ManifestReaderFactory(
+    conf: Broadcast[org.apache.spark.util.SerializableConfiguration],
+    required: StructType,
     pushed: Array[org.apache.spark.sql.sources.Filter],
     aggs: Option[Seq[ManifestAgg]] = None,
     groupCols: Seq[String] = Nil,
@@ -327,7 +336,7 @@ private class ManifestReaderFactory(required: StructType,
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[ManifestFilePartition].file
     aggs match {
-      case Some(a) => new ManifestAggReader(file, pushed, a, groupCols)
+      case Some(a) => new ManifestAggReader(conf, file, pushed, a, groupCols)
       case None => createRowReader(file)
     }
   }
@@ -335,7 +344,7 @@ private class ManifestReaderFactory(required: StructType,
   private def createRowReader(file: String): PartitionReader[InternalRow] = {
     new PartitionReader[InternalRow] {
       private val p = new Path(file)
-      private val in = p.getFileSystem(new Configuration()).open(p)
+      private val in = p.getFileSystem(conf.value.value).open(p)
       private val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, "UTF-8"))
       private var current: String = _
@@ -374,7 +383,9 @@ private class ManifestReaderFactory(required: StructType,
   * aggregate ignores — the same null contract parquet's pushed
   * aggregates follow.
   */
-private class ManifestAggReader(file: String,
+private class ManifestAggReader(
+    conf: Broadcast[org.apache.spark.util.SerializableConfiguration],
+    file: String,
     pushed: Array[org.apache.spark.sql.sources.Filter],
     aggs: Seq[ManifestAgg],
     groupCols: Seq[String] = Nil) extends PartitionReader[InternalRow] {
@@ -387,7 +398,7 @@ private class ManifestAggReader(file: String,
 
   private lazy val rows: Iterator[InternalRow] = {
     val p = new Path(file)
-    val in = p.getFileSystem(new Configuration()).open(p)
+    val in = p.getFileSystem(conf.value.value).open(p)
     val reader = new java.io.BufferedReader(
       new java.io.InputStreamReader(in, "UTF-8"))
     val groups = new java.util.LinkedHashMap[Seq[String], Acc]()

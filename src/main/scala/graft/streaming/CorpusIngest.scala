@@ -102,7 +102,8 @@ object CorpusIngest {
     * duplicate rows are collapsed per group by id.
     * Returns the number of subdirs folded.
     *
-    * Crash-window audit (the IvfIndex.compactDir lesson applied here):
+    * Crash-window audit (the store-swap lesson of
+    * [[graft.core.io.StoreDir]] applied here):
     * there is NO delete-before-copy window — every c-dir group is fully
     * committed before any input subdir is removed, so a kill at any
     * point leaves the full id set readable (possibly with duplicate

@@ -21,7 +21,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * stream runs — safe even when the last micro-batch was written but
   * not yet committed to the checkpoint: compaction preserves the
   * newest `b<N>` subdir as its own replay unit, so the restart's
-  * replay overwrites exactly its own rows (see [[IvfIndex.compactDir]]).
+  * replay overwrites exactly its own rows (see [[IvfIndex.stageCompacted]];
+  * the swap is [[graft.core.io.StoreDir]]'s).
   */
 object EmbIngest {
 
@@ -60,7 +61,7 @@ object EmbIngest {
         Maintenance.withBlockCleanup(spark) {
           IvfIndex.appendBatch(spark, indexDir, batch.toDF(), id, idCol, vecCol)
           // in-sink compaction every K batches: safe mid-stream because
-          // compactDir preserves the newest b<N> — the batch just written
+          // compaction preserves the newest b<N> — the batch just written
           // — as its own replay unit
           if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
             IvfIndex.compact(spark, indexDir, targetBytes)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * the store stays queryable throughout ([[PqIndex.query]] reads
   * recursively). `compactEvery = K` folds accumulated batch subdirs
   * every K batches from INSIDE the sink — safe mid-stream because
-  * [[graft.sim.IvfIndex.compactDir]] always preserves the
+  * [[graft.sim.IvfIndex.stageCompacted]] always preserves the
   * newest-numbered `b<N>` (the batch just written) as its own replay
   * unit.
   */

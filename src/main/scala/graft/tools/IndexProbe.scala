@@ -70,13 +70,13 @@ object IndexProbe {
       // a stale cells_hidden from a crashed prior run would make the
       // hide-rename silently fail and the "scan" leg measure the sidecar
       cfs.delete(hidden, true)
-      cfs.rename(cellsP, hidden)
+      graft.core.io.Storage.rename(cfs, cellsP, hidden)
       // restore even when the timed leg throws — a hidden sidecar would
       // silently degrade every later probe (and the store) to the
       // posting-scan path
       try rows += (s"${tag}_ivf_health_scan" ->
         timed(noop(graft.sim.IvfIndex.health(spark, ivfDir))))
-      finally cfs.rename(hidden, cellsP)
+      finally graft.core.io.Storage.rename(cfs, hidden, cellsP)
       // r12: the rebuild maintenance op (retrain + full reassign + swap)
       rows += (s"${tag}_ivf_rebuild" ->
         timed(graft.sim.IvfIndex.rebuild(spark, ivfDir)))

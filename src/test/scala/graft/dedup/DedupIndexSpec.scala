@@ -1,13 +1,13 @@
 package graft.dedup
 
-import graft.SparkSpec
+import graft.core.io.FaultSweep
 import org.apache.spark.sql.functions._
 
 /** Persisted dedup-lineage store: provenance-from-store parity with the
   * inline recompute, incremental append vs full rebuild, idempotent
   * refresh, and replayable batch appends.
   */
-class DedupIndexSpec extends SparkSpec {
+class DedupIndexSpec extends FaultSweep {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
@@ -376,5 +376,52 @@ class DedupIndexSpec extends SparkSpec {
         .filter(_.startsWith("b")).toSet
       assert(subs == Set("base", "b2"), s"$d layout after fold: $subs")
     }
+  }
+
+  // ── a fault at every step of each store op heals (FaultyFs sweeps) ──
+
+  /** A reader entry point's answer (it runs the store's recover). */
+  private def versionList(idx: String) = DedupIndex.versions(spark, idx)
+
+  test("build: a fault at every step heals to the old or the new store") {
+    val master = scratch("fault_build_master")
+    DedupIndex.build(docs().filter($"doc_id" % 2 === 0), master, n = 3, threshold = 0.10)
+    val crash = scratch("fault_build")
+    val steps = sweepFaults(master, crash)(
+      DedupIndex.build(docs(), _, n = 3, threshold = 0.10))(versionList)()
+    // every part is replaced: one marker, two renames and a drop per
+    // part, the marker cleared
+    assert(steps == 2 + 3 * 6)
+    assert(storeRows(master) != storeRows(s"$crash/done"))
+  }
+
+  test("batch append: a fault at every step of the label swap heals") {
+    val master = scratch("fault_append_master")
+    DedupIndex.build(docs().filter($"doc_id" % 5 =!= 0), master, n = 3, threshold = 0.10)
+    // the batch's postings, pairs and sidecar deltas are its replay unit
+    // (overwritten by a re-run); the label frame is what the swap guards
+    def labelRows(idx: String) =
+      DedupIndex.labels(spark, idx).as[(Long, Long)].collect().sorted.toSeq
+    val crash = scratch("fault_append")
+    sweepFaults(master, crash, rows = labelRows)(DedupIndex.append(spark, _,
+      docs().filter($"doc_id" % 5 === 0), n = 3, threshold = 0.10,
+      batchId = Some(0L)))(labelRows)()
+    assert(labelRows(master) != labelRows(s"$crash/done"))
+  }
+
+  test("compact: a fault at every step heals; the newest delta survives") {
+    val master = scratch("fault_compact_master")
+    DedupIndex.build(docs().filter($"doc_id" % 5 > 2), master, n = 3, threshold = 0.10)
+    (0 to 1).foreach { r =>
+      DedupIndex.append(spark, master, docs().filter($"doc_id" % 5 === r),
+        n = 3, threshold = 0.10, batchId = Some(r.toLong))
+    }
+    val views = (viewDf(master), viewSizes(master), prov(master))
+    val crash = scratch("fault_compact")
+    sweepFaults(master, crash)(DedupIndex.compact(spark, _))(versionList) { idx =>
+      Seq("postings", "pairs", "df", "sizes").foreach(d =>
+        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$idx/$d/b1")), d))
+    }
+    assert((viewDf(s"$crash/done"), viewSizes(s"$crash/done"), prov(s"$crash/done")) == views)
   }
 }

@@ -1,12 +1,12 @@
 package graft.sim
 
-import graft.SparkSpec
+import graft.core.io.{FaultSweep, FaultyFs}
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index lifecycle: build/query/append determinism and
   * parity with the inline [[Similarity.ivfTopK]] path.
   */
-class IvfIndexSpec extends SparkSpec {
+class IvfIndexSpec extends FaultSweep {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
@@ -94,35 +94,21 @@ class IvfIndexSpec extends SparkSpec {
     assert(got == expect.map { case (k, v) => (k, v) })
   }
 
+  /** A reader entry point's answer (it runs the store's recover). */
+  private def histogram(idx: String) = IvfIndex.stats(spark, idx).collect().toSeq
+
   test("compact swap: a kill at every step loses nothing (reads self-heal)") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val master = scratch("crash_master")
     IvfIndex.build(e.filter($"vec_id" % 3 === 0), master, centroidMod = 17)
     IvfIndex.appendBatch(spark, master, e.filter($"vec_id" % 3 === 1), 0L)
     IvfIndex.appendBatch(spark, master, e.filter($"vec_id" % 3 === 2), 1L)
-    val q = e.filter($"vec_id" % 50 === 0)
-    def answer(idx: String) = IvfIndex.query(spark, idx, q, nprobe = 2, k = 5)
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val expected = answer(master)
-    assert(expected.nonEmpty)
-    (1 to 3).foreach { k =>
-      val idx = scratch(s"crash_k$k")
-      copyDir(master, idx)
-      val died = intercept[IllegalStateException] {
-        IvfIndex.compactDir(spark, s"$idx/postings", 128L << 20, failAfter = k)
-      }
-      assert(died.getMessage.contains(s"step $k"))
-      // the VERY NEXT read self-heals and sees the complete row set
-      assert(answer(idx) == expected, s"after kill at step $k")
-      // and a re-run of compaction completes and still answers identically
-      IvfIndex.compact(spark, idx)
-      assert(answer(idx) == expected, s"after recompact from step-$k kill")
-      // no stray swap siblings survive the successful re-run
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/postings__old")))
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/postings__compact")))
-    }
+    val before = storeRows(master)
+    // every rename/delete of the swap fails in turn (thrown, or reported
+    // false); the next read self-heals to the complete row set, and a
+    // re-run compacts and leaves no swap artifact
+    sweepFaults(master, scratch("crash"))(IvfIndex.compact(spark, _))(histogram)()
+    assert(storeRows(s"${scratch("crash")}/done") == before)
   }
 
   test("compact preserves the newest b<N> replay unit; a replayed batch never double-counts") {
@@ -287,49 +273,27 @@ class IvfIndexSpec extends SparkSpec {
     def answer(idx: String) = IvfIndex.query(spark, idx, q, nprobe = 2, k = 5)
       .as[(Long, Long, Double, Int)].collect().toSet
     val oldAnswer = answer(master)
-    val done = scratch("rb_crash_done")
-    copyDir(master, done)
-    IvfIndex.rebuild(spark, done)
-    val newAnswer = answer(done)
-    assert(oldAnswer.nonEmpty && newAnswer.nonEmpty)
-    (1 to 7).foreach { k =>
-      val idx = scratch(s"rb_crash_k$k")
-      copyDir(master, idx)
-      val died = intercept[IllegalStateException] {
-        IvfIndex.rebuild(spark, idx, failAfter = k)
-      }
-      assert(died.getMessage.contains(s"step $k"))
-      // the next read self-heals: complete OLD before the marker goes
-      // up (step 1), complete NEW once it has (stages are fully staged)
-      val healed = answer(idx)
-      assert(healed == (if (k == 1) oldAnswer else newAnswer),
-        s"after kill at step $k")
-      // a re-run completes; the store answers as a finished rebuild
-      IvfIndex.rebuild(spark, idx)
-      assert(answer(idx) == newAnswer, s"after re-rebuild from step-$k kill")
-      // newest b0 replay unit survived every path
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/postings/b0")))
-      // no stray swap artifacts remain
-      Seq("centroids", "postings", "cells").foreach { d =>
-        assert(!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$idx/${d}__stage")), s"$d stage stray k=$k")
-        assert(!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$idx/${d}__old")), s"$d old stray k=$k")
-      }
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/_rebuild_swap")))
+    // the next read after a fault at any step is the complete OLD store
+    // (marker not up yet) or the complete NEW one; a re-run completes,
+    // the newest b0 replay unit survives, no swap artifact remains
+    val crash = scratch("rb_crash")
+    sweepFaults(master, crash)(IvfIndex.rebuild(spark, _))(histogram) { idx =>
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$idx/postings/b0")))
     }
+    val newAnswer = answer(s"$crash/done")
+    assert(oldAnswer.nonEmpty && newAnswer.nonEmpty && newAnswer != oldAnswer)
   }
 
   test("build supersedes a crashed rebuild: stale stages never clobber the fresh build") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val idx = scratch("supersede")
     IvfIndex.build(e.filter($"vec_id" % 2 === 0), idx, centroidMod = 17)
-    // crash in the widest window: marker up, all three stages staged
-    intercept[IllegalStateException] {
-      IvfIndex.rebuild(spark, idx, failAfter = 2)
-    }
+    // crash in the widest window: marker up, all three parts staged, the
+    // first rename-aside fails
+    FaultyFs.bind(spark)
+    val (died, _) = FaultyFs.armed(idx, 2, FaultyFs.Throw)(
+      IvfIndex.rebuild(spark, FaultyFs.uri(idx)))
+    assert(died.exists(_.isInstanceOf[FaultyFs.Injected]))
     // operator recovers with a fresh build over a DIFFERENT corpus —
     // the stale staged artifacts must not resurface on the next read
     IvfIndex.build(e, idx, centroidMod = 17)
@@ -341,12 +305,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(a == IvfIndex.query(spark, control, q, nprobe = 2, k = 5)
       .as[(Long, Long, Double, Int)].collect().toSet)
     assert(a.nonEmpty)
-    Seq("centroids", "postings", "cells").foreach { d =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/${d}__stage")), s"$d stage stray")
-    }
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$idx/_rebuild_swap")))
+    assert(strays(idx).isEmpty)
   }
 
   test("queryFiltered: predicate candidates only; true-predicate equals query()") {

@@ -1,12 +1,12 @@
 package graft.sim
 
-import graft.SparkSpec
+import graft.core.io.{FaultSweep, FaultyFs}
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF-PQ index: parity with the inline ivfPqTopK path,
   * query repeatability, and frozen-codebook incremental append.
   */
-class PqIndexSpec extends SparkSpec {
+class PqIndexSpec extends FaultSweep {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
@@ -168,6 +168,13 @@ class PqIndexSpec extends SparkSpec {
       e.count())
   }
 
+  /** A reader entry point's answer (it runs the store's recover). */
+  private def histogram(idx: String) = PqIndex.stats(spark, idx).collect().toSeq
+
+  private def b0Survives(idx: String): Unit =
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$idx/postings/b0")), s"b0 lost in $idx")
+
   test("pq rebuild swap: a kill at every step self-heals to old or new, never loses") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val master = scratch("pqrb_master")
@@ -176,38 +183,28 @@ class PqIndexSpec extends SparkSpec {
     PqIndex.appendBatch(spark, master, e.filter($"vec_id" % 2 === 1), 0L,
       dims = 64, m = 16)
     val oldAnswer = query5(master)
-    val done = scratch("pqrb_done")
-    copyDir(master, done)
-    PqIndex.rebuild(spark, done, e, centroidMod = 0, dims = 64, m = 16, k = 16)
-    val newAnswer = query5(done)
-    assert(oldAnswer.nonEmpty && newAnswer.nonEmpty)
-    // 4 artifacts → steps 1..9 (stage-complete, then 2 per part)
-    (1 to 9).foreach { k =>
-      val idx = scratch(s"pqrb_k$k")
-      copyDir(master, idx)
-      val died = intercept[IllegalStateException] {
-        PqIndex.rebuild(spark, idx, e, centroidMod = 0,
-          dims = 64, m = 16, k = 16, failAfter = k)
-      }
-      assert(died.getMessage.contains(s"step $k"))
-      // the next READ self-heals via the PQ-stamped marker: complete OLD
-      // before the marker goes up (step 1), complete NEW after
-      val healed = query5(idx)
-      assert(healed == (if (k == 1) oldAnswer else newAnswer),
-        s"after kill at step $k")
-      PqIndex.rebuild(spark, idx, e, centroidMod = 0, dims = 64, m = 16, k = 16)
-      assert(query5(idx) == newAnswer, s"after re-rebuild from step-$k kill")
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/postings/b0")), s"b0 lost k=$k")
-      Seq("coarse", "codebook", "postings", "cells").foreach { d =>
-        assert(!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$idx/${d}__stage")), s"$d stage stray k=$k")
-        assert(!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$idx/${d}__old")), s"$d old stray k=$k")
-      }
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/_rebuild_swap")))
-    }
+    // the next READ after a fault at any step self-heals via the
+    // PQ-stamped marker: complete OLD before the marker goes up, complete
+    // NEW after; a re-run completes and b0 survives every path
+    val crash = scratch("pqrb")
+    sweepFaults(master, crash)(PqIndex.rebuild(spark, _, e, centroidMod = 0,
+      dims = 64, m = 16, k = 16))(histogram)(b0Survives)
+    val newAnswer = query5(s"$crash/done")
+    assert(oldAnswer.nonEmpty && newAnswer.nonEmpty && newAnswer != oldAnswer)
+  }
+
+  test("pq compact: a fault at every step heals; the b<N> replay unit survives") {
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    val master = scratch("pqc_master")
+    PqIndex.build(e.filter($"vec_id" % 3 === 0), master,
+      centroidMod = 0, dims = 64, m = 16, k = 16)
+    PqIndex.append(spark, master, e.filter($"vec_id" % 3 === 1), dims = 64, m = 16)
+    PqIndex.appendBatch(spark, master, e.filter($"vec_id" % 3 === 2), 0L,
+      dims = 64, m = 16)
+    val before = storeRows(master)
+    val crash = scratch("pqc")
+    sweepFaults(master, crash)(PqIndex.compact(spark, _))(histogram)(b0Survives)
+    assert(storeRows(s"$crash/done") == before)
   }
 
   test("build supersedes a crashed pq rebuild: stale stages never clobber") {
@@ -215,19 +212,18 @@ class PqIndexSpec extends SparkSpec {
     val idx = scratch("pq_supersede")
     PqIndex.build(e.filter($"vec_id" % 2 === 0), idx,
       centroidMod = 0, dims = 64, m = 16, k = 16)
-    intercept[IllegalStateException] {
-      PqIndex.rebuild(spark, idx, e, centroidMod = 0,
-        dims = 64, m = 16, k = 16, failAfter = 2)
-    }
+    // marker up, every part staged, the first rename-aside fails
+    FaultyFs.bind(spark)
+    val (died, _) = FaultyFs.armed(idx, 2, FaultyFs.Throw)(
+      PqIndex.rebuild(spark, FaultyFs.uri(idx), e, centroidMod = 0,
+        dims = 64, m = 16, k = 16))
+    assert(died.exists(_.isInstanceOf[FaultyFs.Injected]))
     PqIndex.build(e, idx, centroidMod = 0, dims = 64, m = 16, k = 16)
     val control = scratch("pq_supersede_ctl")
     PqIndex.build(e, control, centroidMod = 0, dims = 64, m = 16, k = 16)
     assert(query5(idx) == query5(control))
     assert(query5(idx).nonEmpty)
-    Seq("coarse", "codebook", "postings", "cells").foreach { d =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$idx/${d}__stage")), s"$d stage stray")
-    }
+    assert(strays(idx).isEmpty)
   }
 
   /** The IvfIndexSpec planted-drift shape (distinct vectors capped

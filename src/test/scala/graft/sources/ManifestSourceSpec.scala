@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.core.io.TextTables
+import graft.core.io.{FaultyFs, TextTables}
 import java.nio.file.Files
 
 class ManifestSourceSpec extends SparkSpec {
@@ -57,6 +57,26 @@ class ManifestSourceSpec extends SparkSpec {
     assert(back == Seq(
       (digest("x"), "data/x.docx", "x.docx"),
       (digest("y"), "deep/path/y.json", "y.json")))
+  }
+
+  test("write goes through the session's file system; a refused commit rename fails it") {
+    FaultyFs.bind(spark)
+    val df = Seq((digest("x"), "data/x.docx"), (digest("y"), "y.json"))
+      .toDF("checksum", "file").repartition(2)
+    def save(dir: String): Unit = df.write.format("graft.sources.ManifestDataSource")
+      .mode("append").save(FaultyFs.uri(dir))
+    // the `faulty:` binding lives only in the session's Hadoop conf
+    val ok = Files.createTempDirectory("manifestf").toString
+    save(ok)
+    assert(spark.read.format("graft.sources.ManifestDataSource")
+      .load(FaultyFs.uri(ok)).count() == 2)
+    // a task whose part rename is refused must fail the write, not
+    // commit it with that part missing
+    val refused = Files.createTempDirectory("manifestf").toString
+    val (failure, _) = FaultyFs.armed(refused, 1, FaultyFs.ReturnFalse)(save(refused))
+    assert(failure.exists(e => Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).exists(c => String.valueOf(c.getMessage).contains("could not rename"))),
+      s"write did not fail on the refused rename: $failure")
   }
 
   test("filter pushdown: handled predicates reach the scan and leave no residual") {
