@@ -11,46 +11,6 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** OPT-IN scale-adaptive fan-out for compute-dense operators.
-    *
-    * A parquet scan's task count is ⌈bytes / maxPartitionBytes⌉, and each
-    * test-SF table is ONE file with one row group — one task no matter
-    * the split size, which serializes scan-stage compute onto a single
-    * core while the rest of `local[N]` idles. For operators whose
-    * per-row work dwarfs an exchange (shingle explodes + digest mixes,
-    * vector dots, edit-distance verification, image codecs, per-row
-    * bootstrap draws), round-robining the input across
-    * defaultParallelism buys ~N× on that stage for a few-MB shuffle.
-    *
-    * Deliberately NOT applied at the shared table readers: a blanket
-    * fan-out was measured (same-JVM A/B, this round) to cost 0.5-5 s on
-    * scan-light and iterative queries — every downstream stage and every
-    * loop round inherits `target` tasks whose scheduling overhead
-    * exceeds the compute they carry. Each call site below this helper is
-    * an operator whose stage work is provably row-dominated.
-    *
-    * Scale posture: the trigger derives from input size and session
-    * parallelism — when the Catalyst size estimate says the scan already
-    * splits ≥ parallelism ways (any production input), this is a no-op.
-    * Sub-100 KB inputs are left alone. To A/B a change to it, run the
-    * parent and the change each from its own worktree.
-    * Determinism: gated results are partitioning-invariant by the
-    * repo's oracle design, and `repartition(n)` is deterministic under
-    * retries (sort-before-repartition, SPARK-23207).
-    */
-  def fanOutForCompute(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    val bytes =
-      try BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes.toString)
-      // NonFatal (r14, ADVICE item): a blanket Throwable would swallow
-      // OutOfMemoryError/fatal JVM errors into "skip the fan-out"
-      catch { case scala.util.control.NonFatal(_) => BigInt(-1) }
-    val splitBytes = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-    val splits = (bytes + splitBytes - 1) / splitBytes
-    if (bytes >= 100000 && splits < target) df.repartition(target) else df
-  }
-
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.ops.Hints
 import graft.text.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -14,34 +15,6 @@ import org.apache.spark.sql.functions._
   * meet; nothing is quadratic in the corpus.
   */
 object Dedup {
-
-  /** CPU-heavy per-row stages (shingling, signatures) must not inherit a
-    * single-partition layout from a small parquet file — one hot file
-    * would pin the whole stage to one core. Cheap to shuffle (input is
-    * small when this matters; at real scale inputs are already split).
-    */
-  /** Spread decision, factored out for the spec: repartition only when
-    * the file count can't fund `target` tasks AND the bytes can't either —
-    * a few-FILED but large input already splits into ≥ target scan
-    * partitions at maxPartitionBytes, and blanket-repartitioning 100 TB
-    * because it arrived in a handful of files would be a full-corpus
-    * shuffle for nothing.
-    */
-  private[graft] def shouldSpread(nFiles: Int, target: Int, bytes: BigInt,
-                                  maxPartBytes: Long): Boolean =
-    nFiles > 0 && nFiles < target && bytes < BigInt(maxPartBytes) * target
-
-  private[graft] def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // file-count guard: metadata-only, unlike df.rdd.getNumPartitions which
-    // forces plan→RDD conversion outside Catalyst and defeats AQE reuse
-    val nFiles = df.inputFiles.length
-    if (shouldSpread(nFiles, target,
-        graft.ops.Hints.estimatedBytes(df),
-        df.sparkSession.sessionState.conf.filesMaxPartitionBytes))
-      df.repartition(target)
-    else df
-  }
 
   /** Exact dedup on content hash: one row per distinct content with the
     * representative (min id) and the duplicate count. Single hash-shuffle.
@@ -130,7 +103,7 @@ object Dedup {
   private[graft] def shinglePostings(docs: DataFrame, n: Int,
                                      idCol: String = "doc_id",
                                      textCol: String = "text"): DataFrame =
-    spread(docs).select(col(idCol).as("id"),
+    Hints.spread(docs).select(col(idCol).as("id"),
       explode(array_distinct(TextAnalysis.shingles(col(textCol), n))).as("s"))
       .select(col("id"), shingleKey(col("s")).as("shingle"))
 
@@ -218,7 +191,7 @@ object Dedup {
     */
   def winnowPairs(docs: DataFrame, n: Int, window: Int, minShared: Long,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val keyed = spread(docs)
+    val keyed = Hints.spread(docs)
       .select(col(idCol).as("id"),
         posexplode(TextAnalysis.shingles(col(textCol), n)).as(Seq("pos", "s")))
       .select(col("id"), col("pos"),
@@ -263,7 +236,7 @@ object Dedup {
     // h-partitioned window count IS the per-window doc count — the
     // groupBy+filter+join-back shape read the big frame twice and paid a
     // join; the window pays the same per-partition sort once, no join
-    val w = spread(docs).select(col(idCol).as("id"), explode(windows).as("h"))
+    val w = Hints.spread(docs).select(col(idCol).as("id"), explode(windows).as("h"))
       .repartition(col("h"))
       .dropDuplicates("id", "h")
       .withColumn("ndocs", count(lit(1)).over(Window.partitionBy(col("h"))))
@@ -307,7 +280,7 @@ object Dedup {
     // all packed (level | window-hash) keys in ONE rolling pass per doc —
     // the native expression does O(1) work per position per level and
     // emits primitive longs (level in the 7 low bits)
-    val raw = spread(docs)
+    val raw = Hints.spread(docs)
       .select(col(idCol).as("id"),
         explode(graft.functions.dyadic_window_hashes(col(textCol), levels)).as("pk"))
     spanProfileFromWindows(docs, raw, levels.min, idCol, rawDistinct = true)
@@ -334,7 +307,7 @@ object Dedup {
     require(levels.nonEmpty && levels == levels.sorted, "levels must be ascending")
     require(levels.min < sampleFromLevel,
       "finest level must stay stride-1 (it carries the exact n_dup_min)")
-    val raw = spread(docs)
+    val raw = Hints.spread(docs)
       .select(col(idCol).as("id"),
         explode(graft.functions.dyadic_window_hashes_winnow(
           col(textCol), levels, sampleFromLevel, sampleWindow)).as("pk"))
@@ -354,7 +327,7 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(levels.nonEmpty && levels == levels.sorted, "levels must be ascending")
     val lvlArr = array(levels.map(lit): _*)
-    val w = spread(docs)
+    val w = Hints.spread(docs)
       .select(col(idCol).as("id"), col(textCol).as("t"),
         explode(sequence(lit(1), length(col(textCol)))).as("p"))
       .select(col("id"),
@@ -424,7 +397,7 @@ object Dedup {
     val benchSh = bench
       .select(explode(array_distinct(TextAnalysis.shingles(col(textCol), n))).as("g"))
       .distinct()
-    val docSh = spread(docs).select(col(idCol).as("id"),
+    val docSh = Hints.spread(docs).select(col(idCol).as("id"),
       explode(array_distinct(TextAnalysis.shingles(col(textCol), n))).as("g"))
     // per-doc shingles are distinct by construction ⇒ count = distinct count
     val hits = docSh.join(broadcast(benchSh), Seq("g"))
@@ -455,7 +428,7 @@ object Dedup {
       .select(explode(array_distinct(TextAnalysis.shingles(col(textCol), n))).as("g"))
       .select(shingleKey(col("g")).as("k")).distinct()
       .withColumn("hit", lit(1L))
-    val docK = spread(docs).select(col(idCol).as("id"),
+    val docK = Hints.spread(docs).select(col(idCol).as("id"),
       explode(array_distinct(TextAnalysis.shingles(col(textCol), n))).as("g"))
       .select(col("id"), shingleKey(col("g")).as("k"))
     docK.join(broadcast(benchK), Seq("k"), "left")
@@ -521,7 +494,7 @@ object Dedup {
     // shingle the corpus ONCE (lazy checkpoint): the signature branch and
     // the exact-rescore branch both read the materialized sets instead of
     // re-tokenizing + re-shingling per branch
-    val base = spread(docs).select(col(idCol).as("id"),
+    val base = Hints.spread(docs).select(col(idCol).as("id"),
       array_distinct(TextAnalysis.shingles(col(textCol), n)).as("shset"))
       // hashed sorted key arrays ride the same checkpoint: the rescore
       // below verifies candidates by one sorted-merge per pair instead
@@ -648,14 +621,13 @@ object Dedup {
       .localCheckpoint(eager = false)
     // r14 (guide §3.1, the kcore/pagerank treatment): every frame in the
     // round body except `edges` is NODE-grain — broadcast them when they
-    // fit (bound = one count of the label frame × 64 B/row; the count
-    // materializes the seed checkpoint the first round needs anyway), so
-    // the edge list is probed IN PLACE instead of re-shuffled per round
-    // and the node-grain self-joins stop exchanging at all. At 100 TB the
-    // gate is off and everything falls back to the shuffle plan.
-    val nodeBytes = BigInt(labels.count()) * 64
-    def bc(df: DataFrame): DataFrame =
-      graft.ops.Hints.broadcastIfFits(df, nodeBytes)
+    // fit (bound = one count of the label frame; the count materializes
+    // the seed checkpoint the first round needs anyway), so the edge list
+    // is probed IN PLACE instead of re-shuffled per round and the
+    // node-grain self-joins stop exchanging at all. At 100 TB the gate is
+    // off and everything falls back to the shuffle plan.
+    val nNodes = labels.count()
+    def bc(df: DataFrame): DataFrame = Hints.broadcastIfRowsFit(df, nNodes)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -739,7 +711,7 @@ object Dedup {
     // ≈ 350 B/doc ≤ corpus text bytes — gate on the source estimate, ×2
     // safety since short-doc corpora weaken the per-doc-bytes bound
     val srcBytes = graft.ops.Hints.estimatedBytes(docs) * 2
-    val sigs = spread(docs).select(col(idCol).as("id"),
+    val sigs = Hints.spread(docs).select(col(idCol).as("id"),
       TextAnalysis.simhashBits(col(textCol)).as("sig"))
     val banded = sigs.select(col("id"), col("sig"),
       posexplode(transform(sequence(lit(0), lit(3)),
@@ -792,7 +764,7 @@ object Dedup {
     // same banded-table build-side bound as minhashLsh (bands × ~52 B/doc
     // ≤ corpus text bytes, ×2 short-doc safety); batch side smaller still
     val srcBytes = graft.ops.Hints.estimatedBytes(docs) * 2
-    val base = spread(docs).select(col(idCol).as("id"),
+    val base = Hints.spread(docs).select(col(idCol).as("id"),
       array_distinct(TextAnalysis.shingles(col(textCol), n)).as("shset"))
       // hashed sorted keys for the candidate-grain rescore (as minhashLsh)
       .withColumn("keys", array_sort(transform(col("shset"), shingleKey(_))))
@@ -903,7 +875,7 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
     val w = Window.partitionBy(md5(col("block")))
       .orderBy(col("id"), col("block_idx"))
-    spread(docs).select(col(idCol).as("id"), posexplode(blocksArr))
+    Hints.spread(docs).select(col(idCol).as("id"), posexplode(blocksArr))
       .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block")
       .withColumn("first", row_number().over(w) === 1)
   }

@@ -94,7 +94,7 @@ object Bootstrap {
     val lanes = laneCols(seed, col(idCol))
     // per-row md5 + R draws + R weights: row-dominated stage work — fan
     // the scan out (no-op at production split counts; Tables doc)
-    graft.Tables.fanOutForCompute(df)
+    graft.ops.Hints.spread(df)
       .select(Seq(col(bucketCol).cast("long").as("bkt")) ++
         lanes.zipWithIndex.map { case (c, g) => c.as(s"lane$g") }: _*)
       .select(col("bkt"), explodedDraws(seed, replicates))
@@ -118,7 +118,7 @@ object Bootstrap {
     require(replicates >= 1 && replicates <= 1024, "replicates in [1, 1024]")
     val lanes = laneCols(seed, col(idCol))
     // same row-dominated draw stage as poissonBucketCounts
-    graft.Tables.fanOutForCompute(df)
+    graft.ops.Hints.spread(df)
       .select(Seq(col(valueCol).cast("long").as("x")) ++
         lanes.zipWithIndex.map { case (c, g) => c.as(s"lane$g") }: _*)
       .select(col("x"), explodedDraws(seed, replicates))

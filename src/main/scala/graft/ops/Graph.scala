@@ -62,11 +62,11 @@ object Graph {
       .unionAll(p.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(eager = false)
-    val nodeBytes = BigInt(deg.count()) * 48
-    val da = graft.ops.Hints.broadcastIfFits(
-      deg.select(col("node").as("a"), col("deg").as("da")), nodeBytes)
-    val db = graft.ops.Hints.broadcastIfFits(
-      deg.select(col("node").as("b"), col("deg").as("db")), nodeBytes)
+    val nNodes = deg.count()
+    val da = graft.ops.Hints.broadcastIfRowsFit(
+      deg.select(col("node").as("a"), col("deg").as("da")), nNodes)
+    val db = graft.ops.Hints.broadcastIfRowsFit(
+      deg.select(col("node").as("b"), col("deg").as("db")), nNodes)
     // total order on vertices: (deg, node) — ties on degree break by id,
     // so the orientation is acyclic and engine-independent
     val aFirst = col("da") < col("db") ||
@@ -126,12 +126,12 @@ object Graph {
     // rank frame into each round's join when it fits, so the edge list is
     // never re-shuffled per round (the checkpointed scan reads back
     // UnknownPartitioning, so every round otherwise re-exchanges BOTH
-    // sides). Bound = one map-combined count of the node frame × 64 B/row
-    // — Catalyst's post-join estimate is useless here (2.2 TB for a
-    // 16k-node frame at sf0.1), and the count materializes a checkpoint
-    // the first round needs anyway. At 100 TB the gate turns OFF and the
-    // join falls back to the size-gated SHUFFLE_HASH / SMJ path (spills).
-    val nodeBytes = BigInt(nodes.count()) * 64
+    // sides). Bound = one map-combined count of the node frame — Catalyst's
+    // post-join estimate is useless here (2.2 TB for a 16k-node frame at
+    // sf0.1), and the count materializes a checkpoint the first round
+    // needs anyway. At 100 TB the gate turns OFF and the join falls back
+    // to the size-gated SHUFFLE_HASH / SMJ path (spills).
+    val nNodes = nodes.count()
     // NOTE (r14): fanning the edge checkpoint to defaultParallelism when
     // the gate is on was A/B-measured SLOWER (4.7 vs 3.5 s min-of-3
     // interleaved at sf0.1) — fanned loop rounds pay more in per-task
@@ -147,7 +147,7 @@ object Graph {
     // iteration stays.
     for (_ <- 1 to iters) {
       val build =
-        if (graft.ops.Hints.fitsBroadcast(ranks, nodeBytes))
+        if (graft.ops.Hints.fitsBroadcast(ranks, nNodes))
           broadcast(ranks)
         else graft.ops.Hints.shuffleHashIfFits(ranks, edgeBytes)
       ranks = e
@@ -189,8 +189,8 @@ object Graph {
       .select(col("node"), col("deg"), coalesce(col("b"), lit(0L)).as("b"))
       .localCheckpoint(eager = false)
     // r14: same node-grain broadcast gate as [[pagerank]] — count once,
-    // honest 64 B/row bound, OFF at scale (SHUFFLE_HASH/SMJ fallback)
-    val nodeBytes = BigInt(base.count()) * 64
+    // OFF at scale (SHUFFLE_HASH/SMJ fallback)
+    val nNodes = base.count()
     var ranks = base.select(col("node"),
       when(col("b") > 0, lit(1000000000L)).otherwise(lit(0L)).as("r"))
       .localCheckpoint(eager = false)
@@ -198,7 +198,7 @@ object Graph {
     // two-round batching was rejected (60% cold-bench regression)
     for (_ <- 1 to iters) {
       val build =
-        if (graft.ops.Hints.fitsBroadcast(ranks, nodeBytes))
+        if (graft.ops.Hints.fitsBroadcast(ranks, nNodes))
           broadcast(ranks)
         else graft.ops.Hints.shuffleHashIfFits(ranks, edgeBytes)
       val contrib = e
@@ -209,7 +209,7 @@ object Graph {
       // contrib is node-grain too: broadcast it into the left join so the
       // checkpointed base frame is not re-shuffled per round either
       ranks = base.join(
-          graft.ops.Hints.broadcastIfFits(contrib, nodeBytes), Seq("node"), "left")
+          graft.ops.Hints.broadcastIfRowsFit(contrib, nNodes), Seq("node"), "left")
         .select(col("node"), (col("b") + coalesce(col("m"), lit(0L))).as("r"))
         .localCheckpoint(eager = false)
     }
@@ -248,12 +248,12 @@ object Graph {
       .localCheckpoint(eager = false)
     // r14: node-grain broadcast gate (see [[pagerank]]) — the edge list
     // stops being re-shuffled per round; OFF at scale with SHJ fallback
-    val nodeBytes = BigInt(labels.count()) * 64
+    val nNodes = labels.count()
     // one checkpoint per round — see the [[pagerank]] r13 note on why
     // two-round batching was rejected (60% cold-bench regression)
     for (_ <- 1 to rounds) {
       val build =
-        if (graft.ops.Hints.fitsBroadcast(labels, nodeBytes))
+        if (graft.ops.Hints.fitsBroadcast(labels, nNodes))
           broadcast(labels)
         else graft.ops.Hints.shuffleHashIfFits(labels, edgeBytes)
       labels = e
@@ -358,22 +358,22 @@ object Graph {
     // the r13 committed plans), so repartition(src) was a wasted shuffle
     val e = edges.select(col("src"), col("dst"))
       .localCheckpoint(eager = false)
-    // r14: frontier and settled labels are NODE-grain (≤ distinct
-    // endpoints, counted once); broadcast them into the per-hop joins
-    // when they fit so the edge list is probed IN PLACE instead of being
-    // re-shuffled every hop (guide §3.1, the kcore/pagerank treatment).
-    // At 100 TB the gate is off and the joins fall back to shuffles.
-    val nodeBytes =
-      BigInt(e.select(col("src")).distinct().count()) * 64
+    // r14: frontier and settled labels are NODE-grain (≤ the distinct
+    // nodes of src ∪ dst ∪ sources, counted once); broadcast them into the
+    // per-hop joins when they fit so the edge list is probed IN PLACE
+    // instead of being re-shuffled every hop (guide §3.1). At 100 TB the
+    // gate is off and the joins fall back to shuffles.
+    val nNodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
+      .union(sources.select(col("node"))).distinct().count()
     var labels = sources.select(col("node"), lit(0).as("hop"))
       .distinct().localCheckpoint(eager = false)
     var frontier = labels.select(col("node"))
     var hop = 1
     while (hop <= maxHops) {
-      val next = graft.ops.Hints.broadcastIfFits(frontier, nodeBytes)
+      val next = graft.ops.Hints.broadcastIfRowsFit(frontier, nNodes)
         .join(e, frontier("node") === e("src"))
         .select(e("dst").as("node")).distinct()
-        .join(graft.ops.Hints.broadcastIfFits(labels, nodeBytes),
+        .join(graft.ops.Hints.broadcastIfRowsFit(labels, nNodes),
           Seq("node"), "left_anti")
         .withColumn("hop", lit(hop))
         .localCheckpoint(eager = false)

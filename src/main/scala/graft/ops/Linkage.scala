@@ -68,7 +68,7 @@ object Linkage {
                  right: DataFrame, rightId: String, rightName: String,
                  maxDist: Int, blockLen: Int = 6,
                  maxBucket: Int = 4096): DataFrame = {
-    // NOTE (r13): scan fan-out (Tables.fanOutForCompute) measured SLOWER
+    // NOTE (r13): scan fan-out (Hints.spread) measured SLOWER
     // here same-JVM-A/B (fuzzy_match_pairs 1.33 → 1.89 s; fuzzy_entities'
     // cluster loop also pays per-round) — the 2-key block enumeration is
     // cheap relative to the fanned stages' per-task overhead, unlike
@@ -172,10 +172,10 @@ object Linkage {
     val m = d + 1
     // the lsub enumeration below is a 75-way explode + substring per row:
     // row-dominated scan-stage work — fan out (no-op at production splits)
-    val l = graft.Tables.fanOutForCompute(
+    val l = graft.ops.Hints.spread(
         left.select(col(leftId).as("i"), col(leftName).as("li")))
       .localCheckpoint(eager = false)
-    val r = graft.Tables.fanOutForCompute(
+    val r = graft.ops.Hints.spread(
         right.select(col(rightId).as("j"), col(rightName).as("rj")))
       .localCheckpoint(eager = false)
     // right side: m segments of its own length's scheme

@@ -226,7 +226,7 @@ object CorpusOpsQueries {
         // join) — without a materialization the tokenizer pass ran per
         // branch; spread the scan (row-dominated tokenize) and checkpoint
         // the tiny doc-grain result
-        val d = graft.dedup.Dedup.spread(Tables.documents(spark, dir))
+        val d = graft.ops.Hints.spread(Tables.documents(spark, dir))
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
           .select(col("doc_id"), size(col("toks")).as("n_tok"),
             size(array_distinct(col("toks"))).as("n_dis"))
@@ -342,7 +342,7 @@ object CorpusOpsQueries {
     "text_keywords" -> QueryDef(
       (spark, dir) => {
         // r14: spread the tokenize scan (row-dominated; single-file input)
-        val docs = graft.dedup.Dedup.spread(Tables.documents(spark, dir))
+        val docs = graft.ops.Hints.spread(Tables.documents(spark, dir))
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
         Retrieval.tfidfKeywords(docs, "doc_id", "toks", k = 3)
           .select(col("doc_id"), col("rn"), col("term"), col("tf"),

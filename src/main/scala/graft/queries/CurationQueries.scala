@@ -234,22 +234,17 @@ object CurationQueries {
         // per (domain, agent) row — and AQE coalesces the tiny distinct
         // output to ONE partition, serializing the whole parse leg on a
         // single core (profiler: 2.5-3 s of taskSec in 1-task stages).
-        // Count the domain frame once (reused for the broadcast gate
-        // below) and fan the parse across the session's cores when the
-        // frame is small; a production-size domain frame (millions of
-        // rows) keeps its natural post-shuffle width instead.
+        // Fan the parse across the session's cores (Hints.spread: a
+        // production-size corpus scan already funds them and is left
+        // alone); the domain frame is counted once for the broadcast gate
+        // below.
         val hosts = Tables.documents(spark, dir)
           .select(host(col("doc_id")).as("rhost")).distinct()
         val nRobots = hosts.count() * agents.size
-        val pre = hosts
+        val robots = graft.ops.Hints.spread(hosts
           .withColumn("d", (substring(col("rhost"), 5, 1).cast("int") % 5)
             .cast("string"))
-          .withColumn("ragent", explode(array(agents.map(lit): _*)))
-        val wide =
-          if (nRobots < 100000)
-            pre.repartition(spark.sparkContext.defaultParallelism)
-          else pre
-        val robots = wide
+          .withColumn("ragent", explode(array(agents.map(lit): _*))))
           .select(col("rhost"), col("ragent"),
             graft.text.Robots.rulesForAgent(concat(
               lit("# graft crawl policy\nUser-Agent: GraftBot\ndisallow: /sec"),

@@ -504,7 +504,7 @@ object TrainQueries {
         // r14 (§2.2): shingling + 60-bit keys + OPH sigs are row-dominated
         // and the single-file scan pins them to one core — spread (the
         // shared Dedup convention; no-op at production split counts)
-        val base = graft.dedup.Dedup.spread(Tables.documents(spark, dir))
+        val base = graft.ops.Hints.spread(Tables.documents(spark, dir))
           .select(col("doc_id").as("id"),
             array_distinct(TextAnalysis.shingles(col("text"), 3)).as("shset"))
           // hashed sorted keys ride the checkpoint for the exact-overlap

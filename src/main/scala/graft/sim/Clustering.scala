@@ -62,11 +62,10 @@ object Clustering {
     val base = emb.select(col(idCol).as("id"), microVec(col(vecCol)).as("vu"))
       .localCheckpoint(eager = false)
     // r14 (§3.1, the loop family treatment): the assignment frame is
-    // (id, cid) — 24 B/row node grain — so broadcast it into the centroid
-    // update's join when it fits and the heavy vector frame `base`
-    // streams from its checkpoint with zero exchange. Gate off at scale ⇒
-    // the old shuffle join.
-    val assignBytes = BigInt(nCount) * 32
+    // (id, cid) node grain — so broadcast it into the centroid update's
+    // join when it fits and the heavy vector frame `base` streams from
+    // its checkpoint with zero exchange. Gate off at scale ⇒ the old
+    // shuffle join.
     // centroid frame: (cid, cu = micro-unit centroid, norm2 = ⟨cu,cu⟩);
     // seeds are their own centroid (n=1, rounding is identity)
     var cent = base
@@ -89,7 +88,7 @@ object Clustering {
       // centroid update: per-dim micro-unit sums + member count (exact),
       // mean rounded back to integer micro-units, rebuilt into a
       // broadcastable k-row array frame
-      cent = graft.ops.Hints.broadcastIfFits(assigned, assignBytes)
+      cent = graft.ops.Hints.broadcastIfRowsFit(assigned, nCount)
         .join(base, Seq("id"))
         .select(col("cid"), posexplode(col("vu")))
         .groupBy(col("cid"), col("pos"))

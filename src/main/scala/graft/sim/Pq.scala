@@ -107,7 +107,7 @@ object Pq {
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m subspaces")
     val subDim = dims / m
-    // NOTE (r13): scan fan-out (Tables.fanOutForCompute) on `micro` was
+    // NOTE (r13): scan fan-out (Hints.spread) on `micro` was
     // measured same-JVM-A/B at +27%..3× SLOWER here — the pipeline's many
     // post-checkpoint stages each inherit the fanned partitioning and pay
     // per-task overhead that exceeds the encode compute. Deliberately
@@ -153,13 +153,12 @@ object Pq {
     // the cell list in place, and the ADC join streams the pair×m code
     // rows against the broadcast LUT with ZERO exchange — at scale that
     // was the query's largest shuffle. Gates off ⇒ the old shuffle plan.
-    val probes = graft.ops.Hints.broadcastIfFits(
+    val probes = graft.ops.Hints.broadcastIfRowsFit(
       pruned
         .filter(col("rnk") <= nprobe && pmod(col("id"), lit(queryMod)) === 0)
         .select(col("id").as("qid"), col("ccid")),
-      nqBound * nprobe * 32)
-    val lutBytes =
-      nqBound * (if (residual) nprobe else 1) * m * k * 48
+      nqBound * nprobe)
+    val lutRows = nqBound * (if (residual) nprobe else 1) * m * k
 
     // residual mode quantizes vu − cv(home cell): exact micro-unit
     // subtraction, one home-cell join at corpus grain
@@ -180,14 +179,14 @@ object Pq {
 
     val adcRows =
       if (!residual) {
-        val lut = graft.ops.Hints.broadcastIfFits(
+        val lut = graft.ops.Hints.broadcastIfRowsFit(
           sub.filter(pmod(col("id"), lit(queryMod)) === 0)
             .join(broadcast(cb), Seq("s"))
             .select(col("id").as("qid"), col("s"), col("cid"),
               (graft.functions.dot_product(col("sub"), col("sub"))
                 - lit(2.0) * graft.functions.dot_product(col("sub"), col("cw"))
                 + col("norm2")).as("d")),
-          lutBytes)
+          lutRows)
         // a neighbour lives in exactly one cell (rnk = 1), so probe-cell
         // candidates are already pair-distinct — no dedup pass
         probes.join(cells, Seq("ccid")).filter(col("qid") =!= col("nid"))
@@ -197,7 +196,7 @@ object Pq {
       } else {
         // one LUT per (query, PROBED cell): the query's residual against
         // that cell — nq·nprobe·m·k rows, still broadcast-size (gated)
-        val lut = graft.ops.Hints.broadcastIfFits(
+        val lut = graft.ops.Hints.broadcastIfRowsFit(
           probes
             .join(micro.select(col("id").as("qid"), col("vu")), Seq("qid"))
             .join(cents, Seq("ccid"))
@@ -212,7 +211,7 @@ object Pq {
               (graft.functions.dot_product(col("sub"), col("sub"))
                 - lit(2.0) * graft.functions.dot_product(col("sub"), col("cw"))
                 + col("norm2")).as("d")),
-          lutBytes)
+          lutRows)
         probes.join(cells, Seq("ccid")).filter(col("qid") =!= col("nid"))
           .select(col("qid"), col("nid"), col("ccid"))
           .join(enc, Seq("nid"))
@@ -255,14 +254,14 @@ object Pq {
     // (r14, guide §3.1: ADC = broadcast lookup table + streamed codes;
     // the enc⋈lut shuffle of n·m code rows disappears). Gate off ⇒ the
     // old shuffle join.
-    val lut = graft.ops.Hints.broadcastIfFits(
+    val lut = graft.ops.Hints.broadcastIfRowsFit(
       sub.filter(pmod(col("id"), lit(queryMod)) === 0)
         .join(broadcast(cb), Seq("s"))
         .select(col("id").as("qid"), col("s"), col("cid"),
           (graft.functions.dot_product(col("sub"), col("sub"))
             - lit(2.0) * graft.functions.dot_product(col("sub"), col("cw"))
             + col("norm2")).as("d")),
-      nqBound * m * k * 48)
+      nqBound * m * k)
 
     // ADC: m lookup rows per (query, neighbour); exact-integer sum
     enc.join(lut, Seq("s", "cid"))

@@ -136,7 +136,7 @@ object Similarity {
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       maxBucket: Int = 4096, targetOccupancy: Int = 64): DataFrame = {
     val nPlanes = resolvePlanes(emb, planes, targetOccupancy)
-    // NOTE (r13): scan fan-out (Tables.fanOutForCompute) on the signature
+    // NOTE (r13): scan fan-out (Hints.spread) on the signature
     // leg measured neutral-to-slower same-JVM-A/B across the five gates on
     // this path (e.g. emb_near_dup 1.91 → 2.46 s) — the sign-dots are
     // cheap relative to the fanned stages' per-task overhead. Not applied.
@@ -189,7 +189,9 @@ object Similarity {
     // classic IVF balance: assignment n^1.5, probe volume nprobe·√n per
     // query. floor(sqrt) is IEEE-exact for n ≪ 2^52, so the SQL oracle
     // replays the choice bit-for-bit.
-    val nCount = emb.count()
+    // one job: the row count and the longest vector (probe bound below)
+    val stats = emb.agg(count(lit(1)), coalesce(max(size(col(vecCol))), lit(0))).head()
+    val nCount = stats.getLong(0)
     val mod =
       if (centroidMod > 0) centroidMod.toLong
       else math.max(1L, math.sqrt(nCount.toDouble).toLong)
@@ -226,15 +228,15 @@ object Similarity {
       .join(vecs, col("id") === col("vid"))
       .select(col("id").as("nid"), col("cid"), col("vv").as("nv"))
     // r14 (guide §3.1): the probe frame is QUERY-BATCH grain (nq·nprobe
-    // rows, vectors included) — broadcast it when it fits so the n-row
-    // cell side streams in place instead of being re-shuffled by cid;
-    // gate off (large query batches) ⇒ the old shuffle join
-    val probes = graft.ops.Hints.broadcastIfFits(
+    // rows, vectors at the longest's length) — broadcast it when it fits
+    // so the n-row cell side streams in place instead of being re-shuffled
+    // by cid; gate off (large query batches) ⇒ the old shuffle join
+    val probes = graft.ops.Hints.broadcastIfRowsFit(
       pruned
         .filter(col("rnk") <= nprobe && pmod(col("id"), lit(queryMod)) === 0)
         .join(vecs, col("id") === col("vid"))
         .select(col("id").as("qid"), col("cid"), col("vv").as("qv")),
-      BigInt(nCount / math.max(queryMod, 1) + 1) * nprobe * 640)
+      BigInt(nCount / math.max(queryMod, 1) + 1) * nprobe, stats.getInt(1))
     probes
       .join(cells, Seq("cid"))
       .filter(col("qid") =!= col("nid"))

@@ -2,8 +2,10 @@ package graft.sources
 
 import java.util
 import java.util.zip.GZIPInputStream
-import org.apache.hadoop.conf.Configuration
+import graft.core.io.Storage
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -300,7 +302,7 @@ private class WarcScan(path: String, required: StructType,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
     // plan from the union of archive and sidecar stems: an index-only
     // query over a sidecar whose archive was tiered away still plans
     val listed = Option(fs.listStatus(p)).getOrElse(Array.empty)
@@ -332,11 +334,15 @@ private class WarcScan(path: String, required: StructType,
     }
   }
 
+  // tasks open archives from the session's Hadoop conf, broadcast once
+  // per scan
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required, pushed, aggs, groupCols)
+    new WarcReaderFactory(Storage.taskConf(SparkSession.active), required, pushed,
+      aggs, groupCols)
 }
 
-private class WarcReaderFactory(required: StructType,
+private class WarcReaderFactory(conf: Broadcast[org.apache.spark.util.SerializableConfiguration],
+    required: StructType,
     pushed: Array[org.apache.spark.sql.sources.Filter],
     aggs: Option[Seq[WarcAgg]] = None,
     groupCols: Seq[String] = Nil)
@@ -366,7 +372,7 @@ private class WarcReaderFactory(required: StructType,
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     aggs match {
-      case Some(a) => new WarcAggReader(partition, pushed, a, groupCols)
+      case Some(a) => new WarcAggReader(conf, partition, pushed, a, groupCols)
       case None    => createRowReader(partition)
     }
 
@@ -389,7 +395,7 @@ private class WarcReaderFactory(required: StructType,
       case WarcFetchPartition(dir, file, entries) =>
         new PartitionReader[InternalRow] {
           private val hp = new Path(dir, file)
-          private val in = hp.getFileSystem(new Configuration()).open(hp)
+          private val in = hp.getFileSystem(conf.value.value).open(hp)
           private val it = entries.sortBy(_.offset).iterator
           private var cur: WarcRecord = _
           private var curSha: String = _
@@ -414,7 +420,7 @@ private class WarcReaderFactory(required: StructType,
         new PartitionReader[InternalRow] {
           private val hp = new Path(file)
           private val it = Warc.parseStream(hp.getName,
-            new GZIPInputStream(hp.getFileSystem(new Configuration()).open(hp)))
+            new GZIPInputStream(hp.getFileSystem(conf.value.value).open(hp)))
           private var cur: WarcRecord = _
           override def next(): Boolean = {
             while (it.hasNext) {
@@ -442,7 +448,8 @@ private class WarcReaderFactory(required: StructType,
   * MIN/MAX/SUM over zero surviving records are null partials, which the
   * final merge ignores.
   */
-private class WarcAggReader(partition: InputPartition,
+private class WarcAggReader(conf: Broadcast[org.apache.spark.util.SerializableConfiguration],
+    partition: InputPartition,
     pushed: Array[org.apache.spark.sql.sources.Filter],
     aggs: Seq[WarcAgg],
     groupCols: Seq[String] = Nil) extends PartitionReader[InternalRow] {
@@ -508,7 +515,7 @@ private class WarcAggReader(partition: InputPartition,
       case WarcFullScanPartition(file) =>
         val hp = new Path(file)
         val it = Warc.parseStream(hp.getName,
-          new GZIPInputStream(hp.getFileSystem(new Configuration()).open(hp)))
+          new GZIPInputStream(hp.getFileSystem(conf.value.value).open(hp)))
         val sha = needsSha
         while (it.hasNext) {
           val r = it.next()

@@ -108,12 +108,10 @@ object CorpusIngest {
     * committed before any input subdir is removed, so a kill at any
     * point leaves the full id set readable (possibly with duplicate
     * rows, which change no decision: candidate pairs are `distinct()`
-    * and `dup_of` is a min). `failBeforeInputDelete` is the test-only
-    * kill for the widest window (all outputs written, no input deleted).
+    * and `dup_of` is a min). A refused input delete fails the call.
     */
   def compactStore(spark: SparkSession, storeDir: String, currentBatch: Long,
-                   minDirs: Int = 16, targetBytes: Long = 128L << 20,
-                   failBeforeInputDelete: Boolean = false): Int = {
+                   minDirs: Int = 16, targetBytes: Long = 128L << 20): Int = {
     import spark.implicits._
     val p = new Path(storeDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -140,9 +138,10 @@ object CorpusIngest {
     }
     // inputs removed only after EVERY group committed — a crash before
     // this point leaves duplicates, never losses
-    if (failBeforeInputDelete) throw new IllegalStateException(
-      "compactStore test kill before input delete")
-    subdirs.foreach(s => fs.delete(s.getPath, true))
+    subdirs.foreach { s =>
+      if (!fs.delete(s.getPath, true))
+        throw new java.io.IOException(s"could not delete folded ${s.getPath}")
+    }
     subdirs.length
   }
 

@@ -62,7 +62,7 @@ object Apss {
     val t2n = tNum.toLong * tNum   // t² numerator
     val t2d = tDen.toLong * tDen   // t² denominator
 
-    val sh = Dedup.spread(docs)
+    val sh = graft.ops.Hints.spread(docs)
       .select(col(idCol).as("id"),
         explode(array_distinct(TextAnalysis.shingles(col(textCol), n))).as("s"))
       .select(col("id"), Dedup.shingleKey(col("s")).as("sh"))

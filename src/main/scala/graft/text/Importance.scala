@@ -45,7 +45,7 @@ object Importance {
     // r14 (§2.2): tokenize + md5-per-token is row-dominated and a
     // single-file scan pins it to one core — spread (the shared Dedup
     // convention; no-op at production split counts)
-    graft.dedup.Dedup.spread(docs).select(isTarget.as("tgt"),
+    graft.ops.Hints.spread(docs).select(isTarget.as("tgt"),
         explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .select(col("tgt"), bucket(col("tok")).as("f"))
       .groupBy(col("f"))
@@ -63,7 +63,7 @@ object Importance {
   def docWeights(docs: DataFrame, table: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame =
     // same row-dominated spread as logRatioTable
-    graft.dedup.Dedup.spread(docs).select(col(idCol).as("doc_id"),
+    graft.ops.Hints.spread(docs).select(col(idCol).as("doc_id"),
         explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .select(col("doc_id"), bucket(col("tok")).as("f"))
       .join(broadcast(table.select(col("f"), col("lam"))), Seq("f"))

@@ -42,7 +42,7 @@ object QualityModel {
     // values, one tokenizer pass per row.
     // Fan-out: tokenize + regexp per row is row-dominated stage work
     // (no-op at production split counts; Tables doc).
-    graft.Tables.fanOutForCompute(docs)
+    graft.ops.Hints.spread(docs)
       .select(col(idCol), col(textCol),
         TextAnalysis.tokens(col(textCol)).as("_toks"))
       .select(

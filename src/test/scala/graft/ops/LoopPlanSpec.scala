@@ -97,4 +97,30 @@ class LoopPlanSpec extends SparkSpec {
         s"cluster round still sort-merge-joins:\n${p.take(2000)}")
     }
   }
+
+  test("bfsHops bounds a sink-heavy directed graph by all its nodes, not its sources") {
+    // one hub fanning out to 2,000 sinks, the hub and half the sinks as
+    // sources: one distinct src, 2,001 nodes. The frontier and label
+    // frames hold 1,000-2,001 rows, so at a 4 KB threshold neither may be
+    // broadcast (a distinct-src bound of one row would broadcast both).
+    val sinks = (1 to 2000).map(i => (0L, i.toLong)).toDF("src", "dst")
+    val sources = (0 to 1000).map(_.toLong).toDF("node")
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4000")
+      var hops = Map.empty[Long, Int]
+      val plans = capturedPlans {
+        hops = Graph.bfsHops(sinks, sources, maxHops = 2)
+          .as[(Long, Int)].collect().toMap
+      }
+      assert(hops.size == 2001 && hops(7L) == 0 && hops(1500L) == 1)
+      // per-hop plans: the left-anti join against the settled labels
+      val hopPlans = plans.filter(_.contains("LeftAnti"))
+      assert(hopPlans.nonEmpty, s"no hop plan captured of ${plans.size}")
+      hopPlans.foreach { p =>
+        assert(!p.contains("BroadcastExchange"),
+          s"hop broadcasts past the threshold:\n${p.take(2000)}")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+  }
 }

@@ -1,7 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.core.io.FaultyFs
 import java.nio.file.{Files, Path}
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.functions._
 
 class WarcSourceSpec extends SparkSpec {
@@ -274,5 +276,28 @@ class WarcSourceSpec extends SparkSpec {
     assert(got("https://corpus.invalid/crawl-a/2") == "changed")
     assert(got("https://corpus.invalid/crawl-b/10") == "revisit")
     assert(got("https://corpus.invalid/crawl-b/99") == "new")
+  }
+
+  test("reads through a file system bound only in the session's Hadoop conf") {
+    FaultyFs.bind(spark)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    // drop any cached `faulty:` instance and keep the cache off: a reader
+    // that opens files from a fresh Configuration cannot resolve the scheme
+    FileSystem.get(new java.net.URI(FaultyFs.uri("/")), hconf).close()
+    hconf.setBoolean(s"fs.${FaultyFs.Scheme}.impl.disable.cache", true)
+    try {
+      val indexed = writtenDir()
+      val bare = writtenDir()
+      Files.delete(bare.resolve("crawl-a.warc.cdx"))
+      Files.delete(bare.resolve("crawl-b.warc.cdx"))
+      def read(d: Path) = spark.read.format(fmt).load(FaultyFs.uri(d.toString))
+      def payloads(d: Path) = read(d).select($"uri", $"payload").collect()
+        .map(r => (r.getString(0), new String(r.getAs[Array[Byte]](1), "UTF-8"))).toSet
+      val expect = payloads(writtenDir())
+      assert(expect.size == 3)
+      assert(payloads(indexed) == expect) // fetch: member range reads
+      assert(payloads(bare) == expect)    // full scan: sequential walk
+      assert(read(bare).filter($"payload_len" > 11L).count() == 2L) // aggregate walk
+    } finally hconf.unset(s"fs.${FaultyFs.Scheme}.impl.disable.cache")
   }
 }

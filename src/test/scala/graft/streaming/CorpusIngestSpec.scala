@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.core.io.FaultyFs
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -98,39 +99,44 @@ class CorpusIngestSpec extends SparkSpec {
   }
 
   test("compaction crash before input delete loses nothing and changes no decision") {
-    val store = Files.createTempDirectory("sig_store_crash").toString
+    // the store lives under the fault-injecting `faulty:` file system; the
+    // first input-subdir delete fails — every c-dir is committed by then
+    // and no input is gone, the widest crash window
+    FaultyFs.bind(spark)
     def doc(i: Long) = (i, s"novel document body number$i alpha beta gamma")
-    def land(bid: Long, docs: Seq[(Long, String)]) =
-      CorpusIngest.dedupBatch(docs.toDF("doc_id", "text"), store, bid,
-        bands = 4, threshold = 0.8, compactMinDirs = 0)
-        .collect()
-    land(0L, Seq(doc(1), doc(2)))
-    land(1L, Seq(doc(3)))
-    land(2L, Seq(doc(4)))
-    val idsBefore = CorpusIngest.readStore(spark, store)
-      .select($"id").as[Long].collect().toSet
-    // kill in the widest window: every c-dir committed, no input deleted
-    intercept[IllegalStateException] {
-      CorpusIngest.compactStore(spark, store, currentBatch = 3L,
-        minDirs = 2, failBeforeInputDelete = true)
-    }
-    // no loss: the full id set is still readable (rows may be duplicated)
-    assert(CorpusIngest.readStore(spark, store)
-      .select($"id").as[Long].collect().toSet == idsBefore)
-    // decisions on the crashed store match a clean store's
-    val clean = Files.createTempDirectory("sig_store_clean").toString
     def landIn(s: String, bid: Long, docs: Seq[(Long, String)]) =
       CorpusIngest.dedupBatch(docs.toDF("doc_id", "text"), s, bid,
         bands = 4, threshold = 0.8, compactMinDirs = 0)
         .as[(Long, Boolean, Option[Long])].collect().sortBy(_._1).toSeq
+    def ids(s: String) = CorpusIngest.readStore(spark, s)
+      .select($"id").as[Long].collect().toSet
+    val clean = Files.createTempDirectory("sig_store_clean").toString
     landIn(clean, 0L, Seq(doc(1), doc(2)))
     landIn(clean, 1L, Seq(doc(3)))
     landIn(clean, 2L, Seq(doc(4)))
     val next = Seq((8L, doc(1)._2), doc(9))
-    assert(landIn(store, 3L, next) == landIn(clean, 3L, next))
-    // the next trigger re-folds the leftovers without error
-    CorpusIngest.compactStore(spark, store, currentBatch = 4L, minDirs = 2)
-    assert(CorpusIngest.readStore(spark, store)
-      .select($"id").as[Long].collect().toSet == idsBefore + 9L)
+    val cleanNext = landIn(clean, 3L, next)
+    for (mode <- Seq(FaultyFs.Throw, FaultyFs.ReturnFalse)) {
+      val local = Files.createTempDirectory("sig_store_crash").toString
+      val store = FaultyFs.uri(local)
+      landIn(store, 0L, Seq(doc(1), doc(2)))
+      landIn(store, 1L, Seq(doc(3)))
+      landIn(store, 2L, Seq(doc(4)))
+      val idsBefore = ids(store)
+      val (failure, _) = FaultyFs.armed(local, 1, mode) {
+        CorpusIngest.compactStore(spark, store, currentBatch = 3L, minDirs = 2)
+      }
+      assert(failure.exists(_.isInstanceOf[java.io.IOException]), s"$mode: $failure")
+      val names = listDir(local).map(_.getFileName.toString).toSet
+      assert(Set("b0", "b1", "b2").subsetOf(names) && names.exists(_.startsWith("c3_")),
+        s"$mode: $names")
+      // no loss: the full id set is still readable (rows may be duplicated)
+      assert(ids(store) == idsBefore)
+      // decisions on the crashed store match a clean store's
+      assert(landIn(store, 3L, next) == cleanNext)
+      // the next trigger re-folds the leftovers without error
+      CorpusIngest.compactStore(spark, store, currentBatch = 4L, minDirs = 2)
+      assert(ids(store) == idsBefore + 9L)
+    }
   }
 }
