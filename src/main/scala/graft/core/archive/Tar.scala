@@ -85,16 +85,17 @@ object Tar {
     * under `glob` (`Storage.mapFiles`) — bounded memory for ANY archive
     * size while `f` streams. `pathFilter` prunes BEFORE any archive opens.
     */
-  def mapArchives[T: ClassTag](spark: SparkSession, glob: String,
+  def mapArchives[T: ClassTag](spark: SparkSession, glob: String, conf: Storage.TaskConf,
                                pathFilter: String => Boolean = _ => true)
                               (f: (String, Iterator[TarEntry]) => T): RDD[T] =
-    Storage.mapFiles(spark, glob, pathFilter)((name, in) => f(name, entriesFromStream(name, in)))
+    Storage.mapFiles(spark, glob, conf, pathFilter)((name, in) =>
+      f(name, entriesFromStream(name, in)))
 
   /** One row per entry of every archive under `glob` (`mapArchives`). */
   def explodePath(spark: SparkSession, glob: String,
-                  pathFilter: String => Boolean = _ => true): Dataset[TarEntry] = {
+                  conf: Storage.TaskConf): Dataset[TarEntry] = {
     import spark.implicits._
-    spark.createDataset(mapArchives(spark, glob, pathFilter)((_, es) => es).flatMap(identity))
+    spark.createDataset(mapArchives(spark, glob, conf)((_, es) => es).flatMap(identity))
   }
 
   /** K3 prefix substitution, reference semantics (tar_lib.py:159-160

@@ -15,13 +15,16 @@ import scala.reflect.ClassTag
   */
 object Storage {
 
+  type TaskConf = Broadcast[SerializableConfiguration]
+
   /** The session's Hadoop conf for task closures, broadcast once per call
     * as `SparkContext.hadoopFile` does. A closure that captures a
     * `SerializableConfiguration` instead ships all ~1,000 properties in
     * every task and deserializes a private copy per task. Read it in the
-    * task as `conf.value.value`.
+    * task as `conf.value.value`. Each call serializes the whole conf on
+    * the driver, so a pipeline builds one and passes it to every job.
     */
-  def taskConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+  def taskConf(spark: SparkSession): TaskConf =
     spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
@@ -50,12 +53,11 @@ object Storage {
   /** Spread the files under `glob` that pass `pathFilter` (driver-side
     * listing, pruned before anything opens) over the cores with
     * `parallelize` — no shuffle of the list — and apply `f` in the task to
-    * (file name, open stream). One `taskConf` broadcast per call.
+    * (file name, open stream), opened through the caller's `taskConf`.
     */
-  def mapFiles[T: ClassTag](spark: SparkSession, glob: String,
+  def mapFiles[T: ClassTag](spark: SparkSession, glob: String, conf: TaskConf,
                             pathFilter: String => Boolean = _ => true)
                            (f: (String, InputStream) => T): RDD[T] = {
-    val conf = taskConf(spark)
     val p = new Path(glob)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val paths = Option(fs.globStatus(p)).toSeq.flatten

@@ -226,8 +226,8 @@ object DedupIndex {
     // not yet contain them); no-op on an up-to-date store
     ensureSidecars(st, maxDf)
     // read OLD labels/pairs before any write (incremental relabel below).
-    // Broadcast budgets come from PRE-checkpoint subtrees (Hints class
-    // doc): batch-derived frames are bounded by the batch source ×2
+    // Broadcast budgets come from PRE-checkpoint subtrees:
+    // batch-derived frames are bounded by the batch source ×2
     // (shingle keys are 8-byte hashes, ≤ text bytes for real text),
     // label-derived frames by the persisted label parquet ×2.
     val labelBytes = graft.ops.Hints.estimatedBytes(readDir(spark, st.path("labels"))) * 2

@@ -16,20 +16,19 @@ import scala.util.control.NonFatal
   * build-size estimate and otherwise leaves the frame unhinted, letting
   * the planner/AQE fall back to sort-merge (which spills).
   *
-  * Callers pass the estimate from a PRE-checkpoint subtree
-  * (`estimatedBytes`): a `localCheckpoint`ed frame's stats degrade to
-  * `defaultSizeInBytes` (Long.Max), which would gate the hint off
-  * unconditionally even on kilobyte inputs. Catalyst's propagated
-  * file-relation stats are rough after explodes/aggregates, but they are
-  * finite at test scale and grow with the input — exactly the behavior
-  * wanted: hint on when the corpus is small, off at 100 TB where the
-  * budget can't hold.
+  * Callers pass the estimate (`estimatedBytes`). A `localCheckpoint`ed
+  * frame, lazy or eager, keeps its origin's estimate (HintsSpec), so the
+  * planner may also auto-broadcast a small checkpointed frame on its own.
+  * Catalyst's propagated file-relation stats are rough after
+  * explodes/aggregates, but they are finite at test scale and grow with
+  * the input — exactly the behavior wanted: hint on when the corpus is
+  * small, off at 100 TB where the budget can't hold.
   */
 object Hints {
 
-  /** Catalyst's size estimate for a frame's optimized subtree. Call on
-    * the frame BEFORE any localCheckpoint (see class doc). Planning-only:
-    * triggers analysis + optimization, never a job.
+  /** Catalyst's size estimate for a frame's optimized subtree; a
+    * checkpoint keeps it (see class doc). Planning-only: triggers
+    * analysis + optimization, never a job.
     */
   def estimatedBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -50,10 +49,9 @@ object Hints {
     * executor replicate) the whole frame, so an unconditional broadcast
     * of an unbounded input OOMs instead of degrading. Above the budget
     * the frame is returned unhinted and the planner falls back to a
-    * shuffle join (which spills). Same caveat as [[shuffleHashIfFits]]:
-    * pass the estimate from a PRE-checkpoint subtree. For a frame whose
-    * row count is known, use [[broadcastIfRowsFit]]; this byte form is
-    * for frames whose rows hold text.
+    * shuffle join (which spills). For a frame whose row count is known,
+    * use [[broadcastIfRowsFit]]; this byte form is for frames whose rows
+    * hold text.
     */
   def broadcastIfFits(df: DataFrame, buildBytes: BigInt): DataFrame =
     if (fits(df, buildBytes)) broadcast(df) else df

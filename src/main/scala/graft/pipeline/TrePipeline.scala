@@ -41,27 +41,36 @@ final case class FullPipelineResult(
     bundles: DataFrame,
     outputMessages: DataFrame)
 
+/** One row of `runWithRetries`' attempt history. */
+final case class RetryAttempt(bagId: String, attempt: Int, incoming: Int, route: String,
+                              msg_path: String, message: String)
+
 object TrePipeline {
+
+  private def bagId(path: String): String = path.split('/').last.stripSuffix(".tar.gz")
 
   /** One `BagCheck` per archive under `bagsGlob`, bagId = archive basename. */
   private def scan(spark: SparkSession, bagsGlob: String,
-                   pathFilter: String => Boolean = _ => true): Dataset[BagCheck] = {
+                   conf: Storage.TaskConf): Dataset[BagCheck] = {
     import spark.implicits._
-    spark.createDataset(Tar.mapArchives(spark, bagsGlob, pathFilter)(
-      (name, entries) => BagitValidate.checkBag(name.stripSuffix(".tar.gz"), entries)))
+    spark.createDataset(Tar.mapArchives(spark, bagsGlob, conf)(
+      (name, entries) => BagitValidate.checkBag(bagId(name), entries)))
   }
 
   /** Run validation over a directory of `<reference>.tar.gz` bags.
     * Kept: the validation-only entry (§3.1 steps 3–4) the stream specs drive.
     */
   def run(spark: SparkSession, bagsGlob: String,
-          environment: String = "dev"): PipelineResult =
-    validation(spark, bagsGlob, scan(spark, bagsGlob).cache(), environment)
+          environment: String = "dev"): PipelineResult = {
+    val conf = Storage.taskConf(spark)
+    validation(spark, bagsGlob, conf, scan(spark, bagsGlob, conf).cache(), environment)
+  }
 
-  private def validation(spark: SparkSession, bagsGlob: String, bags: Dataset[BagCheck],
+  private def validation(spark: SparkSession, bagsGlob: String,
+                         conf: Storage.TaskConf, bags: Dataset[BagCheck],
                          environment: String): PipelineResult = {
     import spark.implicits._
-    val entries = Tar.explodePath(spark, bagsGlob)
+    val entries = Tar.explodePath(spark, bagsGlob, conf)
       .map(e => e.copy(source = e.source.stripSuffix(".tar.gz")))
     val checksums = bags.select(col("bagId"), explode(col("checks")).as("c"))
       .select(col("bagId"), col("c.file"), col("c.expected"), col("c.computed"), col("c.status"))
@@ -105,7 +114,8 @@ object TrePipeline {
     import spark.implicits._
     import graft.ops.editorial.{Editorial, ParserStub}
 
-    val bags = scan(spark, bagsGlob).cache()
+    val hadoopConf = Storage.taskConf(spark)
+    val bags = scan(spark, bagsGlob, hadoopConf).cache()
 
     // step 5: judgment doc = FIRST data file (compat with the reference's
     // data[0] assumption; generalized inventory kept in `entries`). An ok
@@ -133,7 +143,6 @@ object TrePipeline {
     // step 7: bundle = metadata.json once + the step-5 judgment doc only (a
     // bag with k>1 data files must not bundle every data file), written in
     // name order by the task holding the bag's row
-    val hadoopConf = Storage.taskConf(spark)
     val bundles = docs.select("bagId", "judgment_doc", "doc_bytes", "tre_metadata")
       .as[(String, String, Array[Byte], String)]
       .map { case (bag, doc, bytes, meta) =>
@@ -154,7 +163,7 @@ object TrePipeline {
         concat(col("bagId"), lit(".tar.gz")), to_json(col("items")), lit(0))
         .as("output_message"))
 
-    FullPipelineResult(validation(spark, bagsGlob, bags, environment), parserInputs,
+    FullPipelineResult(validation(spark, bagsGlob, hadoopConf, bags, environment), parserInputs,
       docs.select(col("bagId"), col("judgment_doc"), col("po").as("parser_outputs")),
       editorial, bundles, outputMessages)
   }
@@ -164,21 +173,22 @@ object TrePipeline {
     * hard fail, driven the way test_editorial_retry.py:33-60 and
     * test_tdr_bagit_retry.py:62-77 drive the reference):
     *
-    *  - attempt 0 validates every bag in one job and seeds the
+    *  - attempt 0 validates every bag in one Dataset job and seeds the
     *    per-consignment `output-message.json` under
     *    `<state>/<type>/<ref>/0/0/` — retries=0 when valid, bumped to 1 on
     *    failure (tre_bagit_checksum_validation.py:159-163);
-    *  - each later attempt k re-validates ONLY the still-failing bags
-    *    (one distributed job per round, not per bag) and performs the
-    *    RetryHandler storage round trip per bag on executors: find latest
-    *    retry folder → require incoming == last+1 → reload saved message →
-    *    bump → save under folder k;
+    *  - each later attempt k is one plain RDD job over ONLY the
+    *    still-failing archives, re-read from storage, that checks each bag
+    *    and performs the RetryHandler storage round trip per bag on
+    *    executors: find latest retry folder → require incoming == last+1 →
+    *    reload saved message → bump → save under folder k;
     *  - incoming ≥ maxRetries hard-fails the consignment (route `fail`).
     *
-    * Rounds are a driver loop bounded by maxRetries; every round's work is
-    * distributed (the driver only collects the failing ids and, at the
-    * end, the history). Returns the attempt history as a local DataFrame,
-    * with every round's cache released:
+    * Every round is collected once; the failing ids and the history are
+    * derived on the driver from those rows (at most bags × (maxRetries + 1),
+    * bounded by the consignment count, not data volume), so no round is
+    * planned as a SQL query, cached or unioned. One `taskConf` serves
+    * every round. Returns the attempt history as a local DataFrame:
     * (bagId, attempt, incoming, route, msg_path, message).
     */
   def runWithRetries(spark: SparkSession, bagsGlob: String, stateDir: String,
@@ -191,63 +201,47 @@ object TrePipeline {
     val hadoopConf = Storage.taskConf(spark)
     val state = stateDir
     val ctype = consignmentType
-
-    // attempt 0: validate everything, seed state (one task per bag) with
-    // the initial editorial output message, retries bumped to 1 on error
-    // (ready for resubmit)
-    val archive = concat(col("bagId"), lit(".tar.gz"))
-    val attempt0 = scan(spark, bagsGlob)
-      .select(col("bagId"), col("ok"), Editorial.outputMessage(col("bagId"), lit(ctype),
-        concat(lit("file://"), archive), concat(lit("file://"), archive, lit(".sha256")),
-        lit("local"), archive, lit("[]"), when(col("ok"), 0).otherwise(1)))
-      .as[(String, Boolean, String)]
-      .map { case (bag, ok, msg) =>
-        val path = RetryLoop.seedState(hadoopConf.value.value, state, ctype, bag, msg)
-        (bag, 0, 0, if (ok) "ok" else "retry", path, msg)
-      }
-      .toDF("bagId", "attempt", "incoming", "route", "msg_path", "message")
-      .cache()
-
-    // The failing-id collects are one string per failing bag, and the
-    // history at most bags × (maxRetries + 1) rows: both are bounded by
-    // the consignment count, not data volume.
-    def failingIds(round: DataFrame): Set[String] =
-      round.filter(col("route") === "retry").select("bagId").as[String].collect().toSet
-    val rounds = scala.collection.mutable.ArrayBuffer(attempt0)
     try {
-      var failing = failingIds(attempt0)
+      // attempt 0: validate everything, seed state (one task per bag) with
+      // the initial editorial output message, retries bumped to 1 on error
+      // (ready for resubmit)
+      val archive = concat(col("bagId"), lit(".tar.gz"))
+      val history = scan(spark, bagsGlob, hadoopConf)
+        .select(col("bagId"), col("ok"), Editorial.outputMessage(col("bagId"), lit(ctype),
+          concat(lit("file://"), archive), concat(lit("file://"), archive, lit(".sha256")),
+          lit("local"), archive, lit("[]"), when(col("ok"), 0).otherwise(1)))
+        .as[(String, Boolean, String)]
+        .map { case (bag, ok, msg) =>
+          val path = RetryLoop.seedState(hadoopConf.value.value, state, ctype, bag, msg)
+          RetryAttempt(bag, 0, 0, if (ok) "ok" else "retry", path, msg)
+        }
+        .collect().toBuffer
+      var round = history.toSeq
       var attempt = 1
-      while (attempt <= maxRetries && failing.nonEmpty) {
+      while (attempt <= maxRetries && round.exists(_.route == "retry")) {
         onAttempt(attempt)   // seam: the reference re-fetches fresh content
         // re-validation re-reads ONLY the failing archives from storage —
         // a bag repaired upstream between retries (the reference's
         // re-download path) is observed, unlike re-checking cached bytes.
         val a = attempt
-        val rec = scan(spark, bagsGlob,
-            p => failing.contains(p.split('/').last.stripSuffix(".tar.gz")))
-          .select(col("bagId"), col("ok"))
-          .as[(String, Boolean)]
-          .map { case (bag, ok) =>
-            if (ok) (bag, a, a, "ok", "", "")
-            else if (a >= maxRetries) (bag, a, a, "fail", "", "")
+        val failing = round.filter(_.route == "retry").map(_.bagId).toSet
+        round = Tar.mapArchives(spark, bagsGlob, hadoopConf, p => failing.contains(bagId(p))) {
+          (name, entries) =>
+            val bag = bagId(name)
+            def row(route: String, path: String = "", msg: String = "") =
+              RetryAttempt(bag, a, a, route, path, msg)
+            if (BagitValidate.checkBag(bag, entries).ok) row("ok")
+            else if (a >= maxRetries) row("fail")
             else RetryLoop.handleRetry(hadoopConf.value.value, state, ctype, bag, a) match {
               case Right(msg) =>
-                (bag, a, a, "retry",
-                  RetryLoop.messagePath(state, ctype, bag, 0, a).toString, msg)
-              case Left(err) => (bag, a, a, s"error: $err", "", "")
+                row("retry", RetryLoop.messagePath(state, ctype, bag, 0, a).toString, msg)
+              case Left(err) => row(s"error: $err")
             }
-          }
-          .toDF("bagId", "attempt", "incoming", "route", "msg_path", "message")
-          .cache()
-        rounds += rec
-        failing = failingIds(rec)
+        }.collect().toSeq
+        history ++= round
         attempt += 1
       }
-      val history = rounds.reduce(_ unionByName _)
-      spark.createDataFrame(java.util.Arrays.asList(history.collect(): _*), history.schema)
-    } finally {
-      rounds.foreach(_.unpersist())
-      hadoopConf.destroy()
-    }
+      history.toSeq.toDF()
+    } finally hadoopConf.destroy()
   }
 }

@@ -47,10 +47,8 @@ object CorpusOpsQueries {
     * one shuffle to the order key (the grain the file is already clustered
     * by), sorted part-set per order, pairs exploded in place — measured
     * 5.2 s → 2.8 s vs the two-sided equi-join at sf0.1. Shared by
-    * graph_triangles and graph_bfs_hops. Returned PRE-checkpoint: a
-    * localCheckpointed frame's stats degrade to Long.Max, which would
-    * silently disable Graph.triangles' size-gated SHUFFLE_HASH hint —
-    * each multi-referencing consumer checkpoints its own copy (triangles
+    * graph_triangles and graph_bfs_hops. Returned PRE-checkpoint: each
+    * multi-referencing consumer checkpoints its own copy (triangles
     * internally, bfs at the call site) AFTER taking byte estimates.
     */
   private def copurchasePairs(spark: org.apache.spark.sql.SparkSession,

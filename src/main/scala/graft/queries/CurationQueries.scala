@@ -265,10 +265,11 @@ object CurationQueries {
         // referenced — interpreted HOFs re-evaluate an inlined argument
         // subtree PER RULE ELEMENT, so each URL normalized its path
         // ~2×|rules| times. Hoist it to a projection ("_np"). The robots
-        // frame is domain-grain and checkpointed (stats = Long.Max, so
-        // the planner can never auto-broadcast it): broadcast it on an
-        // honest count-based bound — the URL side then streams from the
-        // scan with zero exchange before the verdict projection.
+        // frame is domain-grain; its checkpoint keeps the parse's size
+        // estimate, which may or may not fall under the planner's
+        // threshold: broadcast it on an honest count-based bound — the
+        // URL side then streams from the scan with zero exchange before
+        // the verdict projection.
         val np = graft.text.Robots.normalizePath(col("path"))
         val robotsBytes = BigInt(nRobots) * 2048
         urls.select(col("doc_id"), col("host"), col("agent"), col("path"),

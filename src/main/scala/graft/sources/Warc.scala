@@ -204,7 +204,7 @@ object Warc {
     */
   def read(spark: SparkSession, glob: String): Dataset[WarcRecord] = {
     import spark.implicits._
-    spark.createDataset(Storage.mapFiles(spark, glob)((name, in) =>
+    spark.createDataset(Storage.mapFiles(spark, glob, Storage.taskConf(spark))((name, in) =>
       parseStream(name, new GZIPInputStream(in))).flatMap(identity))
   }
 

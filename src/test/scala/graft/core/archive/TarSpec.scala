@@ -1,10 +1,13 @@
 package graft.core.archive
 
 import graft.SparkSpec
+import graft.core.io.Storage
 import java.nio.file.Files
 
 class TarSpec extends SparkSpec {
   import spark.implicits._
+
+  private def explode(glob: String) = Tar.explodePath(spark, glob, Storage.taskConf(spark))
 
   /** Build a small .tar.gz on disk with commons-compress (fixture bag). */
   private def makeTarGz(dir: java.nio.file.Path, name: String,
@@ -33,7 +36,7 @@ class TarSpec extends SparkSpec {
   test("explode streams tar.gz entries as rows, './' stripped (S7)") {
     val dir = Files.createTempDirectory("tar")
     makeTarGz(dir, "TDR-2022-AA1.tar.gz", bagFiles)
-    val got = Tar.explodePath(spark, dir.toString + "/*.tar.gz").collect()
+    val got = explode(dir.toString + "/*.tar.gz").collect()
     assert(got.length == 3)
     assert(got.forall(_.source == "TDR-2022-AA1.tar.gz"))
     assert(got.map(_.name).sorted.toSeq == Seq(
@@ -46,7 +49,7 @@ class TarSpec extends SparkSpec {
   test("explode of an empty tar.gz yields zero rows, no error") {
     val dir = Files.createTempDirectory("emptytar")
     makeTarGz(dir, "empty.tar.gz", Seq.empty)
-    assert(Tar.explodePath(spark, dir.toString + "/*.tar.gz").count() == 0)
+    assert(explode(dir.toString + "/*.tar.gz").count() == 0)
   }
 
   test("writeArchive round-trips entries with prefix substitution (K2/K3)") {
@@ -70,7 +73,7 @@ class TarSpec extends SparkSpec {
     val bagB = packed.find(_.bagId == "bagB").get
     assert(bagB.items.map(_.name) == Seq("BATCH/SERIES/other/x.txt"))
     // re-explode what we packed: round trip
-    val back = Tar.explodePath(spark, dir.toString + "/bagA.tar.gz").collect()
+    val back = explode(dir.toString + "/bagA.tar.gz").collect()
     assert(back.map(_.name).sorted.toSeq ==
       Seq("BATCH/SERIES/bag-info.txt", "BATCH/SERIES/data/doc.docx"))
     assert(new String(back.find(_.name.endsWith("doc.docx")).get.bytes) == "DOCX")
@@ -90,7 +93,7 @@ class TarSpec extends SparkSpec {
     makeTarGz(dir, "B.tar.gz", Seq("./B/z.txt" -> "ZZ"))
     def norm(es: Array[TarEntry]) =
       es.map(e => (e.source, e.name, new String(e.bytes, "UTF-8"), e.mtime)).sorted.toSeq
-    val streamed = norm(Tar.explodePath(spark, dir.toString + "/*.tar.gz").collect())
+    val streamed = norm(explode(dir.toString + "/*.tar.gz").collect())
     val viaBytes = norm(spark.read.format("binaryFile").load(dir.toString + "/*.tar.gz")
       .select($"path", $"content").as[(String, Array[Byte])].collect()
       .flatMap { case (path, bytes) => Tar.entries(path.split('/').last, bytes) })
@@ -102,7 +105,7 @@ class TarSpec extends SparkSpec {
     val dir = Files.createTempDirectory("tarmany")
     val many = (0 until 2000).map(i => s"./big/f$i.txt" -> s"payload-$i")
     makeTarGz(dir, "big.tar.gz", many)
-    val got = Tar.explodePath(spark, dir.toString + "/*.tar.gz")
+    val got = explode(dir.toString + "/*.tar.gz")
     assert(got.count() == 2000)
     val one = got.filter((e: TarEntry) => e.name == "big/f1234.txt").collect()
     assert(new String(one.head.bytes, "UTF-8") == "payload-1234")
@@ -141,7 +144,8 @@ class TarSpec extends SparkSpec {
   test("mapArchives ships the Hadoop conf by broadcast, not in each task closure") {
     val dir = Files.createTempDirectory("tarconf")
     makeTarGz(dir, "TDR-2022-AA1.tar.gz", bagFiles)
-    val rdd = Tar.mapArchives(spark, dir.toString + "/*.tar.gz")((name, _) => name)
+    val rdd = Tar.mapArchives(spark, dir.toString + "/*.tar.gz", Storage.taskConf(spark))(
+      (name, _) => name)
     // what the scheduler serializes into every task of the stage
     val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
       .serialize(rdd).limit()

@@ -72,19 +72,21 @@ class RetryLoopSpec extends SparkSpec {
     out.close()
   }
 
-  test("runWithRetries drives a corrupt bag 0→1→2→FAILED with persisted state") {
-    val dir = Files.createTempDirectory("retrybags")
-    val state = Files.createTempDirectory("retrystate2")
-    def write(name: String, files: Seq[(String, String)]): Unit =
-      writeBag(dir, name, files)
-    write("TDR-OK.tar.gz", Seq(
-      "./TDR-OK/bagit.txt" -> "BagIt-Version: 0.97",
-      "./TDR-OK/manifest-sha256.txt" -> (sha("FINE") + "  data/doc.docx"),
-      "./TDR-OK/data/doc.docx" -> "FINE"))
-    write("TDR-CORRUPT.tar.gz", Seq(
+  /** A bag whose manifest digest never matches its payload. */
+  private def writeCorrupt(dir: java.nio.file.Path): Unit =
+    writeBag(dir, "TDR-CORRUPT.tar.gz", Seq(
       "./TDR-CORRUPT/bagit.txt" -> "BagIt-Version: 0.97",
       "./TDR-CORRUPT/manifest-sha256.txt" -> (("0" * 64) + "  data/doc.docx"),
       "./TDR-CORRUPT/data/doc.docx" -> "BROKEN"))
+
+  test("runWithRetries drives a corrupt bag 0→1→2→FAILED with persisted state") {
+    val dir = Files.createTempDirectory("retrybags")
+    val state = Files.createTempDirectory("retrystate2")
+    writeBag(dir, "TDR-OK.tar.gz", Seq(
+      "./TDR-OK/bagit.txt" -> "BagIt-Version: 0.97",
+      "./TDR-OK/manifest-sha256.txt" -> (sha("FINE") + "  data/doc.docx"),
+      "./TDR-OK/data/doc.docx" -> "FINE"))
+    writeCorrupt(dir)
 
     val history = TrePipeline.runWithRetries(
       spark, dir.toString + "/*.tar.gz", state.toString, maxRetries = 3)
@@ -135,5 +137,59 @@ class RetryLoopSpec extends SparkSpec {
       .select($"attempt", $"route").as[(Int, String)].collect().toSeq
     // fails at 0, retries at 1 (still broken), recovers at 2 after repair
     assert(routes == Seq((0, "retry"), (1, "retry"), (2, "ok")))
+  }
+
+  test("runWithRetries runs one job per round and one SQL query, and caches nothing") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftbridge.drainListeners
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("retryjobs")
+    val state = Files.createTempDirectory("retryjobsstate")
+    writeCorrupt(dir)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val jobs, queries = new AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val queryListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        queries.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        queries.incrementAndGet()
+    }
+    drainListeners(spark)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(queryListener)
+    val history = try {
+      val h = TrePipeline.runWithRetries(
+        spark, dir.toString + "/*.tar.gz", state.toString, maxRetries = 3)
+      drainListeners(spark)
+      h
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(queryListener)
+    }
+    val rounds = history.filter($"attempt" > 0).count()
+    assert(rounds == 3)
+    // attempt 0 is the one SQL query; every retry round is one plain job
+    assert((jobs.get, queries.get) == (1 + rounds, 1))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("a bag whose saved state vanished takes the error route and stops") {
+    val dir = Files.createTempDirectory("retrylost")
+    val state = Files.createTempDirectory("retryloststate")
+    writeCorrupt(dir)
+    val saved = new org.apache.hadoop.fs.Path(state.toString, "judgment/TDR-CORRUPT")
+    val history = TrePipeline.runWithRetries(
+      spark, dir.toString + "/*.tar.gz", state.toString, maxRetries = 3,
+      onAttempt = a => if (a == 2)
+        saved.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(saved, true))
+    val routes = history.orderBy($"attempt")
+      .select($"attempt", $"route").as[(Int, String)].collect().toSeq
+    assert(routes == Seq((0, "retry"), (1, "retry"), (2, "error: No TDR output data found")))
   }
 }

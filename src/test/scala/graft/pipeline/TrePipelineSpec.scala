@@ -59,8 +59,8 @@ class TrePipelineSpec extends SparkSpec {
       .map(_.getString(0)).sorted
     assert(names == Seq("TDR-2022-OK1/0/doc.docx", "TDR-2022-OK1/0/metadata.json"))
     // the packed archive is a readable tar.gz with the doc bytes intact
-    val back = graft.core.archive.Tar
-      .explodePath(spark, b.getAs[String]("path")).collect()
+    val back = graft.core.archive.Tar.explodePath(spark, b.getAs[String]("path"),
+      graft.core.io.Storage.taskConf(spark)).collect()
     assert(new String(back.find(_.name.endsWith("doc.docx")).get.bytes) == "JUDGMENT ONE")
 
     // K8: output message threads the archive + sha256-sidecar URLs
@@ -192,6 +192,17 @@ class TrePipelineSpec extends SparkSpec {
       .as[(Boolean, Seq[String], String, Long)].collect().toSeq
     // 1 + |root| + |data| = 1 ≠ 0 extracted files
     assert(ev == Seq((false, Seq("file count mismatch"), "bagit-validation-error", 0L)))
+  }
+
+  test("runFull builds one taskConf broadcast for its scan, entries and bundles") {
+    val dir = Files.createTempDirectory("bagsconf")
+    val out = Files.createTempDirectory("sipsconf")
+    makeBags(dir)
+    def nextId(): Long = { val b = spark.sparkContext.broadcast(0); b.destroy(); b.id }
+    val before = nextId()
+    TrePipeline.runFull(spark, dir.toString + "/*.tar.gz", out.toString)
+    // building the result runs no job, so every id taken in between is a taskConf
+    assert(nextId() - before - 1 == 1)
   }
 
   test("runWithRetries drives a bag with an empty archive to the retry limit") {
