@@ -6,8 +6,10 @@ import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInp
 import org.apache.commons.compress.compressors.gzip.{GzipCompressorInputStream, GzipCompressorOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 import scala.reflect.ClassTag
 
 /** One extracted archive entry (S7). `source` is the archive it came from
@@ -85,7 +87,8 @@ object Tar {
     * under `glob` (`Storage.mapFiles`) — bounded memory for ANY archive
     * size while `f` streams. `pathFilter` prunes BEFORE any archive opens.
     */
-  def mapArchives[T: ClassTag](spark: SparkSession, glob: String, conf: Storage.TaskConf,
+  def mapArchives[T: ClassTag](spark: SparkSession, glob: String,
+                               conf: Broadcast[SerializableConfiguration],
                                pathFilter: String => Boolean = _ => true)
                               (f: (String, Iterator[TarEntry]) => T): RDD[T] =
     Storage.mapFiles(spark, glob, conf, pathFilter)((name, in) =>
@@ -93,7 +96,7 @@ object Tar {
 
   /** One row per entry of every archive under `glob` (`mapArchives`). */
   def explodePath(spark: SparkSession, glob: String,
-                  conf: Storage.TaskConf): Dataset[TarEntry] = {
+                  conf: Broadcast[SerializableConfiguration]): Dataset[TarEntry] = {
     import spark.implicits._
     spark.createDataset(mapArchives(spark, glob, conf)((_, es) => es).flatMap(identity))
   }

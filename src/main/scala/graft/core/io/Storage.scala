@@ -15,8 +15,6 @@ import scala.reflect.ClassTag
   */
 object Storage {
 
-  type TaskConf = Broadcast[SerializableConfiguration]
-
   /** The session's Hadoop conf for task closures, broadcast once per call
     * as `SparkContext.hadoopFile` does. A closure that captures a
     * `SerializableConfiguration` instead ships all ~1,000 properties in
@@ -24,7 +22,7 @@ object Storage {
     * task as `conf.value.value`. Each call serializes the whole conf on
     * the driver, so a pipeline builds one and passes it to every job.
     */
-  def taskConf(spark: SparkSession): TaskConf =
+  def taskConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
     spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
@@ -55,7 +53,8 @@ object Storage {
     * `parallelize` — no shuffle of the list — and apply `f` in the task to
     * (file name, open stream), opened through the caller's `taskConf`.
     */
-  def mapFiles[T: ClassTag](spark: SparkSession, glob: String, conf: TaskConf,
+  def mapFiles[T: ClassTag](spark: SparkSession, glob: String,
+                            conf: Broadcast[SerializableConfiguration],
                             pathFilter: String => Boolean = _ => true)
                            (f: (String, InputStream) => T): RDD[T] = {
     val p = new Path(glob)

@@ -4,8 +4,10 @@ import graft.core.archive.{Tar, TarEntry}
 import graft.core.io.Storage
 import graft.core.model.TreEvents
 import graft.ops.validate.{BagCheck, BagitValidate}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** The integrated batch pipeline (SURVEY §3.1 / §7.1 module 7): what the
   * reference runs as a Step Function of Lambdas, one invocation per bag,
@@ -51,7 +53,7 @@ object TrePipeline {
 
   /** One `BagCheck` per archive under `bagsGlob`, bagId = archive basename. */
   private def scan(spark: SparkSession, bagsGlob: String,
-                   conf: Storage.TaskConf): Dataset[BagCheck] = {
+                   conf: Broadcast[SerializableConfiguration]): Dataset[BagCheck] = {
     import spark.implicits._
     spark.createDataset(Tar.mapArchives(spark, bagsGlob, conf)(
       (name, entries) => BagitValidate.checkBag(bagId(name), entries)))
@@ -67,7 +69,7 @@ object TrePipeline {
   }
 
   private def validation(spark: SparkSession, bagsGlob: String,
-                         conf: Storage.TaskConf, bags: Dataset[BagCheck],
+                         conf: Broadcast[SerializableConfiguration], bags: Dataset[BagCheck],
                          environment: String): PipelineResult = {
     import spark.implicits._
     val entries = Tar.explodePath(spark, bagsGlob, conf)
