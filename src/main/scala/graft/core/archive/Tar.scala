@@ -84,21 +84,19 @@ object Tar {
 
   /** Streaming scan: apply `f` in the task to (archive name, entries
     * decoded one at a time from an `FSDataInputStream`) for every archive
-    * under `glob` (`Storage.mapFiles`) — bounded memory for ANY archive
-    * size while `f` streams. `pathFilter` prunes BEFORE any archive opens.
+    * in `paths` (`Storage.listFiles`, spread by `Storage.mapFiles`) —
+    * bounded memory for ANY archive size while `f` streams.
     */
-  def mapArchives[T: ClassTag](spark: SparkSession, glob: String,
-                               conf: Broadcast[SerializableConfiguration],
-                               pathFilter: String => Boolean = _ => true)
+  def mapArchives[T: ClassTag](spark: SparkSession, paths: Seq[String],
+                               conf: Broadcast[SerializableConfiguration])
                               (f: (String, Iterator[TarEntry]) => T): RDD[T] =
-    Storage.mapFiles(spark, glob, conf, pathFilter)((name, in) =>
-      f(name, entriesFromStream(name, in)))
+    Storage.mapFiles(spark, paths, conf)((name, in) => f(name, entriesFromStream(name, in)))
 
-  /** One row per entry of every archive under `glob` (`mapArchives`). */
-  def explodePath(spark: SparkSession, glob: String,
+  /** One row per entry of every archive in `paths` (`mapArchives`). */
+  def explodePath(spark: SparkSession, paths: Seq[String],
                   conf: Broadcast[SerializableConfiguration]): Dataset[TarEntry] = {
     import spark.implicits._
-    spark.createDataset(mapArchives(spark, glob, conf)((_, es) => es).flatMap(identity))
+    spark.createDataset(mapArchives(spark, paths, conf)((_, es) => es).flatMap(identity))
   }
 
   /** K3 prefix substitution, reference semantics (tar_lib.py:159-160

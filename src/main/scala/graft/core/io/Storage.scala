@@ -26,19 +26,30 @@ object Storage {
     spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
+  private def globbed(spark: SparkSession, glob: String) = {
+    val p = new Path(glob)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(p)).toSeq.flatten
+  }
+
   /** S4: listing under a glob → (path, name, size, mtime_ms) rows.
-    * Kept: the reference's prefix listing; `mapFiles` lists its own glob,
-    * so only StorageSpec calls it.
+    * Kept: the reference's prefix listing as a table; the pipelines list
+    * with `listFiles`, so only StorageSpec calls it.
     */
   def list(spark: SparkSession, glob: String): DataFrame = {
     import spark.implicits._
-    val p = new Path(glob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    statuses.map(s => (s.getPath.toString, s.getPath.getName,
-      s.getLen, s.getModificationTime)).toSeq
+    globbed(spark, glob).map(s => (s.getPath.toString, s.getPath.getName,
+      s.getLen, s.getModificationTime))
       .toDF("path", "name", "size", "mtime_ms")
   }
+
+  /** S4: the files under `glob`, listed once on the driver. Every scan
+    * (`mapFiles`, `Tar.mapArchives`) takes its paths from here, so a
+    * caller that re-reads a subset (a retry round) picks it from this
+    * list instead of listing again.
+    */
+  def listFiles(spark: SparkSession, glob: String): Seq[String] =
+    globbed(spark, glob).filter(_.isFile).map(_.getPath.toString)
 
   /** S4: existence probe. Kept: the reference's head-object check; only
     * specs call it.
@@ -48,19 +59,13 @@ object Storage {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Spread the files under `glob` that pass `pathFilter` (driver-side
-    * listing, pruned before anything opens) over the cores with
-    * `parallelize` — no shuffle of the list — and apply `f` in the task to
-    * (file name, open stream), opened through the caller's `taskConf`.
+  /** Spread `paths` (from `listFiles`) over the cores with `parallelize`
+    * — no shuffle of the list — and apply `f` in the task to (file name,
+    * open stream), opened through the caller's `taskConf`.
     */
-  def mapFiles[T: ClassTag](spark: SparkSession, glob: String,
-                            conf: Broadcast[SerializableConfiguration],
-                            pathFilter: String => Boolean = _ => true)
+  def mapFiles[T: ClassTag](spark: SparkSession, paths: Seq[String],
+                            conf: Broadcast[SerializableConfiguration])
                            (f: (String, InputStream) => T): RDD[T] = {
-    val p = new Path(glob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = Option(fs.globStatus(p)).toSeq.flatten
-      .filter(_.isFile).map(_.getPath.toString).filter(pathFilter)
     val parallelism = math.max(1, math.min(paths.size,
       spark.sparkContext.defaultParallelism))
     spark.sparkContext.parallelize(paths, parallelism).map { path =>

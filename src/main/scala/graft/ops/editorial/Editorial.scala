@@ -1,5 +1,7 @@
 package graft.ops.editorial
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import graft.core.archive.TarItem
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -169,31 +171,38 @@ object Editorial {
       coalesce(transform(col("parser_outputs.images"), i => concat(prefix, i)),
         array().cast(ArrayType(StringType)))))
 
+  private val Scheme = "^[a-zA-Z][a-zA-Z0-9+.-]*:".r
+
   /** K8 presigned-URL seam (object_lib.py:244-258): generating a real
     * time-limited URL is one cloud-SDK call per object — plug a presigner
     * in here. The default renders the storage URL itself (scheme'd paths
     * pass through, bare paths get file://), which is shape-compatible with
     * everything downstream.
     */
-  def presignUrl(path: Column): Column =
-    when(path.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*:"), path)
-      .otherwise(concat(lit("file://"), path))
+  def presignUrl(path: String): String =
+    if (Scheme.findPrefixOf(path).isDefined) path else "file://" + path
 
-  /** Editorial output message (tre_editorial_integration.py:311-324). */
-  def outputMessage(reference: Column, consignmentType: Column, tarGzUrl: Column,
-                    tarGzSha256Url: Column, bucket: Column, tarGzKey: Column,
-                    itemsJson: Column, retries: Column): Column =
-    to_json(struct(
-      struct(
-        reference.as("consignment-reference"),
-        tarGzUrl.as("s3-folder-url"),
-        tarGzSha256Url.as("s3-sha256-url"),
-        consignmentType.as("consignment-type"),
-        retries.as("number-of-retries")).as("editorial-output"),
-      struct(
-        bucket.as("bucket"),
-        tarGzKey.as("key"),
-        itemsJson.as("items")).as("tar-gz")))
+  /** A JSON string literal, escaped as Spark's `to_json` (Jackson) escapes. */
+  private def quote(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+
+  /** A packed archive's items as `to_json` renders `array<struct<name,size>>`. */
+  def itemsJson(items: Seq[TarItem]): String =
+    items.map(i => s"""{"name":${quote(i.name)},"size":${i.size}}""").mkString("[", ",", "]")
+
+  /** Editorial output message (tre_editorial_integration.py:311-324), the
+    * bytes `to_json` gives the same struct: `itemsJson` is embedded as a
+    * string, `retries` as a number. Plain Scala, so a task renders it
+    * without a query plan.
+    */
+  def outputMessage(reference: String, consignmentType: String, tarGzUrl: String,
+                    tarGzSha256Url: String, bucket: String, tarGzKey: String,
+                    itemsJson: String, retries: Int): String =
+    s"""{"editorial-output":{"consignment-reference":${quote(reference)},""" +
+      s""""s3-folder-url":${quote(tarGzUrl)},"s3-sha256-url":${quote(tarGzSha256Url)},""" +
+      s""""consignment-type":${quote(consignmentType)},"number-of-retries":$retries},""" +
+      s""""tar-gz":{"bucket":${quote(bucket)},"key":${quote(tarGzKey)},""" +
+      s""""items":${quote(itemsJson)}}}"""
 
   /** Retry validation (RetryHandler, tre_editorial_integration.py:472-542):
     * the incoming retry number must be exactly lastRetry+1; first runs must

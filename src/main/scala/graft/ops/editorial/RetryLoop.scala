@@ -1,6 +1,8 @@
 package graft.ops.editorial
 
 import graft.core.io.Storage
+import java.io.IOException
+import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -81,11 +83,12 @@ object RetryLoop {
     * tre_editorial_integration.py:484-542): find the latest TDR retry
     * folder, then the last editorial retry under it; require
     * incoming == last+1; reload the saved output-message.json, bump its
-    * retry count, save it under the new folder. Returns the new message
-    * or the reference's error text (a missing saved message included).
+    * retry count, save it under the new folder. Returns the saved path and
+    * the new message, or the reference's error text (a missing saved
+    * message included).
     */
   def handleRetry(conf: Configuration, stateRoot: String, consignmentType: String,
-                  reference: String, incoming: Int): Either[String, String] = {
+                  reference: String, incoming: Int): Either[String, (String, String)] = {
     val root = new Path(stateRoot, s"$consignmentType/$reference")
     val fs = root.getFileSystem(conf)
     Storage.maxNumericChildFolder(fs, root) match {
@@ -102,9 +105,9 @@ object RetryLoop {
               val prior = Storage.readString(fs, new Path(edRoot, s"$last/output-message.json"))
               prior.map { msg =>
                 val bumped = bumpRetries(msg, expected)
-                Storage.writeString(fs, new Path(edRoot, s"$expected/output-message.json"), bumped,
-                  overwrite = true)
-                bumped
+                val saved = new Path(edRoot, s"$expected/output-message.json")
+                Storage.writeString(fs, saved, bumped, overwrite = true)
+                (saved.toString, bumped)
               }
             }
         }
@@ -113,12 +116,25 @@ object RetryLoop {
 
   /** Seed attempt-0 state: the editorial stage's first output-message.json
     * under `<root>/<type>/<ref>/0/0/` (the "at least 0 from TDR stage"
-    * folder RetryHandler requires).
+    * folder RetryHandler requires), only where no seed exists — the K1
+    * guard (object_lib.py:107-109) that makes a re-delivered consignment a
+    * no-op. Like the reference's head-then-put, the check and the write
+    * are two steps. The message is staged beside the seed and renamed in,
+    * so a write that fails part-way leaves no seed and a re-delivery starts
+    * afresh. Returns the seed's path, or None when a seed already existed
+    * (its bytes are left as they are).
     */
   def seedState(conf: Configuration, stateRoot: String, consignmentType: String,
-                reference: String, message: String): String = {
+                reference: String, message: String): Option[String] = {
     val p = messagePath(stateRoot, consignmentType, reference, 0, 0)
-    Storage.writeString(p.getFileSystem(conf), p, message, overwrite = true)
-    p.toString
+    val fs = p.getFileSystem(conf)
+    if (fs.exists(p)) None
+    else {
+      val staged = new Path(p.getParent, s".${p.getName}.${UUID.randomUUID}")
+      Storage.writeString(fs, staged, message, overwrite = false)
+      try Storage.rename(fs, staged, p)
+      catch { case e: IOException => fs.delete(staged, false); throw e }
+      Some(p.toString)
+    }
   }
 }

@@ -5,7 +5,7 @@ import graft.core.io.Storage
 import graft.core.model.TreEvents
 import graft.ops.validate.{BagCheck, BagitValidate}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -51,13 +51,16 @@ object TrePipeline {
 
   private def bagId(path: String): String = path.split('/').last.stripSuffix(".tar.gz")
 
-  /** One `BagCheck` per archive under `bagsGlob`, bagId = archive basename. */
-  private def scan(spark: SparkSession, bagsGlob: String,
+  /** One `BagCheck` per archive in `paths`, bagId = archive basename. */
+  private def scan(spark: SparkSession, paths: Seq[String],
                    conf: Broadcast[SerializableConfiguration]): Dataset[BagCheck] = {
     import spark.implicits._
-    spark.createDataset(Tar.mapArchives(spark, bagsGlob, conf)(
+    spark.createDataset(Tar.mapArchives(spark, paths, conf)(
       (name, entries) => BagitValidate.checkBag(bagId(name), entries)))
   }
+
+  /** Made once: deriving a product encoder takes a reflection pass. */
+  private val attemptEncoder = Encoders.product[RetryAttempt]
 
   /** Run validation over a directory of `<reference>.tar.gz` bags.
     * Kept: the validation-only entry (§3.1 steps 3–4) the stream specs drive.
@@ -65,14 +68,15 @@ object TrePipeline {
   def run(spark: SparkSession, bagsGlob: String,
           environment: String = "dev"): PipelineResult = {
     val conf = Storage.taskConf(spark)
-    validation(spark, bagsGlob, conf, scan(spark, bagsGlob, conf).cache(), environment)
+    val paths = Storage.listFiles(spark, bagsGlob)
+    validation(spark, paths, conf, scan(spark, paths, conf).cache(), environment)
   }
 
-  private def validation(spark: SparkSession, bagsGlob: String,
+  private def validation(spark: SparkSession, paths: Seq[String],
                          conf: Broadcast[SerializableConfiguration], bags: Dataset[BagCheck],
                          environment: String): PipelineResult = {
     import spark.implicits._
-    val entries = Tar.explodePath(spark, bagsGlob, conf)
+    val entries = Tar.explodePath(spark, paths, conf)
       .map(e => e.copy(source = e.source.stripSuffix(".tar.gz")))
     val checksums = bags.select(col("bagId"), explode(col("checks")).as("c"))
       .select(col("bagId"), col("c.file"), col("c.expected"), col("c.computed"), col("c.status"))
@@ -117,7 +121,8 @@ object TrePipeline {
     import graft.ops.editorial.{Editorial, ParserStub}
 
     val hadoopConf = Storage.taskConf(spark)
-    val bags = scan(spark, bagsGlob, hadoopConf).cache()
+    val paths = Storage.listFiles(spark, bagsGlob)
+    val bags = scan(spark, paths, hadoopConf).cache()
 
     // step 5: judgment doc = FIRST data file (compat with the reference's
     // data[0] assumption; generalized inventory kept in `entries`). An ok
@@ -145,29 +150,28 @@ object TrePipeline {
     // step 7: bundle = metadata.json once + the step-5 judgment doc only (a
     // bag with k>1 data files must not bundle every data file), written in
     // name order by the task holding the bag's row
-    val bundles = docs.select("bagId", "judgment_doc", "doc_bytes", "tre_metadata")
+    val packed = docs.select("bagId", "judgment_doc", "doc_bytes", "tre_metadata")
       .as[(String, String, Array[Byte], String)]
       .map { case (bag, doc, bytes, meta) =>
         Tar.writeArchive(hadoopConf.value.value, outDir, bag, Seq(
           TarEntry(bag, s"$bag/0/metadata.json", meta.getBytes("UTF-8"), 0L, isDir = false),
           TarEntry(bag, s"$bag/0/" + doc.substring(doc.indexOf('/') + 1), bytes, 0L, isDir = false)
         ).sortBy(_.name).iterator)
-      }.toDF()
+      }
 
     // K8 demonstrated end-to-end: the per-bag output message carries the
     // packed archive's URL and its .sha256 sidecar URL through the presign
     // seam (outputMessage shape, tre_editorial_integration.py:311-324)
-    val url = Editorial.presignUrl(col("path"))
-    val shaUrl = Editorial.presignUrl(concat(col("path"), lit(".sha256")))
-    val outputMessages = bundles.select(col("bagId"), url.as("s3_folder_url"),
-      shaUrl.as("s3_sha256_url"), col("sha256"),
-      Editorial.outputMessage(col("bagId"), lit("judgment"), url, shaUrl, lit("local"),
-        concat(col("bagId"), lit(".tar.gz")), to_json(col("items")), lit(0))
-        .as("output_message"))
+    val outputMessages = packed.map { b =>
+      val url = Editorial.presignUrl(b.path)
+      val shaUrl = Editorial.presignUrl(b.path + ".sha256")
+      (b.bagId, url, shaUrl, b.sha256, Editorial.outputMessage(b.bagId, "judgment", url, shaUrl,
+        "local", s"${b.bagId}.tar.gz", Editorial.itemsJson(b.items), 0))
+    }.toDF("bagId", "s3_folder_url", "s3_sha256_url", "sha256", "output_message")
 
-    FullPipelineResult(validation(spark, bagsGlob, hadoopConf, bags, environment), parserInputs,
+    FullPipelineResult(validation(spark, paths, hadoopConf, bags, environment), parserInputs,
       docs.select(col("bagId"), col("judgment_doc"), col("po").as("parser_outputs")),
-      editorial, bundles, outputMessages)
+      editorial, packed.toDF(), outputMessages)
   }
 
   /** §3.1 with the retry protocol wired end-to-end (RetryHandler
@@ -175,49 +179,52 @@ object TrePipeline {
     * hard fail, driven the way test_editorial_retry.py:33-60 and
     * test_tdr_bagit_retry.py:62-77 drive the reference):
     *
-    *  - attempt 0 validates every bag in one Dataset job and seeds the
-    *    per-consignment `output-message.json` under
-    *    `<state>/<type>/<ref>/0/0/` — retries=0 when valid, bumped to 1 on
-    *    failure (tre_bagit_checksum_validation.py:159-163);
+    *  - attempt 0 lists the bag glob once and validates every bag in one
+    *    plain RDD job that seeds the per-consignment `output-message.json`
+    *    under `<state>/<type>/<ref>/0/0/` — retries=0 when valid, bumped
+    *    to 1 on failure (tre_bagit_checksum_validation.py:159-163). A
+    *    consignment whose seed already exists was delivered before: it
+    *    takes the route `duplicate`, its state is left as it is and it
+    *    runs no retry round (the K1 guard, `RetryLoop.seedState`);
     *  - each later attempt k is one plain RDD job over ONLY the
-    *    still-failing archives, re-read from storage, that checks each bag
-    *    and performs the RetryHandler storage round trip per bag on
-    *    executors: find latest retry folder → require incoming == last+1 →
-    *    reload saved message → bump → save under folder k;
+    *    still-failing archives of that listing, re-read from storage, that
+    *    checks each bag and performs the RetryHandler storage round trip
+    *    per bag on executors: find latest retry folder → require
+    *    incoming == last+1 → reload saved message → bump → save under
+    *    folder k;
     *  - incoming ≥ maxRetries hard-fails the consignment (route `fail`).
     *
-    * Every round is collected once; the failing ids and the history are
+    * Every job is collected once; the failing ids and the history are
     * derived on the driver from those rows (at most bags × (maxRetries + 1),
-    * bounded by the consignment count, not data volume), so no round is
+    * bounded by the consignment count, not data volume), so nothing is
     * planned as a SQL query, cached or unioned. One `taskConf` serves
-    * every round. Returns the attempt history as a local DataFrame:
+    * every job. Returns the attempt history as a local DataFrame:
     * (bagId, attempt, incoming, route, msg_path, message).
     */
   def runWithRetries(spark: SparkSession, bagsGlob: String, stateDir: String,
                      maxRetries: Int = 3,
                      consignmentType: String = "judgment",
                      onAttempt: Int => Unit = _ => ()): DataFrame = {
-    import spark.implicits._
     import graft.ops.editorial.{Editorial, RetryLoop}
 
     val hadoopConf = Storage.taskConf(spark)
     val state = stateDir
     val ctype = consignmentType
     try {
-      // attempt 0: validate everything, seed state (one task per bag) with
-      // the initial editorial output message, retries bumped to 1 on error
-      // (ready for resubmit)
-      val archive = concat(col("bagId"), lit(".tar.gz"))
-      val history = scan(spark, bagsGlob, hadoopConf)
-        .select(col("bagId"), col("ok"), Editorial.outputMessage(col("bagId"), lit(ctype),
-          concat(lit("file://"), archive), concat(lit("file://"), archive, lit(".sha256")),
-          lit("local"), archive, lit("[]"), when(col("ok"), 0).otherwise(1)))
-        .as[(String, Boolean, String)]
-        .map { case (bag, ok, msg) =>
-          val path = RetryLoop.seedState(hadoopConf.value.value, state, ctype, bag, msg)
-          RetryAttempt(bag, 0, 0, if (ok) "ok" else "retry", path, msg)
+      val paths = Storage.listFiles(spark, bagsGlob)
+      // attempt 0: validate everything, seed state with the initial
+      // editorial output message, retries bumped to 1 on error (ready for
+      // resubmit)
+      val history = Tar.mapArchives(spark, paths, hadoopConf) { (name, entries) =>
+        val bag = bagId(name)
+        val ok = BagitValidate.checkBag(bag, entries).ok
+        val msg = Editorial.outputMessage(bag, ctype, s"file://$bag.tar.gz",
+          s"file://$bag.tar.gz.sha256", "local", s"$bag.tar.gz", "[]", if (ok) 0 else 1)
+        RetryLoop.seedState(hadoopConf.value.value, state, ctype, bag, msg) match {
+          case Some(path) => RetryAttempt(bag, 0, 0, if (ok) "ok" else "retry", path, msg)
+          case None => RetryAttempt(bag, 0, 0, "duplicate", "", "")
         }
-        .collect().toBuffer
+      }.collect().toBuffer
       var round = history.toSeq
       var attempt = 1
       while (attempt <= maxRetries && round.exists(_.route == "retry")) {
@@ -227,7 +234,7 @@ object TrePipeline {
         // re-download path) is observed, unlike re-checking cached bytes.
         val a = attempt
         val failing = round.filter(_.route == "retry").map(_.bagId).toSet
-        round = Tar.mapArchives(spark, bagsGlob, hadoopConf, p => failing.contains(bagId(p))) {
+        round = Tar.mapArchives(spark, paths.filter(p => failing.contains(bagId(p))), hadoopConf) {
           (name, entries) =>
             val bag = bagId(name)
             def row(route: String, path: String = "", msg: String = "") =
@@ -235,15 +242,14 @@ object TrePipeline {
             if (BagitValidate.checkBag(bag, entries).ok) row("ok")
             else if (a >= maxRetries) row("fail")
             else RetryLoop.handleRetry(hadoopConf.value.value, state, ctype, bag, a) match {
-              case Right(msg) =>
-                row("retry", RetryLoop.messagePath(state, ctype, bag, 0, a).toString, msg)
+              case Right((path, msg)) => row("retry", path, msg)
               case Left(err) => row(s"error: $err")
             }
         }.collect().toSeq
         history ++= round
         attempt += 1
       }
-      history.toSeq.toDF()
+      spark.createDataset(history.toSeq)(attemptEncoder).toDF()
     } finally hadoopConf.destroy()
   }
 }

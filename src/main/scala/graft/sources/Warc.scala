@@ -204,8 +204,9 @@ object Warc {
     */
   def read(spark: SparkSession, glob: String): Dataset[WarcRecord] = {
     import spark.implicits._
-    spark.createDataset(Storage.mapFiles(spark, glob, Storage.taskConf(spark))((name, in) =>
-      parseStream(name, new GZIPInputStream(in))).flatMap(identity))
+    spark.createDataset(Storage.mapFiles(spark, Storage.listFiles(spark, glob),
+      Storage.taskConf(spark))((name, in) => parseStream(name, new GZIPInputStream(in)))
+      .flatMap(identity))
   }
 
   /** Selective fetch: read ONLY the records the CDX rows address. Offsets

@@ -13,10 +13,13 @@ import org.apache.spark.sql.Row
   * decode). Micro-batches feed the same batch pipeline via foreachBatch.
   *
   * Streaming policies (reference behavior per SURVEY §2.9):
-  *  - dedup: `dropDuplicates` on the latest UUID (the reference's TODO test
-  *    leaves duplicate-resend behavior unresolved; we pick drop-by-UUID and
-  *    state it). Unbounded state by default — pass a watermark column for
-  *    bounded state at scale.
+  *  - dedup: none in the stream, which keeps no state. Like the
+  *    reference's one Lambda per message, every delivery reaches the
+  *    handler, and a re-delivered consignment (same UUID or a new one for
+  *    the same reference) is caught by the K1 seed guard
+  *    (`RetryLoop.seedState`, SURVEY §2 "Duplicate delivery",
+  *    object_lib.py:107-109): `runWithRetries` routes it `duplicate` and
+  *    leaves its state as it is.
   *  - validation split: structurally invalid events → DLQ (error-channel
   *    table + DLQ alert, mirroring tre-dlq-slack-alerts).
   *  - retry: `number-of-retries` ≥ maxRetries → fail route
@@ -36,33 +39,12 @@ object EventStream {
       .text(dir)
       .withColumnRenamed("value", "json")
 
-  /** Decode + validate + dedup: returns the decoded frame with
-    * `event`, `event_errors`, `latest_uuid`, `ok` columns.
-    *
-    * Pass `dedupWatermark` (e.g. "1 hour") on a long-running stream:
-    * dedup state is then dropped once the event-time watermark passes
-    * (`dropDuplicatesWithinWatermark`), instead of growing one entry per
-    * UUID forever. `None` keeps exact all-history dedup (batch jobs,
-    * bounded replays). Event time = the envelope's epoch-nanos timestamp.
-    * Structurally invalid events carry no trustworthy timestamp or UUID,
-    * so they bypass the watermark dedup and flow straight to the DLQ
-    * split (the reference DLQs every invalid message, never dedups them).
+  /** Decode + validate: returns the decoded frame with `event`,
+    * `event_errors`, `latest_uuid`, `ok` columns. A narrow projection, no
+    * stream state: duplicates pass through to the K1 seed guard.
     */
-  def decoded(raw: DataFrame, dedupWatermark: Option[String] = None): DataFrame = {
-    val base = TreEvents.decode(raw, "json")
-      .withColumn("ok", size(col("event_errors")) === 0)
-    dedupWatermark match {
-      case None => base.dropDuplicates("latest_uuid")
-      case Some(delay) =>
-        val withTime = base.withColumn("event_time", coalesce(
-          timestamp_micros((col("event.timestamp") / 1000L).cast("long")),
-          timestamp_micros(lit(0L))))
-        withTime.filter(col("ok"))
-          .withWatermark("event_time", delay)
-          .dropDuplicatesWithinWatermark("latest_uuid")
-          .unionByName(withTime.filter(!col("ok")))
-    }
-  }
+  def decoded(raw: DataFrame): DataFrame =
+    TreEvents.decode(raw, "json").withColumn("ok", size(col("event_errors")) === 0)
 
   /** Watermarked tumbling-window counts in APPEND mode — the canonical
     * Structured Streaming aggregation: each (window, key) row is emitted

@@ -7,7 +7,8 @@ import java.nio.file.Files
 class TarSpec extends SparkSpec {
   import spark.implicits._
 
-  private def explode(glob: String) = Tar.explodePath(spark, glob, Storage.taskConf(spark))
+  private def explode(glob: String) =
+    Tar.explodePath(spark, Storage.listFiles(spark, glob), Storage.taskConf(spark))
 
   /** Build a small .tar.gz on disk with commons-compress (fixture bag). */
   private def makeTarGz(dir: java.nio.file.Path, name: String,
@@ -144,7 +145,8 @@ class TarSpec extends SparkSpec {
   test("mapArchives ships the Hadoop conf by broadcast, not in each task closure") {
     val dir = Files.createTempDirectory("tarconf")
     makeTarGz(dir, "TDR-2022-AA1.tar.gz", bagFiles)
-    val rdd = Tar.mapArchives(spark, dir.toString + "/*.tar.gz", Storage.taskConf(spark))(
+    val rdd = Tar.mapArchives(spark, Storage.listFiles(spark, dir.toString + "/*.tar.gz"),
+      Storage.taskConf(spark))(
       (name, _) => name)
     // what the scheduler serializes into every task of the stage
     val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()

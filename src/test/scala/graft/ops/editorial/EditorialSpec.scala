@@ -95,15 +95,29 @@ class EditorialSpec extends SparkSpec {
   }
 
   test("outputMessage carries presigned urls, retry number, tar record") {
-    val df = Editorial.locateBlocks(Seq(okEvent).toDF("json"), "json")
-    val json = df.select(Editorial.outputMessage(
-      $"parser_inputs.consignment-reference", $"context.consignment-type",
-      lit("https://tar"), lit("https://sha"), $"parser_inputs.s3-bucket",
-      lit("parsed/judgment/ABC-123/0/0/TRE-ABC-123.tar.gz"),
-      lit("""[{"name":"x","size":1}]"""), lit(0)).as("m")).as[String].head()
+    val json = Editorial.outputMessage("ABC-123", "judgment", Editorial.presignUrl("https://tar"),
+      Editorial.presignUrl("/out/ABC-123.tar.gz.sha256"), "b",
+      "parsed/judgment/ABC-123/0/0/TRE-ABC-123.tar.gz", """[{"name":"x","size":1}]""", 0)
     assert(get(json, "$['editorial-output']['consignment-reference']") == "ABC-123")
+    assert(get(json, "$['editorial-output']['s3-folder-url']") == "https://tar")
+    assert(get(json, "$['editorial-output']['s3-sha256-url']") == "file:///out/ABC-123.tar.gz.sha256")
     assert(get(json, "$['editorial-output']['number-of-retries']") == "0")
     assert(get(json, "$['tar-gz'].key").endsWith("TRE-ABC-123.tar.gz"))
+    assert(get(json, "$['tar-gz'].items") == """[{"name":"x","size":1}]""")
+
+    // the bytes are to_json's over the same struct, escapes included
+    val odd = "q\"b\\s/n\nt\t\u0001é☃"
+    val f = Seq("consignment-reference", "s3-folder-url", "s3-sha256-url", "consignment-type")
+    val viaSql = Seq(odd).toDF("s").select(to_json(struct(
+      struct(f.map($"s".as(_)) :+ lit(2).as("number-of-retries"): _*).as("editorial-output"),
+      struct($"s".as("bucket"), $"s".as("key"), $"s".as("items")).as("tar-gz"))))
+      .as[String].head()
+    assert(Editorial.outputMessage(odd, odd, odd, odd, odd, odd, odd, 2) == viaSql)
+    val items = Seq(graft.core.archive.TarItem(odd, 3L), graft.core.archive.TarItem("b", 0L))
+    Seq(items, Nil).foreach { is =>
+      assert(Editorial.itemsJson(is) ==
+        Seq(is).toDF("items").select(to_json($"items")).as[String].head())
+    }
   }
 
   test("retryErrors: strict last+1 sequence (RetryHandler)") {

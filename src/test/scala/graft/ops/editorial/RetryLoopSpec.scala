@@ -45,13 +45,14 @@ class RetryLoopSpec extends SparkSpec {
     // correct incoming → reloaded message (orig URL preserved), saved at /0/1/
     val r1 = RetryLoop.handleRetry(conf, state, "judgment", "TDR-X", 1)
     assert(r1.isRight)
-    assert(r1.toOption.get.contains(""""s3-folder-url":"file://orig.tar.gz""""))
+    assert(r1.toOption.get._2.contains(""""s3-folder-url":"file://orig.tar.gz""""))
     val p1 = RetryLoop.messagePath(state, "judgment", "TDR-X", 0, 1)
+    assert(r1.toOption.get._1 == p1.toString)
     assert(p1.getFileSystem(conf).exists(p1))
 
     // next round: expected advances to 2, bump lands in the saved copy
     val r2 = RetryLoop.handleRetry(conf, state, "judgment", "TDR-X", 2)
-    assert(r2.toOption.get.contains(""""number-of-retries":2"""))
+    assert(r2.toOption.get._2.contains(""""number-of-retries":2"""))
     assert(RetryLoop.handleRetry(conf, state, "judgment", "TDR-X", 2) ==
       Left("""Expected number-of-retries to be "3" but got "2""""))
   }
@@ -139,7 +140,7 @@ class RetryLoopSpec extends SparkSpec {
     assert(routes == Seq((0, "retry"), (1, "retry"), (2, "ok")))
   }
 
-  test("runWithRetries runs one job per round and one SQL query, and caches nothing") {
+  test("runWithRetries runs one plain job per attempt, no SQL query, and caches nothing") {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
@@ -174,9 +175,45 @@ class RetryLoopSpec extends SparkSpec {
     }
     val rounds = history.filter($"attempt" > 0).count()
     assert(rounds == 3)
-    // attempt 0 is the one SQL query; every retry round is one plain job
-    assert((jobs.get, queries.get) == (1 + rounds, 1))
+    // attempt 0 and every retry round are one plain job each
+    assert((jobs.get, queries.get) == (1 + rounds, 0))
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("history reports each retry path under the TDR folder handleRetry wrote") {
+    val dir = Files.createTempDirectory("retrytdr")
+    val state = Files.createTempDirectory("retrytdrstate")
+    writeCorrupt(dir)
+    // a TDR re-export left retry folder 1: RetryHandler continues under it
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tdr1 = RetryLoop.messagePath(state.toString, "judgment", "TDR-CORRUPT", 1, 0)
+    graft.core.io.Storage.writeString(tdr1.getFileSystem(conf), tdr1,
+      """{"editorial-output":{"number-of-retries":0}}""", overwrite = false)
+    val paths = TrePipeline.runWithRetries(spark, dir.toString + "/*.tar.gz", state.toString)
+      .filter($"route" === "retry" && $"attempt" > 0).orderBy($"attempt")
+      .select($"msg_path").as[String].collect().toSeq
+    val want = (1 to 2).map(k => RetryLoop.messagePath(state.toString, "judgment", "TDR-CORRUPT", 1, k))
+    assert(paths == want.map(_.toString))
+    want.foreach(p => assert(p.getFileSystem(conf).exists(p), s"missing $p"))
+  }
+
+  test("a seed whose rename-in fails raises, and a re-delivery starts afresh") {
+    import graft.core.io.FaultyFs
+    FaultyFs.bind(spark)
+    Seq(FaultyFs.Throw, FaultyFs.ReturnFalse).foreach { mode =>
+      val dir = Files.createTempDirectory("retryseedfault")
+      val state = Files.createTempDirectory("retryseedfaultstate").toString
+      writeCorrupt(dir)
+      val glob = dir.toString + "/*.tar.gz"
+      val seedDir = RetryLoop.messagePath(state, "judgment", "TDR-CORRUPT", 0, 0).getParent
+      val (failure, steps) = FaultyFs.armed(seedDir.toString, 1, mode)(
+        TrePipeline.runWithRetries(spark, glob, FaultyFs.uri(state)))
+      assert(failure.nonEmpty, s"$mode: runWithRetries reported success after a failed seed")
+      assert(steps >= 1, s"$mode: the seed was not renamed in")
+      val routes = TrePipeline.runWithRetries(spark, glob, state)
+        .orderBy($"attempt").select($"attempt", $"route").as[(Int, String)].collect().toSeq
+      assert(routes == Seq((0, "retry"), (1, "retry"), (2, "retry"), (3, "fail")), s"$mode")
+    }
   }
 
   test("a bag whose saved state vanished takes the error route and stops") {

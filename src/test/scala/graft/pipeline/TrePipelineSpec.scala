@@ -59,7 +59,7 @@ class TrePipelineSpec extends SparkSpec {
       .map(_.getString(0)).sorted
     assert(names == Seq("TDR-2022-OK1/0/doc.docx", "TDR-2022-OK1/0/metadata.json"))
     // the packed archive is a readable tar.gz with the doc bytes intact
-    val back = graft.core.archive.Tar.explodePath(spark, b.getAs[String]("path"),
+    val back = graft.core.archive.Tar.explodePath(spark, Seq(b.getAs[String]("path")),
       graft.core.io.Storage.taskConf(spark)).collect()
     assert(new String(back.find(_.name.endsWith("doc.docx")).get.bytes) == "JUDGMENT ONE")
 
@@ -73,6 +73,9 @@ class TrePipelineSpec extends SparkSpec {
     val msg = om.getAs[String]("output_message")
     assert(get_json(msg, "$['editorial-output']['s3-folder-url']") == folderUrl)
     assert(get_json(msg, "$['tar-gz']['key']") == "TDR-2022-OK1.tar.gz")
+    // the items string is the bytes to_json gives the bundle's items column
+    assert(get_json(msg, "$['tar-gz']['items']") ==
+      r.bundles.select(to_json($"items")).as[String].head())
     // the sidecar object exists and matches the recorded archive digest
     val shaPath = new org.apache.hadoop.fs.Path(b.getAs[String]("path") + ".sha256")
     val fs = shaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

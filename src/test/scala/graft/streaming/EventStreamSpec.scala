@@ -37,22 +37,20 @@ class EventStreamSpec extends SparkSpec {
   val u2 = "2d421b33-5cd2-45b1-a169-d0a6e743b9b4"
   val u3 = "7a10c1b2-33d4-45e6-8f90-aa0b2a32a2a5"
 
-  test("stream intake: decode, drop duplicate UUIDs, split DLQ, route retries") {
+  test("stream intake: decode, keep duplicate deliveries, split DLQ, route retries") {
     val dir = Files.createTempDirectory("queue")
     Files.write(dir.resolve("batch1.jsonl"), java.util.Arrays.asList(
       event(u1),                                  // ok
-      event(u1),                                  // duplicate resend → dropped
+      event(u1),                                  // duplicate resend → kept (K1 guard downstream)
       event(u2, retries = 3),                     // over retry limit → fail route
       event(u3, valid = false)))                  // invalid → dlq
 
     var okRows: Seq[(String, String)] = Nil
     var dlqCount = 0L
-    // watermarked dedup: state is bounded (dropDuplicatesWithinWatermark),
-    // duplicates inside the watermark still collapse to one row; results
-    // accumulate across batches (the watermark commit adds an empty one)
+    // the stream keeps no dedup state: both deliveries of u1 reach the
+    // handler, whose seed guard (`RetryLoop.seedState`) routes the second
     val q = EventStream.writer(
-      EventStream.decoded(EventStream.readRaw(spark, dir.toString),
-        dedupWatermark = Some("1 hour")),
+      EventStream.decoded(EventStream.readRaw(spark, dir.toString)),
       (ok, dlq, _) => {
         okRows = okRows ++ ok.select($"latest_uuid", $"route").as[(String, String)]
           .collect().toSeq
@@ -60,7 +58,7 @@ class EventStreamSpec extends SparkSpec {
       }).start()
     awaitThenStop(q)
 
-    assert(okRows.sortBy(_._1) == Seq(u2 -> "fail", u1 -> "ok").sortBy(_._1))
+    assert(okRows.sorted == Seq(u2 -> "fail", u1 -> "ok", u1 -> "ok").sorted)
     assert(dlqCount == 1)
   }
 

@@ -25,8 +25,9 @@ pair run) and a verdict:
               and no more change runs failed than parent runs
   worse       the change's median is worse than the parent's by more than
               the metric's bound (a fraction of the parent's median)
-  unresolved  the parent's own spread is wider than the bound and not
-              every change run beats every parent run
+  unresolved  either side's spread (the parent's or the change's
+              interquartile range) is wider than the bound and not every
+              change run beats every parent run
   holds       none of the above
 
 Exit code 2 when both sides are the same code, 1 when a run failed or a
@@ -86,12 +87,13 @@ def verdict(base, change, better, bound, n_run, change_failed_more):
     wins = sum(1 for b, c in zip(base, change) if sign * (c - b) > 0)
     mb, mc = statistics.median(base), statistics.median(change)
     q1, q3 = quartiles(base)
+    c1, c3 = quartiles(change)
     every = (min(change) > max(base)) if sign > 0 else (max(change) < min(base))
     if wins >= 0.9 * n_run and sign * (mc - mb) > q3 - q1 and not change_failed_more:
         return wins, "gain" if n_run >= 10 else "gain, under 10 pairs"
     if sign * (mc - mb) < -bound * abs(mb):
         return wins, "worse"
-    if q3 - q1 > bound * abs(mb) and not every:
+    if max(q3 - q1, c3 - c1) > bound * abs(mb) and not every:
         return wins, "unresolved"
     return wins, "holds"
 
