@@ -56,6 +56,7 @@ object Tar {
     */
   def entriesFromStream(archiveName: String, in: InputStream): Iterator[TarEntry] = {
     val tin = open(archiveName, in)
+    val chunk = new Array[Byte](64 * 1024)
     Iterator.continually(tin.getNextEntry)
       .takeWhile { e => if (e == null) tin.close(); e != null }
       .map { e =>
@@ -67,7 +68,6 @@ object Tar {
               s"$archiveName: entry ${e.getName} is ${e.getSize} bytes, over the " +
                 s"$MaxEntryBytes-byte limit of one in-memory entry")
             val buf = new java.io.ByteArrayOutputStream(math.max(64, e.getSize.toInt))
-            val chunk = new Array[Byte](64 * 1024)
             var n = tin.read(chunk)
             while (n >= 0) { buf.write(chunk, 0, n); n = tin.read(chunk) }
             buf.toByteArray

@@ -121,7 +121,7 @@ object Editorial {
     * TDR: bag-info}. `parserMetadataJson` is the raw metadata.json string;
     * `bagInfoJson` the bag-info key/value map as JSON.
     * Kept: the full build_tre_metadata over located parser events; `runFull`
-    * writes the reduced stub-parser form.
+    * writes the reduced stub-parser form, `treMetadataJson`.
     */
   def treMetadata(metadataFilename: Column, parserMetadataJson: Column,
                   bagInfoJson: Column, environment: String, version: String,
@@ -189,6 +189,25 @@ object Editorial {
   /** A packed archive's items as `to_json` renders `array<struct<name,size>>`. */
   def itemsJson(items: Seq[TarItem]): String =
     items.map(i => s"""{"name":${quote(i.name)},"size":${i.size}}""").mkString("[", ",", "]")
+
+  /** The TRE `metadata.json` `runFull` bundles: build_tre_metadata
+    * (tre_editorial_integration.py:386-430) reduced to the stub parser's
+    * outputs, the bytes `to_json` gives the same struct (a None field is
+    * left out). Plain Scala, so the task that writes the bundle renders it.
+    */
+  def treMetadataJson(reference: String, environment: String, version: String,
+                      po: ParserOutputs): String = {
+    def field(name: String, value: Option[String]) = value.map(v => s"${quote(name)}:${quote(v)}")
+    val parameters = Seq(
+      field("reference", Some(s"TRE-$reference")),
+      field(s"$environment-tre-version", Some(version)),
+      field("xml", po.xml),
+      field("log", Some(po.log)),
+      Some(s"${quote("error-messages")}:${po.error_messages.map(quote).mkString("[", ",", "]")}"))
+    s"""{"producer":{"name":"TRE","process":"transform","type":"judgment",""" +
+      s""""environment":${quote(environment)}},"parameters":""" +
+      parameters.flatten.mkString("{", ",", "}") + "}"
+  }
 
   /** Editorial output message (tre_editorial_integration.py:311-324), the
     * bytes `to_json` gives the same struct: `itemsJson` is embedded as a

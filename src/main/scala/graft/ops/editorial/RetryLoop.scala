@@ -119,13 +119,14 @@ object RetryLoop {
     * folder RetryHandler requires), only where no seed exists — the K1
     * guard (object_lib.py:107-109) that makes a re-delivered consignment a
     * no-op. Like the reference's head-then-put, the check and the write
-    * are two steps. The message is staged beside the seed and renamed in,
-    * so a write that fails part-way leaves no seed and a re-delivery starts
-    * afresh. Returns the seed's path, or None when a seed already existed
-    * (its bytes are left as they are).
+    * are two steps. `message` is evaluated only where no seed exists, so a
+    * re-delivery costs the check alone. The message is staged beside the
+    * seed and renamed in, so a write that fails part-way leaves no seed and
+    * a re-delivery starts afresh. Returns the seed's path, or None when a
+    * seed already existed (its bytes are left as they are).
     */
   def seedState(conf: Configuration, stateRoot: String, consignmentType: String,
-                reference: String, message: String): Option[String] = {
+                reference: String, message: => String): Option[String] = {
     val p = messagePath(stateRoot, consignmentType, reference, 0, 0)
     val fs = p.getFileSystem(conf)
     if (fs.exists(p)) None

@@ -12,15 +12,16 @@ final case class FileCheck(file: String, expected: Option[String],
                            computed: Option[String], status: String)
 
 /** Every check of one bag (`BagitValidate.checkBag`): the `verifyChecksums`
-  * rows, the `reconcileCounts` columns, the verdict, and the judgment doc
-  * (smallest `data/` name) with its bytes — the only payload kept.
+  * rows, the `reconcileCounts` columns, the verdict, and the judgment doc's
+  * name (smallest `data/` name). No payload: `checkBag` hands the doc's
+  * bytes to its caller beside the row.
   */
 final case class BagCheck(bagId: String, checks: Seq[FileCheck],
                           n_extracted: Long, n_extracted_data: Long,
                           n_root: Long, n_data: Long,
                           counts_ok: Boolean, data_counts_ok: Boolean,
                           ok: Boolean, errors: Seq[String],
-                          judgment_doc: Option[String], doc_bytes: Option[Array[Byte]])
+                          judgment_doc: Option[String])
 
 /** Bag validation operators (SURVEY §2 J3/A1/A2/A4/U1/U2), bag-aware: every
   * input carries a `bagId` column so thousands of consignments validate in
@@ -126,9 +127,10 @@ object BagitValidate {
     * (names carry the `<reference>/` root component, stripped here): the
     * bag-local equivalent of `verifyChecksums` + `reconcileCounts` + the
     * per-bag error fold, so a batch validates with no `bagId` join.
-    * `BagCheckSpec` holds it to those operators.
+    * Returns the row and the judgment doc's bytes, which the caller keeps
+    * in its task. `BagCheckSpec` holds it to those operators.
     */
-  def checkBag(bagId: String, entries: Iterator[TarEntry]): BagCheck = {
+  def checkBag(bagId: String, entries: Iterator[TarEntry]): (BagCheck, Option[Array[Byte]]) = {
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val manifest = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var nExtracted, nExtractedData, nRoot = 0L
@@ -163,7 +165,7 @@ object BagitValidate {
     val errors = checks.filter(_.status != "ok").map(c => s"${c.status}: ${c.file}") ++
       (if (countsOk) Nil else Seq("file count mismatch")) ++
       (if (dataCountsOk) Nil else Seq("data file count mismatch"))
-    BagCheck(bagId, checks, nExtracted, nExtractedData, nRoot, nData, countsOk, dataCountsOk,
-      errors.isEmpty, errors, doc.map(_._1), doc.map(_._2))
+    (BagCheck(bagId, checks, nExtracted, nExtractedData, nRoot, nData, countsOk, dataCountsOk,
+      errors.isEmpty, errors, doc.map(_._1)), doc.map(_._2))
   }
 }

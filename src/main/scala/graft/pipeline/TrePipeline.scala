@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import graft.core.archive.{Tar, TarEntry}
+import graft.core.archive.{PackedArchive, Tar, TarEntry}
 import graft.core.io.Storage
 import graft.core.model.TreEvents
+import graft.ops.editorial.{Editorial, ParserOutputs, ParserStub, RetryLoop}
 import graft.ops.validate.{BagCheck, BagitValidate}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
@@ -11,10 +12,12 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** The integrated batch pipeline (SURVEY §3.1 / §7.1 module 7): what the
   * reference runs as a Step Function of Lambdas, one invocation per bag,
-  * becomes ONE Spark job over a batch of consignments. Every TRE check is
-  * bag-local, so each task streams its archives into one `BagCheck` row
-  * per bag, and every stage below is a narrow projection or map of that
-  * one cached Dataset — no `bagId` join, group or shuffle.
+  * becomes ONE plain Spark job over a batch of consignments. Every TRE
+  * step is bag-local, so the task that reads a bag's archive checks it,
+  * writes its bundle and returns one payload-free row; the driver collects
+  * those rows once (bounded by the bag count) and every stage below is a
+  * projection of that local Dataset — no `bagId` join, group, shuffle or
+  * cache.
   *
   *   scan(tar) → checksum verify (J3) + count reconciliation (A1) +
   *   per-bag verdict with error channel → provenance-chained result event
@@ -47,33 +50,41 @@ final case class FullPipelineResult(
 final case class RetryAttempt(bagId: String, attempt: Int, incoming: Int, route: String,
                               msg_path: String, message: String)
 
+/** Steps 6–7 of one ok bag with a judgment doc, as its task wrote them. */
+final case class BagOutput(po: ParserOutputs, tre_metadata: String, bundle: PackedArchive,
+                           s3_folder_url: String, s3_sha256_url: String, output_message: String)
+
+/** One bag of `runFull`: its checks, and its outputs where it has any. */
+final case class BagRun(check: BagCheck, out: Option[BagOutput])
+
 object TrePipeline {
 
   private def bagId(path: String): String = path.split('/').last.stripSuffix(".tar.gz")
 
-  /** One `BagCheck` per archive in `paths`, bagId = archive basename. */
-  private def scan(spark: SparkSession, paths: Seq[String],
-                   conf: Broadcast[SerializableConfiguration]): Dataset[BagCheck] = {
-    import spark.implicits._
-    spark.createDataset(Tar.mapArchives(spark, paths, conf)(
-      (name, entries) => BagitValidate.checkBag(bagId(name), entries)))
-  }
-
   /** Made once: deriving a product encoder takes a reflection pass. */
   private val attemptEncoder = Encoders.product[RetryAttempt]
+  private val checkEncoder = Encoders.product[BagCheck]
+  private val runEncoder = Encoders.product[BagRun]
 
-  /** Run validation over a directory of `<reference>.tar.gz` bags.
+  /** Run validation over a directory of `<reference>.tar.gz` bags: one
+    * plain job checks every bag in the task that reads its archive.
     * Kept: the validation-only entry (§3.1 steps 3–4) the stream specs drive.
     */
   def run(spark: SparkSession, bagsGlob: String,
           environment: String = "dev"): PipelineResult = {
     val conf = Storage.taskConf(spark)
     val paths = Storage.listFiles(spark, bagsGlob)
-    validation(spark, paths, conf, scan(spark, paths, conf).cache(), environment)
+    val checks = Tar.mapArchives(spark, paths, conf)(
+      (name, entries) => BagitValidate.checkBag(bagId(name), entries)._1).collect()
+    validation(spark, paths, conf, spark.createDataset(checks.toSeq)(checkEncoder).toDF(),
+      environment)
   }
 
+  /** The validation stages as projections of `bags`, the local `BagCheck`
+    * rows of `paths`.
+    */
   private def validation(spark: SparkSession, paths: Seq[String],
-                         conf: Broadcast[SerializableConfiguration], bags: Dataset[BagCheck],
+                         conf: Broadcast[SerializableConfiguration], bags: DataFrame,
                          environment: String): PipelineResult = {
     import spark.implicits._
     val entries = Tar.explodePath(spark, paths, conf)
@@ -110,68 +121,63 @@ object TrePipeline {
     PipelineResult(entries, checksums, reconciliation, verdicts, events)
   }
 
-  /** The complete §3.1 main path in one job: validate → prepare parser
-    * input (step 5: first data file, prepare_parser_input.py:124-131) →
-    * parser contract (step 6, stub seam) → TRE metadata + editorial bundle
-    * tar.gz per consignment (step 7) under `<outDir>/<ref>/0/`.
+  /** The complete §3.1 main path in one plain job: each task validates
+    * its bag, and for an ok bag prepares the parser input (step 5: first
+    * data file, prepare_parser_input.py:124-131), runs the parser contract
+    * (step 6, stub seam), renders the TRE metadata and writes the
+    * editorial bundle tar.gz under `<outDir>/<ref>/0/` (step 7) and its
+    * output message. The judgment doc's bytes never leave the task; the
+    * rows are collected once and nothing is cached.
     */
   def runFull(spark: SparkSession, bagsGlob: String, outDir: String,
               environment: String = "dev", version: String = "0.1.0"): FullPipelineResult = {
-    import spark.implicits._
-    import graft.ops.editorial.{Editorial, ParserStub}
-
     val hadoopConf = Storage.taskConf(spark)
     val paths = Storage.listFiles(spark, bagsGlob)
-    val bags = scan(spark, paths, hadoopConf).cache()
-
-    // step 5: judgment doc = FIRST data file (compat with the reference's
-    // data[0] assumption; generalized inventory kept in `entries`). An ok
-    // bag without a data file gets no parser input and no bundle.
-    val docName = element_at(split(col("judgment_doc"), "/"), -1)
-    val docs = bags.filter(col("ok") && col("judgment_doc").isNotNull)
-      .withColumn("msg", Editorial.parserInputMessage(
-        col("bagId"), lit("local"), concat(lit("file://"), col("judgment_doc")),
-        concat(lit("parsed/judgment/"), col("bagId"), lit("/0/")),
-        docName, lit("judgment"), lit(0)))
-      // step 6: parser contract (stub seam — swap for the real parser)
-      .withColumn("po", ParserStub.outputStruct(col("bagId"), docName))
-      // step 7: TRE metadata JSON
-      .withColumn("tre_metadata", to_json(struct(
-        struct(lit("TRE").as("name"), lit("transform").as("process"),
-          lit("judgment").as("type"), lit(environment).as("environment")).as("producer"),
-        struct(
-          concat(lit("TRE-"), col("bagId")).as("reference"),
-          lit(version).as(s"$environment-tre-version"),
-          col("po.xml").as("xml"), col("po.log").as("log"),
-          col("po.error_messages").as("error-messages")).as("parameters"))))
-    val parserInputs = docs.select("bagId", "judgment_doc", "msg")
-    val editorial = docs.select("bagId", "judgment_doc", "po", "tre_metadata")
-
-    // step 7: bundle = metadata.json once + the step-5 judgment doc only (a
-    // bag with k>1 data files must not bundle every data file), written in
-    // name order by the task holding the bag's row
-    val packed = docs.select("bagId", "judgment_doc", "doc_bytes", "tre_metadata")
-      .as[(String, String, Array[Byte], String)]
-      .map { case (bag, doc, bytes, meta) =>
-        Tar.writeArchive(hadoopConf.value.value, outDir, bag, Seq(
+    val runs = Tar.mapArchives(spark, paths, hadoopConf) { (name, entries) =>
+      val bag = bagId(name)
+      val (check, docBytes) = BagitValidate.checkBag(bag, entries)
+      // step 5: judgment doc = FIRST data file (compat with the reference's
+      // data[0] assumption; generalized inventory kept in `entries`). An ok
+      // bag without a data file gets no parser input and no bundle.
+      val out = for (doc <- check.judgment_doc if check.ok; bytes <- docBytes) yield {
+        // step 6: parser contract (stub seam — swap for the real parser)
+        val po = ParserStub.outputs(bag, doc.substring(doc.lastIndexOf('/') + 1))
+        val meta = Editorial.treMetadataJson(bag, environment, version, po)
+        // step 7: bundle = metadata.json once + the step-5 judgment doc only
+        // (a bag with k>1 data files must not bundle every data file), in
+        // name order
+        val packed = Tar.writeArchive(hadoopConf.value.value, outDir, bag, Seq(
           TarEntry(bag, s"$bag/0/metadata.json", meta.getBytes("UTF-8"), 0L, isDir = false),
           TarEntry(bag, s"$bag/0/" + doc.substring(doc.indexOf('/') + 1), bytes, 0L, isDir = false)
         ).sortBy(_.name).iterator)
+        // K8 demonstrated end-to-end: the output message carries the packed
+        // archive's URL and its .sha256 sidecar URL through the presign
+        // seam (outputMessage shape, tre_editorial_integration.py:311-324)
+        val url = Editorial.presignUrl(packed.path)
+        val shaUrl = Editorial.presignUrl(packed.path + ".sha256")
+        BagOutput(po, meta, packed, url, shaUrl, Editorial.outputMessage(bag, "judgment", url,
+          shaUrl, "local", s"$bag.tar.gz", Editorial.itemsJson(packed.items), 0))
       }
+      BagRun(check, out)
+    }.collect()
+    val local = spark.createDataset(runs.toSeq)(runEncoder)
 
-    // K8 demonstrated end-to-end: the per-bag output message carries the
-    // packed archive's URL and its .sha256 sidecar URL through the presign
-    // seam (outputMessage shape, tre_editorial_integration.py:311-324)
-    val outputMessages = packed.map { b =>
-      val url = Editorial.presignUrl(b.path)
-      val shaUrl = Editorial.presignUrl(b.path + ".sha256")
-      (b.bagId, url, shaUrl, b.sha256, Editorial.outputMessage(b.bagId, "judgment", url, shaUrl,
-        "local", s"${b.bagId}.tar.gz", Editorial.itemsJson(b.items), 0))
-    }.toDF("bagId", "s3_folder_url", "s3_sha256_url", "sha256", "output_message")
-
-    FullPipelineResult(validation(spark, paths, hadoopConf, bags, environment), parserInputs,
+    val docs = local.filter(col("out").isNotNull)
+      .select(col("check.bagId").as("bagId"), col("check.judgment_doc").as("judgment_doc"),
+        col("out.*"))
+    val parserInputs = docs.select(col("bagId"), col("judgment_doc"),
+      Editorial.parserInputMessage(
+        col("bagId"), lit("local"), concat(lit("file://"), col("judgment_doc")),
+        concat(lit("parsed/judgment/"), col("bagId"), lit("/0/")),
+        element_at(split(col("judgment_doc"), "/"), -1), lit("judgment"), lit(0)).as("msg"))
+    FullPipelineResult(
+      validation(spark, paths, hadoopConf, local.select("check.*"), environment),
+      parserInputs,
       docs.select(col("bagId"), col("judgment_doc"), col("po").as("parser_outputs")),
-      editorial, packed.toDF(), outputMessages)
+      docs.select("bagId", "judgment_doc", "po", "tre_metadata"),
+      docs.select("bundle.*"),
+      docs.select(col("bagId"), col("s3_folder_url"), col("s3_sha256_url"),
+        col("bundle.sha256").as("sha256"), col("output_message")))
   }
 
   /** §3.1 with the retry protocol wired end-to-end (RetryHandler
@@ -184,8 +190,9 @@ object TrePipeline {
     *    under `<state>/<type>/<ref>/0/0/` — retries=0 when valid, bumped
     *    to 1 on failure (tre_bagit_checksum_validation.py:159-163). A
     *    consignment whose seed already exists was delivered before: it
-    *    takes the route `duplicate`, its state is left as it is and it
-    *    runs no retry round (the K1 guard, `RetryLoop.seedState`);
+    *    takes the route `duplicate` without its archive being decoded,
+    *    its state is left as it is and it runs no retry round (the K1
+    *    guard, `RetryLoop.seedState`);
     *  - each later attempt k is one plain RDD job over ONLY the
     *    still-failing archives of that listing, re-read from storage, that
     *    checks each bag and performs the RetryHandler storage round trip
@@ -205,8 +212,6 @@ object TrePipeline {
                      maxRetries: Int = 3,
                      consignmentType: String = "judgment",
                      onAttempt: Int => Unit = _ => ()): DataFrame = {
-    import graft.ops.editorial.{Editorial, RetryLoop}
-
     val hadoopConf = Storage.taskConf(spark)
     val state = stateDir
     val ctype = consignmentType
@@ -215,14 +220,16 @@ object TrePipeline {
       // attempt 0: validate everything, seed state with the initial
       // editorial output message, retries bumped to 1 on error (ready for
       // resubmit)
-      val history = Tar.mapArchives(spark, paths, hadoopConf) { (name, entries) =>
+      val history = Storage.mapFiles(spark, paths, hadoopConf) { (name, in) =>
         val bag = bagId(name)
-        val ok = BagitValidate.checkBag(bag, entries).ok
-        val msg = Editorial.outputMessage(bag, ctype, s"file://$bag.tar.gz",
+        // decoded only once `seedState` has found no seed: a re-delivery's
+        // archive is closed unread
+        lazy val ok = BagitValidate.checkBag(bag, Tar.entriesFromStream(name, in))._1.ok
+        lazy val msg = Editorial.outputMessage(bag, ctype, s"file://$bag.tar.gz",
           s"file://$bag.tar.gz.sha256", "local", s"$bag.tar.gz", "[]", if (ok) 0 else 1)
         RetryLoop.seedState(hadoopConf.value.value, state, ctype, bag, msg) match {
           case Some(path) => RetryAttempt(bag, 0, 0, if (ok) "ok" else "retry", path, msg)
-          case None => RetryAttempt(bag, 0, 0, "duplicate", "", "")
+          case None => in.close(); RetryAttempt(bag, 0, 0, "duplicate", "", "")
         }
       }.collect().toBuffer
       var round = history.toSeq
@@ -239,7 +246,7 @@ object TrePipeline {
             val bag = bagId(name)
             def row(route: String, path: String = "", msg: String = "") =
               RetryAttempt(bag, a, a, route, path, msg)
-            if (BagitValidate.checkBag(bag, entries).ok) row("ok")
+            if (BagitValidate.checkBag(bag, entries)._1.ok) row("ok")
             else if (a >= maxRetries) row("fail")
             else RetryLoop.handleRetry(hadoopConf.value.value, state, ctype, bag, a) match {
               case Right((path, msg)) => row("retry", path, msg)

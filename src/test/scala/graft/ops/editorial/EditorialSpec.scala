@@ -133,21 +133,17 @@ class EditorialSpec extends SparkSpec {
     val invalid = ctxBlock.replace("test.docx", "invalid.docx")
     val located = Editorial.locateBlocks(
       Seq(okEvent, s"""[$invalid,[$outBlock]]""").toDF("json"), "json")
-    val ref = $"parser_inputs.consignment-reference"
-    val rows = located.select(ref.as("consignment_reference"),
-        ParserStub.outputStruct(ref, $"context.judgment-document").as("po"))
-      .select("consignment_reference", "po.*").collect()
-    def errs(r: org.apache.spark.sql.Row) =
-      r.getAs[scala.collection.Seq[String]]("error_messages")
+    val rows = located.select($"parser_inputs.consignment-reference", $"context.judgment-document")
+      .as[(String, String)].collect().map { case (ref, doc) => ParserStub.outputs(ref, doc) }
     // ok corpus: xml/metadata/log populated, no errors
-    val ok = rows.find(errs(_).isEmpty).get
-    assert(ok.getString(1) == "ABC-123.xml")
-    assert(ok.getString(2) == "metadata.json")
+    val ok = rows.find(_.error_messages.isEmpty).get
+    assert(ok.xml.contains("ABC-123.xml"))
+    assert(ok.metadata.contains("metadata.json"))
     // fail corpus: error-messages populated, outputs null (reference
     // error-path shape, test_parser_error_path.py:23-60)
-    val bad = rows.find(errs(_).nonEmpty).get
-    assert(bad.getString(1) == null)
-    assert(errs(bad).head.contains("invalid.docx"))
+    val bad = rows.find(_.error_messages.nonEmpty).get
+    assert(bad.xml.isEmpty)
+    assert(bad.error_messages.head.contains("invalid.docx"))
   }
 
   private def get(json: String, path: String): String = {

@@ -127,7 +127,8 @@ class BagCheckSpec extends SparkSpec {
   private def opt(r: Row, i: Int): Option[String] = Option(r.getString(i))
 
   test("checkBag equals the join operators over randomised bags") {
-    val got = bags.map { case (id, es) => BagitValidate.checkBag(id, es.iterator) }
+    val checked = bags.map { case (id, es) => BagitValidate.checkBag(id, es.iterator) }
+    val got = checked.map(_._1)
     val files = bags.flatMap { case (id, es) =>
       es.filterNot(_.isDir).map(e => (id, e.name.substring(e.name.indexOf('/') + 1), e.bytes))
     }.toDF("bagId", "name", "content")
@@ -150,12 +151,12 @@ class BagCheckSpec extends SparkSpec {
     assert(got.map(b => (b.bagId, b.ok, b.errors.sorted)).sortBy(_._1) == refVerdicts.sortBy(_._1))
 
     val refDocs = docs.as[(String, String)].collect().toMap
-    got.foreach { b =>
+    checked.foreach { case (b, docBytes) =>
       assert(b.judgment_doc == refDocs.get(b.bagId), b.bagId)
       val named = bags.find(_._1 == b.bagId).get._2
         .filter(e => !e.isDir && b.judgment_doc.contains(e.name.substring(e.name.indexOf('/') + 1)))
-      assert(b.doc_bytes.forall(d => named.exists(_.bytes.sameElements(d))), b.bagId)
-      assert(b.doc_bytes.isDefined == b.judgment_doc.isDefined, b.bagId)
+      assert(docBytes.forall(d => named.exists(_.bytes.sameElements(d))), b.bagId)
+      assert(docBytes.isDefined == b.judgment_doc.isDefined, b.bagId)
     }
 
     // the draw reaches every status and every edge case it is meant to

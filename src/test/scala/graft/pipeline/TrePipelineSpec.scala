@@ -197,15 +197,116 @@ class TrePipelineSpec extends SparkSpec {
     assert(ev == Seq((false, Seq("file count mismatch"), "bagit-validation-error", 0L)))
   }
 
+  /** `body`'s result and the jobs and stages it started. */
+  private def counted[T](body: => T): (T, Int, Int) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.graftbridge.drainListeners
+    val jobs, stages = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+    }
+    drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { val x = body; drainListeners(spark); (x, jobs.get, stages.get) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("runFull builds one taskConf broadcast for its scan, entries and bundles") {
     val dir = Files.createTempDirectory("bagsconf")
     val out = Files.createTempDirectory("sipsconf")
     makeBags(dir)
     def nextId(): Long = { val b = spark.sparkContext.broadcast(0); b.destroy(); b.id }
     val before = nextId()
-    TrePipeline.runFull(spark, dir.toString + "/*.tar.gz", out.toString)
-    // building the result runs no job, so every id taken in between is a taskConf
-    assert(nextId() - before - 1 == 1)
+    val (_, _, stages) = counted(TrePipeline.runFull(spark, dir.toString + "/*.tar.gz", out.toString))
+    // every id taken in between is a taskConf or a submitted stage's task binary
+    assert(nextId() - before - 1 - stages == 1)
+  }
+
+  test("runFull reads each archive in one job, and reading its results reads none") {
+    val dir = Files.createTempDirectory("bagsonejob")
+    val out = Files.createTempDirectory("sipsonejob")
+    makeBags(dir)
+    val (r, jobs, _) = counted(TrePipeline.runFull(spark, dir.toString + "/*.tar.gz", out.toString))
+    assert(jobs == 1)
+    // with the archives gone, every result still reads back whole
+    Files.list(dir).toArray.foreach(p => Files.delete(p.asInstanceOf[java.nio.file.Path]))
+    assert(r.validation.events.select($"bagId", $"event_name").as[(String, String)]
+      .collect().toSeq.sorted ==
+      Seq(("TDR-2022-BAD1", "bagit-validation-error"), ("TDR-2022-OK1", "bagit-validated")))
+    assert(r.validation.verdicts.select($"bagId", $"ok").as[(String, Boolean)]
+      .collect().toSeq.sorted == Seq(("TDR-2022-BAD1", false), ("TDR-2022-OK1", true)))
+    assert(r.outputMessages.select($"bagId").as[String].collect().toSeq == Seq("TDR-2022-OK1"))
+    assert(r.bundles.select($"bagId").as[String].collect().toSeq == Seq("TDR-2022-OK1"))
+  }
+
+  test("runFull leaves nothing persisted once its results are read") {
+    val dir = Files.createTempDirectory("bagspersist")
+    val out = Files.createTempDirectory("sipspersist")
+    makeBags(dir)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val r = TrePipeline.runFull(spark, dir.toString + "/*.tar.gz", out.toString)
+    assert(r.validation.events.collect().length == 2)
+    assert(r.outputMessages.collect().length == 1)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("metadata.json in each bundle is the to_json rendering of its struct") {
+    import graft.core.archive.Tar
+    val dir = Files.createTempDirectory("bagsmeta")
+    val out = Files.createTempDirectory("sipsmeta")
+    // `"` and `\` in the reference and the doc name; a doc named
+    // "invalid…" takes the parser-error path
+    val bags = Seq("TDR-q\"b\\s" -> "data/a\"b\\c.docx",
+      "TDR-err\"\\" -> "data/invalid\"x\\y.docx")
+    bags.foreach { case (ref, doc) =>
+      writeTarGz(dir, s"$ref.tar.gz", Seq(
+        s"./$ref/bagit.txt" -> "BagIt-Version: 0.97",
+        s"./$ref/manifest-sha256.txt" -> (sha("DOC") + s"  $doc"),
+        s"./$ref/$doc" -> "DOC"))
+    }
+    val r = TrePipeline.runFull(spark, dir.toString + "/*.tar.gz", out.toString)
+    val rendered = r.editorial.select($"bagId", $"tre_metadata", to_json(struct(
+      struct(lit("TRE").as("name"), lit("transform").as("process"),
+        lit("judgment").as("type"), lit("dev").as("environment")).as("producer"),
+      struct(concat(lit("TRE-"), $"bagId").as("reference"), lit("0.1.0").as("dev-tre-version"),
+        $"po.xml".as("xml"), $"po.log".as("log"),
+        $"po.error_messages".as("error-messages")).as("parameters"))))
+      .as[(String, String, String)].collect().toSeq.sortBy(_._1)
+    assert(rendered.map(_._1) == bags.map(_._1).sorted)
+    val paths = r.bundles.select($"bagId", $"path").as[(String, String)].collect().toMap
+    rendered.foreach { case (bag, meta, json) =>
+      assert(meta == json, bag)
+      val p = new org.apache.hadoop.fs.Path(paths(bag))
+      val written = Tar.entriesFromStream(p.getName,
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p))
+        .find(_.name == s"$bag/0/metadata.json").get.bytes
+      assert(new String(written, "UTF-8") == json, bag)
+    }
+    // the ok path carries the parser's xml; the error path leaves it out
+    // and carries the parser's error message
+    val byBag = rendered.map(t => t._1 -> t._3).toMap
+    assert(byBag("TDR-q\"b\\s").contains("\"xml\":\"TDR-q\\\"b\\\\s.xml\""))
+    assert(!byBag("TDR-err\"\\").contains("\"xml\""))
+    assert(byBag("TDR-err\"\\").contains("Unable to parse document"))
+  }
+
+  test("runWithRetries routes a re-delivery duplicate without reading its archive") {
+    val dir = Files.createTempDirectory("redeliver")
+    val state = Files.createTempDirectory("redeliverstate")
+    val glob = dir.toString + "/*.tar.gz"
+    writeTarGz(dir, "TDR-2022-AGAIN.tar.gz", Seq(
+      "./TDR-2022-AGAIN/bagit.txt" -> "BagIt-Version: 0.97",
+      "./TDR-2022-AGAIN/manifest-sha256.txt" -> (sha("DOC") + "  data/doc.docx"),
+      "./TDR-2022-AGAIN/data/doc.docx" -> "DOC"))
+    def routes() = TrePipeline.runWithRetries(spark, glob, state.toString)
+      .select($"attempt", $"route").as[(Int, String)].collect().toSeq
+    assert(routes() == Seq((0, "ok")))
+    // the archive is no gzip stream any more: decoding it would throw
+    Files.write(dir.resolve("TDR-2022-AGAIN.tar.gz"), "not a gzip stream".getBytes)
+    assert(routes() == Seq((0, "duplicate")))
   }
 
   test("runWithRetries drives a bag with an empty archive to the retry limit") {
