@@ -10,12 +10,12 @@ import org.apache.spark.sql.SparkSession
   *
   * It also binds `file:` to the fork-free local file system for both the
   * `FileSystem` and the `FileContext` API (`graft.core.io.LocalFs`), so
-  * bundles, retry state, parquet output, streaming offsets/commits and
-  * state-store deltas fork no `chmod`/`readlink` per file. The binding
-  * reaches everything that builds its Hadoop conf from the session. It
-  * does not reach a `FileSystem.get` that finds a stock instance already
-  * cached in the JVM: that cache is keyed by scheme, authority and user,
-  * not by conf (`FileSystem.newInstance` bypasses it).
+  * bundles, retry state, parquet output and streaming offsets/commits
+  * fork no `chmod`/`readlink` per file. The binding reaches everything
+  * that builds its Hadoop conf from the session. It does not reach a
+  * `FileSystem.get` that finds a stock instance already cached in the
+  * JVM: that cache is keyed by scheme, authority and user, not by conf
+  * (`FileSystem.newInstance` bypasses it).
   */
 object Sessions {
 
@@ -41,42 +41,6 @@ object Sessions {
   def local(cores: Int): SparkSession = {
     val spark = builder(s"local[$cores]", cores).getOrCreate()
     GraftExtensions.register(spark)
-    spark
-  }
-
-  /** Fully-qualified class of Spark's bundled RocksDB state store provider
-    * (rocksdbjni ships in Spark's jars — no extra dependency).
-    */
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Switch streaming state to the RocksDB provider for queries started
-    * AFTER this call (the provider is read from the session conf at query
-    * start; running queries keep the store they started with).
-    *
-    * Why this exists: the default HDFSBackedStateStoreProvider keeps every
-    * key's state as deserialized JVM objects on the executor heap — at
-    * 100 TB corpus cardinality (hundreds of millions of live sessionize /
-    * retry / trending keys per partition group) that's an OOM, not a
-    * tuning problem. RocksDB keeps state off-heap/on-disk with block-cache
-    * reads, so per-executor state is bounded by disk, not heap, and
-    * changelog checkpointing uploads per-batch deltas instead of
-    * re-snapshotting the full store (`Trending`/`Sessionize`/
-    * `EventStream.retryTracker` state survives key-cardinality growth
-    * without executor sizing changes).
-    *
-    * All `mapGroupsWithState`/`dropDuplicates*` legs in `graft.streaming`
-    * are provider-agnostic (state is Tungsten-row encoded either way);
-    * RocksDbStateSpec pins a planted hot-key + wide-cardinality run on
-    * this provider and asserts the rocksdb metrics fired.
-    * Kept: the state-store switch for long-running streams; RocksDbStateSpec
-    * pins it.
-    */
-  def useRocksDbState(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    // per-batch delta uploads instead of full-store snapshots at commit
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     spark
   }
 }

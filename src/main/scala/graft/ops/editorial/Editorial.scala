@@ -222,19 +222,4 @@ object Editorial {
       s""""consignment-type":${quote(consignmentType)},"number-of-retries":$retries},""" +
       s""""tar-gz":{"bucket":${quote(bucket)},"key":${quote(tarGzKey)},""" +
       s""""items":${quote(itemsJson)}}}"""
-
-  /** Retry validation (RetryHandler, tre_editorial_integration.py:472-542):
-    * the incoming retry number must be exactly lastRetry+1; first runs must
-    * find no prior output folder. Pure column logic over a catalog listing.
-    * Kept: the column form of the RetryHandler check over a listing;
-    * `RetryLoop.handleRetry` runs it per consignment.
-    */
-  def retryErrors(incomingRetries: Column, lastRetry: Column): Column =
-    array_compact(array(
-      when(incomingRetries.isNull, lit("missing number-of-retries")),
-      when(lastRetry.isNull && incomingRetries =!= 0,
-        concat(lit("no prior run found but number-of-retries="), incomingRetries)),
-      when(lastRetry.isNotNull && incomingRetries =!= lastRetry + 1,
-        concat(lit("expected number-of-retries="), lastRetry + 1,
-          lit(", got "), incomingRetries))))
 }

@@ -86,6 +86,12 @@ object RetryLoop {
     * retry count, save it under the new folder. Returns the saved path and
     * the new message, or the reference's error text (a missing saved
     * message included).
+    *
+    * The new folder is published whole, as an S3 put is atomic
+    * (object_lib.py:54-85): the message is written into a hidden,
+    * non-numeric sibling dir and that dir is renamed to the folder number.
+    * A write or rename that fails raises and leaves no folder behind, so a
+    * re-delivery of the same retry finds the same last folder.
     */
   def handleRetry(conf: Configuration, stateRoot: String, consignmentType: String,
                   reference: String, incoming: Int): Either[String, (String, String)] = {
@@ -105,9 +111,14 @@ object RetryLoop {
               val prior = Storage.readString(fs, new Path(edRoot, s"$last/output-message.json"))
               prior.map { msg =>
                 val bumped = bumpRetries(msg, expected)
-                val saved = new Path(edRoot, s"$expected/output-message.json")
-                Storage.writeString(fs, saved, bumped, overwrite = true)
-                (saved.toString, bumped)
+                val folder = new Path(edRoot, expected.toString)
+                val staged = new Path(edRoot, s".$expected.${UUID.randomUUID}")
+                try {
+                  Storage.writeString(fs, new Path(staged, "output-message.json"), bumped,
+                    overwrite = false)
+                  Storage.rename(fs, staged, folder)
+                } catch { case e: IOException => fs.delete(staged, true); throw e }
+                (new Path(folder, "output-message.json").toString, bumped)
               }
             }
         }

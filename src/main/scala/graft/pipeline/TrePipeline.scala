@@ -22,6 +22,8 @@ import org.apache.spark.util.SerializableConfiguration
   *   scan(tar) → checksum verify (J3) + count reconciliation (A1) +
   *   per-bag verdict with error channel → provenance-chained result event
   *
+  * These are the validation stages (§3.1 steps 3–4), which `runFull`
+  * returns as its `validation` field.
   * Every stage result is exposed so tests/operators can inspect the
   * "execution history" (the reference's per-step inputs/outputs,
   * tre_module_test consignment_tester.py:147-259); `entries` re-reads the
@@ -63,22 +65,7 @@ object TrePipeline {
 
   /** Made once: deriving a product encoder takes a reflection pass. */
   private val attemptEncoder = Encoders.product[RetryAttempt]
-  private val checkEncoder = Encoders.product[BagCheck]
   private val runEncoder = Encoders.product[BagRun]
-
-  /** Run validation over a directory of `<reference>.tar.gz` bags: one
-    * plain job checks every bag in the task that reads its archive.
-    * Kept: the validation-only entry (§3.1 steps 3–4) the stream specs drive.
-    */
-  def run(spark: SparkSession, bagsGlob: String,
-          environment: String = "dev"): PipelineResult = {
-    val conf = Storage.taskConf(spark)
-    val paths = Storage.listFiles(spark, bagsGlob)
-    val checks = Tar.mapArchives(spark, paths, conf)(
-      (name, entries) => BagitValidate.checkBag(bagId(name), entries)._1).collect()
-    validation(spark, paths, conf, spark.createDataset(checks.toSeq)(checkEncoder).toDF(),
-      environment)
-  }
 
   /** The validation stages as projections of `bags`, the local `BagCheck`
     * rows of `paths`.

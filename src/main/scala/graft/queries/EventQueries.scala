@@ -107,8 +107,6 @@ object EventQueries {
         |  CAST(sum(CAST(floor(value*100 + 0.5) AS BIGINT)) AS BIGINT) AS value_c
         |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin),
 
-    // ── sessionization: 30-min inactivity gap (gaps-and-islands; the
-    //    streaming form is session_window/flatMapGroupsWithState) ──
     // ── rate-limit audit: events beyond N per (user, day) flagged in
     //    arrival order (ts, event_id total order) — the abuse/quota
     //    scan; windows stay at the (user, day) grain ──
@@ -160,6 +158,9 @@ object EventQueries {
         |FROM s WHERE prev IS NOT NULL
         |GROUP BY 1, 2 ORDER BY prev, curr""".stripMargin),
 
+    // ── sessionization: 30-min inactivity gap as gaps-and-islands — a
+    //    lag() gap flag and its running sum per user over the whole
+    //    history, one row per (user, session) ──
     "ev_sessionize" -> QueryDef(
       (spark, dir) => {
         val byUser = Window.partitionBy(col("user_id"))
@@ -271,11 +272,11 @@ object EventQueries {
     //    interval; count the events inside each): bucketized to an
     //    equi-join on hour buckets + exact post-filter — the naive plan
     //    is a BroadcastNestedLoopJoin over the range predicate ──
-    // ── batch attribution (the streaming.Attribution.touchJoin semantics
-    //    under the hash gate): views within the hour before each purchase,
-    //    per user. Scale plan: equi-join ON THE USER KEY (shuffle by user,
-    //    co-partitioned with every other user-grain stage) + exact time
-    //    post-filter; gaps stay integer epoch-ns ──
+    // ── attribution under the hash gate: views within the hour before
+    //    each purchase, per user (inclusive horizon; one view may touch
+    //    several purchases). Scale plan: equi-join ON THE USER KEY
+    //    (shuffle by user, co-partitioned with every other user-grain
+    //    stage) + exact time post-filter; gaps stay integer epoch-ns ──
     "ev_attribution" -> QueryDef(
       (spark, dir) => {
         val ev = Tables.events(spark, dir)
@@ -539,7 +540,7 @@ object EventQueries {
         |SELECT sp.h, coalesce(c.cnt, 0) AS cnt, c.cnt IS NULL AS filled
         |FROM sp LEFT JOIN c ON sp.h = c.h ORDER BY sp.h""".stripMargin),
 
-    // ── batch EWMA trend (twin of streaming.Trending's decayed counts):
+    // ── EWMA trend over hourly event counts, decayed per tick:
     //    ewma_t = Σ_{0 ≤ t−i ≤ 40} cnt_i >> (t−i) — power-of-two decay as
     //    integer shifts, windowed so each tick reads ≤ 41 neighbors (a
     //    bounded tick-grain range join, never the raw events twice) ──

@@ -36,6 +36,8 @@ import org.apache.spark.sql.types._
   * fraction) with ANY standing doc or smaller-id batch doc reaches the
   * threshold; `dup_of` reports the smallest matching id. Only
   * non-duplicates join the store.
+  * Kept: SURVEY §2.11's streaming corpus ingest; no query or pipeline
+  * ingests a stream of documents, CorpusIngestSpec drives it.
   */
 object CorpusIngest {
 

@@ -56,4 +56,21 @@ class SchemaEvolutionSpec extends SparkSpec {
       m.toLowerCase.contains("merge") || m.toLowerCase.contains("incompatible")),
       s"expected a merge-failure error, got: ${messages(e)}")
   }
+
+  test("ORC / CSV / JSON round-trip the same rows as parquet") {
+    val df = (0 until 500).map(i => (i.toLong, s"v$i", i * 1.5)).toDF("id", "s", "x")
+    val base = Files.createTempDirectory("fmt").toString
+    df.write.orc(s"$base/orc")
+    df.write.option("header", "true").csv(s"$base/csv")
+    df.write.json(s"$base/json")
+    val orc = spark.read.orc(s"$base/orc")
+    val csv = spark.read.option("header", "true")
+      .schema("id LONG, s STRING, x DOUBLE").csv(s"$base/csv")
+    val json = spark.read.schema("id LONG, s STRING, x DOUBLE").json(s"$base/json")
+    val want = df.orderBy($"id").collect().toSeq
+    Seq("orc" -> orc, "csv" -> csv, "json" -> json).foreach { case (n, got) =>
+      assert(got.select($"id", $"s", $"x").orderBy($"id").collect().toSeq == want,
+        s"$n round-trip diverged")
+    }
+  }
 }

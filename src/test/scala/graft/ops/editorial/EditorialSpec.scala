@@ -120,15 +120,6 @@ class EditorialSpec extends SparkSpec {
     }
   }
 
-  test("retryErrors: strict last+1 sequence (RetryHandler)") {
-    val df = Seq((0, null.asInstanceOf[Integer]), (1, Integer.valueOf(0)),
-      (3, Integer.valueOf(1)), (2, null.asInstanceOf[Integer]))
-      .toDF("incoming", "last")
-    val got = df.select(size(Editorial.retryErrors($"incoming", $"last")))
-      .as[Int].collect()
-    assert(got.toSeq == Seq(0, 0, 1, 1))
-  }
-
   test("parser stub honours the parser-outputs contract, error path included") {
     val invalid = ctxBlock.replace("test.docx", "invalid.docx")
     val located = Editorial.locateBlocks(

@@ -216,6 +216,30 @@ class RetryLoopSpec extends SparkSpec {
     }
   }
 
+  test("a retry folder whose rename-in fails raises, and the same retry then succeeds") {
+    import graft.core.io.FaultyFs
+    FaultyFs.bind(spark)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val seed = """{"editorial-output":{"consignment-reference":"TDR-X","number-of-retries":0}}"""
+    Seq(FaultyFs.Throw, FaultyFs.ReturnFalse).foreach { mode =>
+      val state = Files.createTempDirectory("retryfolderfault").toString
+      RetryLoop.seedState(conf, state, "judgment", "TDR-X", seed)
+      val edRoot = RetryLoop.messagePath(state, "judgment", "TDR-X", 0, 0).getParent.getParent
+      val (failure, steps) = FaultyFs.armed(edRoot.toString, 1, mode)(
+        RetryLoop.handleRetry(conf, FaultyFs.uri(state), "judgment", "TDR-X", 1))
+      assert(failure.nonEmpty, s"$mode: handleRetry reported success after a failed rename")
+      assert(steps >= 1, s"$mode: the retry folder was not renamed in")
+      // neither folder 1 nor its stage is left beside the seed
+      val fs = edRoot.getFileSystem(conf)
+      assert(fs.listStatus(edRoot).map(_.getPath.getName).toSeq == Seq("0"), s"$mode")
+      val p1 = RetryLoop.messagePath(state, "judgment", "TDR-X", 0, 1)
+      val again = RetryLoop.handleRetry(conf, state, "judgment", "TDR-X", 1)
+      assert(again.map(_._1) == Right(p1.toString), s"$mode: $again")
+      assert(again.toOption.get._2.contains(""""number-of-retries":1"""), s"$mode")
+      assert(fs.exists(p1), s"$mode")
+    }
+  }
+
   test("a bag whose saved state vanished takes the error route and stops") {
     val dir = Files.createTempDirectory("retrylost")
     val state = Files.createTempDirectory("retryloststate")

@@ -119,7 +119,8 @@ class TrePipelineSpec extends SparkSpec {
   test("integrated pipeline: N bags in one job, per-bag verdicts + provenance events") {
     val dir = Files.createTempDirectory("bags")
     makeBags(dir)
-    val r = TrePipeline.run(spark, dir.toString + "/*.tar.gz")
+    val r = TrePipeline.runFull(spark, dir.toString + "/*.tar.gz",
+      Files.createTempDirectory("sips").toString).validation
 
     assert(r.entries.count() == 8)
 
@@ -189,7 +190,8 @@ class TrePipelineSpec extends SparkSpec {
     val dir = Files.createTempDirectory("bagsempty")
     makeBags(dir)
     writeTarGz(dir, "TDR-2022-EMPTY.tar.gz", Seq.empty)
-    val r = TrePipeline.run(spark, dir.toString + "/*.tar.gz")
+    val r = TrePipeline.runFull(spark, dir.toString + "/*.tar.gz",
+      Files.createTempDirectory("sipsempty").toString).validation
     val ev = r.events.filter($"bagId" === "TDR-2022-EMPTY")
       .select($"ok", $"errors", $"event_name", $"n_extracted")
       .as[(Boolean, Seq[String], String, Long)].collect().toSeq

@@ -21,7 +21,7 @@ class EventStreamSpec extends SparkSpec {
 
 
   /** AvailableNow queries normally self-terminate; if the timeout expires
-    * first (or a state-timeout keeps scheduling batches), STOP the query —
+    * first, STOP the query —
     * the suites share one SparkContext, so a leaked query's microbatches
     * keep firing under every later suite (r13: the driver's full-suite run
     * died with a streaming AnalysisException none of the builder's runs
@@ -69,50 +69,6 @@ class EventStreamSpec extends SparkSpec {
     val r = EventStream.withRetryRoute(df).select($"retries", $"route").head()
     assert(r.getInt(0) == 0)
     assert(r.getString(1) == "ok")
-  }
-
-  test("retryTracker accumulates attempts across micro-batches (mapGroupsWithState)") {
-    val dir = Files.createTempDirectory("retryq")
-    // 3 attempts for TDR-2022-AA1 arriving over three files (one per batch
-    // via maxFilesPerTrigger=10? all ≤10 files land in one batch — so use
-    // distinct UUIDs to count within-batch too)
-    Files.write(dir.resolve("b1.jsonl"), java.util.Arrays.asList(event(u1)))
-    Files.write(dir.resolve("b2.jsonl"), java.util.Arrays.asList(event(u2)))
-    Files.write(dir.resolve("b3.jsonl"), java.util.Arrays.asList(event(u3)))
-    val tracked = EventStream.retryTracker(
-      EventStream.decoded(EventStream.readRaw(spark, dir.toString)), maxRetries = 3)
-    val q = tracked.writeStream.outputMode("update")
-      .format("memory").queryName("retries")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    awaitThenStop(q)
-    val last = spark.sql(
-      "select attempts, decision from retries order by attempts desc limit 1").head()
-    assert(last.getInt(0) == 3)
-    assert(last.getString(1) == "fail")
-  }
-
-  test("retryTracker state expires via processing-time timeout (bounded state)") {
-    val dir = Files.createTempDirectory("retrytimeout")
-    // ref A appears only in the first micro-batch; refs B then keep later
-    // batches alive so A's 1 ms timeout fires and its state is removed
-    Files.write(dir.resolve("b1.jsonl"), java.util.Arrays.asList(event(u1, ref = "TDR-A")))
-    Files.write(dir.resolve("b2.jsonl"), java.util.Arrays.asList(event(u2, ref = "TDR-B")))
-    Files.write(dir.resolve("b3.jsonl"), java.util.Arrays.asList(event(u3, ref = "TDR-B")))
-    val tracked = EventStream.retryTracker(
-      EventStream.decoded(EventStream.readRaw(spark, dir.toString, maxFilesPerTrigger = 1)),
-      maxRetries = 3, stateTimeoutMs = Some(1L))
-    val q = tracked.writeStream.outputMode("update")
-      .format("memory").queryName("retries_timeout")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    awaitThenStop(q)
-    val rows = spark.sql(
-      "select reference, attempts, decision from retries_timeout").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    // A was tracked, then expired with its last-known attempt count
-    assert(rows.contains(("TDR-A", 1, "retry")))
-    assert(rows.contains(("TDR-A", 1, "expired")))
-    // B's state survived (data kept arriving within the timeout)
-    assert(rows.exists(r => r._1 == "TDR-B" && r._3 == "retry"))
   }
 
   /** events.ts is a nanos long under old testdata, TIMESTAMP_NTZ under

@@ -58,7 +58,8 @@ class StreamPipelineSpec extends SparkSpec {
             "$.reference").as("ref"))
           .as[String].collect().toSet
         if (refs.nonEmpty) {
-          val r = TrePipeline.run(spark, bags.toString + "/*.tar.gz")
+          val r = TrePipeline.runFull(spark, bags.toString + "/*.tar.gz",
+            Files.createTempDirectory("streamsips").toString).validation
           results = results ++ r.events
             .filter($"bagId".isin(refs.toSeq: _*))
             .select($"bagId", $"ok", $"event_name")

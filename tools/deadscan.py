@@ -13,8 +13,10 @@ members, `main` and objects with a `main` are skipped.
 
 A name the benchmark harness calls is marked `reached`; one whose
 scaladoc, or its top-level owner's, carries a line starting `Kept:` (the
-reason it stays) is marked `kept`. The exit code is 1 when any other
-candidate is listed.
+reason it stays) is marked `kept`. Every `Kept:` reason in src/main that
+names a `...Spec` neither a file nor a class of src/test is listed as
+`stale`. The exit code is 1 when any other candidate or a stale reason is
+listed.
 """
 import collections, os, re, sys
 
@@ -64,9 +66,19 @@ for name, ss in sites.items():
                             tokens[g][name] > sum(x[0] == g for x in ss)))
                 for g, s in main.items()):
             found.append((f, line, name, where(name, own, True) + ",dup", kept))
+specs = {os.path.basename(f)[:-len(".scala")] for f in test} | {   # a spec file or class
+    n for s in test.values() for n in re.findall(r"\b(?:class|object|trait)\s+(\w+Spec)\b", s)}
+stale = []
+for f, src in main.items():
+    for m in re.finditer(r"/\*\*.*?\*/", src, flags=re.S):
+        k = re.search(r"^\s*(?:/\*\*|\*)\s*Kept:.*", m.group(0), flags=re.M | re.S)
+        for name in sorted(set(re.findall(r"\b\w+Spec\b", k.group(0)) if k else ()) - specs):
+            stale.append((f, src.count("\n", 0, m.start() + k.start()) + 1, name))
 state = lambda tag, kept: "kept" if kept else "reached" if "perfbench" in tag else "CANDIDATE"
 for f, line, name, tag, kept in sorted(found):
     print(f"{f}:{line}\t{name}\t{tag}\t{state(tag, kept)}")
+for f, line, name in stale:
+    print(f"{f}:{line}\t{name}\tstale\tKept: names a spec src/test lacks")
 open_ = sum(state(t, k) == "CANDIDATE" for *_, t, k in found)
-print(f"{len(found)} listed, {open_} unclassified", file=sys.stderr)
-sys.exit(1 if open_ else 0)
+print(f"{len(found)} listed, {open_} unclassified, {len(stale)} stale reasons", file=sys.stderr)
+sys.exit(1 if open_ or stale else 0)
